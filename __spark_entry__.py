@@ -31,22 +31,24 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # The driver oracle-checks the first 50 registry entries per round.
-# Round-14 rotation (executes the plan the r13 entry comment ordered,
-# re-derived from the CORRECTNESS_r* history this round): the 32 rows
-# that have NEVER had a driver verdict lead — the round-13 additions
-# x202–x233 (constraint lifecycle, stream rate feed, Kaplan-Meier,
-# mutual information, Zipf slope, RFM, cohort retention, key skew,
-# McNemar, Benford, Theil, streaks, funnel latency, CUPED, runs test,
-# vacuum lifecycle, replace_where lifecycle, item similarity, ANOVA,
-# forecast backtest, single-source risk, interarrival dispersion,
-# jackknife, Wilcoxon signed-rank, Holt linear, Neyman allocation,
-# JS divergence, info gain, Z-order lifecycle, Spearman rank, DOW
-# seasonality, capture-recapture) — then the oldest 18 of the 46
-# r9-stale rows in registry order: d35–d49 (15) plus x02/x03/x04.
-# After this round no driver verdict is older than round 9 and only
-# 28 r9-stale rows remain (x05–x10, x46–x56 residue et al.); the
-# round-15 window should take those 28 plus the oldest r10 rows.
+# Current rotation: the most recently changed code leads — the snapshot-
+# lifecycle queries (MERGE/DELETE/UPDATE feeds, schema-evolution merge,
+# clone/restore, vacuum, replace_where, Z-order), whose reads and
+# OPTIMIZE now take schema and size from the manifest, and the round-14
+# rewrites the driver never re-verified (x76, x103, x199; x199 also
+# gained an empty-input guard). Then the rest of the round-13 additions
+# x202–x233 that never had a driver verdict, then the oldest round-9
+# verdicts in registry order (d35–d44). The r9 rows this window drops
+# (d45–d49, x02–x04) and the ~28 r9-stale rows behind them are next.
 _CHECK_FIRST = [
+    # snapshot lifecycle (reads/OPTIMIZE answer from the manifest)
+    "x151_merge_feed_view", "x162_delete_feed_view",
+    "x167_schema_evolution_merge", "x185_lifecycle_clone_restore",
+    "x200_update_feed_view", "x217_vacuum_lifecycle",
+    "x218_replace_where_lifecycle", "x230_zorder_lifecycle",
+    # round-14 rewrites never re-verified by the driver
+    "x76_quality_gate_corpus", "x103_zorder_skipping",
+    "x199_fd_histogram",
     # never driver-checked (round-13 additions)
     "x202_constraint_lifecycle", "x203_stream_rate_feed",
     "x204_kaplan_meier", "x205_mutual_information",
@@ -55,23 +57,19 @@ _CHECK_FIRST = [
     "x210_mcnemar_paired", "x211_benford_digits",
     "x212_theil_index", "x213_activity_streaks",
     "x214_funnel_latency", "x215_cuped_adjustment",
-    "x216_runs_test", "x217_vacuum_lifecycle",
-    "x218_replace_where_lifecycle", "x219_item_similarity",
+    "x216_runs_test", "x219_item_similarity",
     "x220_anova_f", "x221_forecast_backtest",
     "x222_single_source_risk", "x223_interarrival_dispersion",
     "x224_jackknife_loo", "x225_wilcoxon_signed_rank",
     "x226_holt_linear", "x227_neyman_allocation",
     "x228_js_divergence", "x229_info_gain",
-    "x230_zorder_lifecycle", "x231_spearman_rank_corr",
+    "x231_spearman_rank_corr",
     "x232_dow_seasonality", "x233_capture_recapture",
-    # oldest driver verdicts (round 9) — first 18 in registry order
+    # oldest driver verdicts (round 9) — first 10 in registry order
     "d35_approx_distinct", "d36_exists_subquery",
     "d37_scalar_subquery", "d38_ntile_percent_rank",
     "d39_array_hof", "d40_except_all", "d41_moment_stats",
     "d42_snapshot_diff", "d43_quantiles", "d44_null_semantics",
-    "d45_share_of_total", "d46_try_cast", "d47_incremental_agg",
-    "d48_apply_changes", "d49_revenue_rollup",
-    "x02_quality_features", "x03_lang_id", "x04_exact_dedup",
 ]
 
 

@@ -186,8 +186,18 @@ def disc_percentiles_by_histogram(
     the same IEEE product. Distributed end to end — the only ordered
     window runs over distinct VALUES, never rows. Returns driver
     scalars in ``qs`` order (the k-means convention: corpus-level
-    thresholds are 1-row driver state)."""
+    thresholds are 1-row driver state).
+
+    ``qs`` must be a non-empty list of fractions with 0 < q <= 1
+    (percentile_disc's domain here: q = 0 has no ceil(q*n)-th row);
+    anything else raises ``ValueError`` before any Spark work."""
     from pyspark.sql import Window
+
+    if not qs:
+        raise ValueError("disc percentiles need a non-empty qs list")
+    bad = [q for q in qs if not 0 < q <= 1]
+    if bad:
+        raise ValueError(f"disc percentile fractions must satisfy 0 < q <= 1; got {bad}")
 
     vc = df.where(F.col(col).isNotNull()).groupBy(F.col(col).alias("v")).agg(
         F.count(F.lit(1)).alias("c")

@@ -15968,6 +15968,12 @@ def x199(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c").cast("long").alias("n"),
         F.min("cents").alias("cmin"),
     ).collect()[0]
+    if _t["n"] is None:
+        # empty orders: no quartiles, no bins — the empty result DuckDB
+        # returns too, answered from the totals action already taken
+        return spark.createDataFrame(
+            [], "bin BIGINT, lo_cents BIGINT, bin_width BIGINT, n_rows BIGINT"
+        )
     _n, _cmin = int(_t["n"]), int(_t["cmin"])
     _q = cum.agg(
         F.min(

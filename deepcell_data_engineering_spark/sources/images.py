@@ -147,8 +147,13 @@ def write_npz_units(
 
     Blank-label routing mirrors io_utils.py:80-111: units whose y sums to
     0 are 'skip'ped, 'include'd normally, or written under 'separate/'.
-    Runs distributed via foreachPartition-style mapInPandas (each task
-    writes its own files — on a cluster ``out_dir`` is shared storage).
+    Runs distributed as a grouped ``applyInPandas`` on the unit key: each
+    call receives ALL of one unit's frames and writes its NPZ once (each
+    task writes its own files — on a cluster ``out_dir`` is shared
+    storage). Grouping, not ``repartition`` + ``mapInPandas``, because
+    Arrow batches make no per-key guarantee: a unit whose frames
+    straddle two batches would be written twice, the second file
+    overwriting the first with only the frames of its batch.
     Returns the manifest DataFrame (unit key -> path).
     """
     import os
@@ -166,41 +171,32 @@ def write_npz_units(
         ]
     )
 
-    def write_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        os.makedirs(out_dir, exist_ok=True)
+    def write_unit(grp: pd.DataFrame) -> pd.DataFrame:
+        grp = grp.sort_values("stack")
+        first = grp.iloc[0]
+        fov, crop, slc = first["fov"], int(first["crop"]), int(first["slice"])
+        h, w = int(first["height"]), int(first["width"])
+        nchan = len(first["channels"]) if first["channels"] is not None else 0
+        xs = (
+            np.stack([decode_x(r["X"], h, w, nchan) for _, r in grp.iterrows()])
+            if first["X"] is not None
+            else None
+        )
+        ys = np.stack([decode_y(r["y"], h, w) for _, r in grp.iterrows()])
+        blank = int(ys.sum() == 0)
         os.makedirs(os.path.join(out_dir, "separate"), exist_ok=True)
-        for pdf in batches:
-            out = []
-            for (fov, crop, slc), grp in pdf.groupby(["fov", "crop", "slice"]):
-                grp = grp.sort_values("stack")
-                h, w = int(grp.iloc[0]["height"]), int(grp.iloc[0]["width"])
-                nchan = len(grp.iloc[0]["channels"]) if grp.iloc[0]["channels"] is not None else 0
-                has_x = grp.iloc[0]["X"] is not None
-                xs = (
-                    np.stack([decode_x(r["X"], h, w, nchan) for _, r in grp.iterrows()])
-                    if has_x
-                    else None
-                )
-                ys = np.stack([decode_y(r["y"], h, w) for _, r in grp.iterrows()])
-                blank = int(ys.sum() == 0)
-                name = f"{fov}_crop_{int(crop)}_slice_{int(slc)}.npz"
-                if blank and blank_labels == "skip":
-                    out.append({"fov": fov, "crop": int(crop), "slice": int(slc),
-                                "path": None, "blank": blank})
-                    continue
-                sub = "separate" if blank and blank_labels == "separate" else ""
-                path = os.path.join(out_dir, sub, name)
-                with open(path, "wb") as fh:
-                    fh.write(encode_npz(xs, ys[..., None]))
-                out.append({"fov": fov, "crop": int(crop), "slice": int(slc),
-                            "path": path, "blank": blank})
-            yield pd.DataFrame(out, columns=[f.name for f in schema.fields])
+        path = None
+        if not (blank and blank_labels == "skip"):
+            sub = "separate" if blank and blank_labels == "separate" else ""
+            path = os.path.join(out_dir, sub, f"{fov}_crop_{crop}_slice_{slc}.npz")
+            with open(path, "wb") as fh:
+                fh.write(encode_npz(xs, ys[..., None]))
+        return pd.DataFrame(
+            [{"fov": fov, "crop": crop, "slice": slc, "path": path, "blank": blank}],
+            columns=[f.name for f in schema.fields],
+        )
 
-    # repartition by unit key so each unit's frames land in one task
-    return (
-        df.repartition("fov", "crop", "slice")
-        .mapInPandas(write_partition, schema=schema)
-    )
+    return df.groupBy("fov", "crop", "slice").applyInPandas(write_unit, schema=schema)
 
 
 def read_npz_units(

@@ -54,6 +54,23 @@ Log compaction: every ``_CHECKPOINT_INTERVAL`` commits a checkpoint
 file folds the batch-id dedup set, so exactly-once replay checks read
 O(interval) manifests instead of O(versions) — the Delta
 ``_last_checkpoint`` pattern.
+
+Manifest fields that answer metadata questions without a Spark job:
+- ``schema``: the table schema (the union across evolution, every
+  field nullable). Reads with ``merge_schema=True`` and the CRUD verbs'
+  basis scans use it in place of the footer-union pass.
+- ``uniform``: present (true) only when EVERY directory the version
+  references was written with exactly ``schema``, in the same field
+  order — derived from the frames the commit actually wrote, and kept
+  across commits only while the parent was uniform with the same
+  schema. Plain reads (``read_snapshot``, ``scan_snapshot`` and the
+  append/overwrite pieces of ``read_changes``) then pass ``schema``
+  instead of inferring it from a parquet footer. Rebased commits,
+  restore, clone, schema-evolving appends and logs written before the
+  marker existed leave it off, and their plain reads infer as before.
+- ``change_schema``: the written schema of a merge/delete/update/
+  replace_where change-set directory (``change_dir``); ``read_changes``
+  reads that piece with it.
 """
 
 from __future__ import annotations
@@ -475,6 +492,23 @@ def _stored_schema(manifest: dict):
         return None
 
 
+def _is_uniform(sch, dirs: list[str], fresh: dict | None, parent_m: dict) -> bool:
+    """Whether every directory in ``dirs`` provably holds exactly the
+    schema ``sch``: each fresh directory was written from a frame whose
+    (nullable-normalized) schema equals it field for field, in order,
+    and every other directory is carried from a ``uniform`` parent that
+    recorded the same schema. ``fresh=None`` (dirs re-referenced from
+    elsewhere) proves nothing."""
+    if fresh is None or any(_as_nullable(s) != sch for s in fresh.values()):
+        return False
+    carried = [d for d in dirs if d not in fresh]
+    return not carried or (
+        bool(parent_m.get("uniform"))
+        and _stored_schema(parent_m) == sch
+        and set(carried) <= set(parent_m["dirs"])
+    )
+
+
 def _snapshot_reader(spark: SparkSession, manifest: dict, merge_schema: bool):
     """Reader for a snapshot's directories. With ``merge_schema`` the
     manifest-recorded schema (when present) replaces the footer-union
@@ -482,12 +516,16 @@ def _snapshot_reader(spark: SparkSession, manifest: dict, merge_schema: bool):
     order = parent-then-evolved, everything nullable) with ZERO schema
     jobs; at 100 TB the footer-union read touches every file of the
     table per CRUD op, which this removes. Logs without a recorded
-    schema keep the footer-union read."""
+    schema keep the footer-union read. Without ``merge_schema`` the
+    recorded schema is passed only when the manifest is ``uniform``
+    (every directory was written with exactly it, so a footer read
+    would return the same schema); otherwise Spark infers it from a
+    footer as before."""
     reader = spark.read
+    sch = _stored_schema(manifest)
+    if sch is not None and (merge_schema or manifest.get("uniform")):
+        return reader.schema(sch)
     if merge_schema:
-        sch = _stored_schema(manifest)
-        if sch is not None:
-            return reader.schema(sch)
         return reader.option("mergeSchema", "true")
     return reader
 
@@ -698,6 +736,7 @@ def commit(
     _rebase: bool = False,
     _ts_us: int | None = None,
     _schema=None,
+    _written: dict | None = None,
 ) -> int:
     """Write ``df`` as a new table version and return its number.
 
@@ -796,6 +835,14 @@ def commit(
     the data dir list is the parent's, re-read per retry so a racing
     append's dirs are adopted, never dropped (the add/drop-constraint
     verbs ride this).
+
+    ``_written`` (internal; the rewrite verbs): ``{dir: schema}`` of
+    the frames the caller wrote into the fresh entries of ``_dirs``.
+    With it (or with ``df``, or on a metadata-only commit) the manifest
+    gets the ``uniform`` marker when every referenced directory holds
+    exactly the recorded schema — see the module docstring. Callers
+    passing ``_dirs`` without ``_written`` (restore, clone) never get
+    the marker.
     """
     if mode not in ("append", "overwrite", "replace"):
         raise ValueError(f"mode must be append|overwrite|replace, got {mode!r}")
@@ -923,34 +970,41 @@ def commit(
             df, table_path, list(stats_cols or [])
         )
 
+    # {dir: written frame schema} for this commit's fresh directories —
+    # the evidence the ``uniform`` marker derives from (None: the caller
+    # re-references dirs it did not write, e.g. restore/clone)
+    fresh = _written if _dirs is not None else (
+        {rel_dir: df.schema} if df is not None else {}
+    )
+
     for _ in range(_COMMIT_RETRIES):
         version = 0 if parent is None else parent + 1
-        if expected_parent is not _UNSET and parent != expected_parent:
+        parent_m = (
+            _load_manifest(table_path, parent, st) if parent is not None
+            else {}
+        )
+        rebased = expected_parent is not _UNSET and parent != expected_parent
+        if rebased:
             # head advanced past the rewrite's basis — rebase (logical
             # conflict resolution) or raise; only reached with _rebase
             pinned = list(_dirs) if _dirs is not None else [rel_dir]
-            rebased = _try_rebase(parent, pinned)
-            if rebased is None:
+            dirs = _try_rebase(parent, pinned)
+            if dirs is None:
                 raise _conflict(
                     parent,
                     "an interleaved commit rewrote/replaced data or "
                     "changed constraints — not rebaseable",
                 )
-            dirs = rebased
         elif _dirs is not None:
             # caller (merge_upsert) wrote and pinned its own dir set
             dirs = list(_dirs)
         elif df is None:
             # metadata-only commit: parent's dirs, re-read per retry
-            dirs = (
-                _load_manifest(table_path, parent, st)["dirs"]
-                if parent is not None
-                else []
-            )
+            dirs = list(parent_m.get("dirs", []))
         else:
             dirs = [rel_dir]
             if mode == "append" and parent is not None:
-                dirs = _load_manifest(table_path, parent, st)["dirs"] + dirs
+                dirs = parent_m["dirs"] + dirs
         manifest = {
             "version": version,
             "parent": parent,
@@ -965,17 +1019,11 @@ def commit(
         # adopts the winner's stamp as the floor. ``_ts_us`` is the
         # deterministic-test injection point — it too is floored, so an
         # injected stamp can never travel backwards.
-        parent_ts = 0
-        if parent is not None:
-            try:
-                parent_ts = _load_manifest(table_path, parent, st).get(
-                    "ts_us", 0
-                )
-            except ManifestMissingError:
-                parent_ts = 0
         now_us = _ts_us if _ts_us is not None else time.time_ns() // 1000
         manifest["ts_us"] = (
-            max(now_us, parent_ts + 1) if parent is not None else now_us
+            max(now_us, parent_m.get("ts_us", 0) + 1)
+            if parent is not None
+            else now_us
         )
         # carry data-skipping stats with the directories they describe:
         # dirs kept from the parent keep their ranges, this commit's
@@ -983,14 +1031,10 @@ def commit(
         # pass recomputed ranges for their rewritten dirs via
         # _dir_stats — a dir with no entry is "unprunable", never
         # "wrong".
-        stats: dict[str, dict] = {}
-        if parent is not None:
-            parent_stats = _load_manifest(table_path, parent, st).get(
-                "stats", {}
-            )
-            for d in dirs:
-                if d in parent_stats:
-                    stats[d] = parent_stats[d]
+        parent_stats = parent_m.get("stats", {})
+        stats: dict[str, dict] = {
+            d: parent_stats[d] for d in dirs if d in parent_stats
+        }
         if new_dir_stats:
             stats[rel_dir] = new_dir_stats
         if _dir_stats:
@@ -1008,11 +1052,7 @@ def commit(
             df.schema if df is not None else None
         )
         written = _as_nullable(written) if written is not None else None
-        parent_sch = None
-        if parent is not None:
-            parent_sch = _stored_schema(
-                _load_manifest(table_path, parent, st)
-            )
+        parent_sch = _stored_schema(parent_m) if parent is not None else None
         if df is not None and _dirs is None and mode in (
             "overwrite", "replace",
         ):
@@ -1029,16 +1069,12 @@ def commit(
             sch = _merge_schemas(parent_sch, written)
         if sch is not None:
             manifest["schema"] = sch.jsonValue()
+            if not rebased and _is_uniform(sch, dirs, fresh, parent_m):
+                manifest["uniform"] = True
         # constraints are table-level state: parent's set (re-read per
         # retry so a racer's additions carry) merged with this call's
         # adds, minus this call's drops
-        c = {}
-        if parent is not None:
-            c.update(
-                _load_manifest(table_path, parent, st).get(
-                    "constraints", {}
-                )
-            )
+        c = dict(parent_m.get("constraints", {}))
         if check_constraints:
             c.update(check_constraints)
         if _drop_constraints:
@@ -1426,7 +1462,6 @@ def merge_upsert(
         chg = source.withColumn("_change_type", F.lit("insert")).withColumn(
             "_change_subtype", F.lit("insert")
         )
-        chg_rel = _write_change_set(chg, table_path)
         return commit(
             spark,
             source,
@@ -1436,7 +1471,7 @@ def merge_upsert(
             expected_parent=None,
             store=st,
             _op="merge",
-            _extra_manifest={"change_dir": chg_rel},
+            _extra_manifest=_write_change_set(chg, table_path),
         )
 
     manifest = _load_manifest(table_path, basis, st)
@@ -1548,47 +1583,18 @@ def merge_upsert(
             .withColumn("_change_type", F.lit("delete"))
             .withColumn("_change_subtype", F.lit("delete"))
         )
-    tracked = _tracked_stat_cols(manifest)
-    # the change-set write, the survivors write and the source write
-    # are independent jobs over the same pins — overlap them (§2.6)
-    writes = [lambda: _write_change_set(chg, table_path)]
-    if touched:
-        # only when some parent directory actually contained a matched
-        # key — a pure-insert merge (no key matches; the common CDC
-        # upsert-stream case) must not publish an empty survivors dir
-        writes.append(
-            lambda: _write_data_dir(survivors, table_path, tracked)
-        )
-    # a pure-tombstone batch has no upsert rows — don't publish an
-    # empty source directory (the upsert count was observed on the pin)
-    _write_src = del_keys is None or (_m["n_upsert"] or 0) > 0
-    if _write_src:
-        writes.append(
-            lambda: _write_data_dir(source, table_path, tracked)
-        )
-    results = _overlap_writes(writes)
-    chg_rel = results[0]
-    new_rels: list[str] = []
-    dir_stats: dict[str, dict] = {}
-    for rel, ranges in results[1:]:
-        new_rels.append(rel)
-        dir_stats[rel] = ranges
-    kept = [d for d in parent_dirs if d not in touched]
-    dirs = kept + new_rels
-    return commit(
-        spark,
-        None,
-        table_path,
-        mode="overwrite",
-        batch_id=batch_id,
-        expected_parent=basis,
-        store=st,
-        _op="merge",
-        _dirs=dirs,
-        _rebase=True,
-        _extra_manifest={"change_dir": chg_rel},
-        _dir_stats=dir_stats,
-        _schema=source.schema,
+    # survivors only when some parent directory actually contained a
+    # matched key — a pure-insert merge (no key matches; the common CDC
+    # upsert-stream case) must not publish an empty survivors dir; and a
+    # pure-tombstone batch has no upsert rows, so no source directory
+    # (the upsert count was observed on the pin)
+    frames = [survivors] if touched else []
+    if del_keys is None or (_m["n_upsert"] or 0) > 0:
+        frames.append(source)
+    return _commit_rewrite(
+        spark, table_path, st, "merge", basis, batch_id, chg, frames,
+        [d for d in parent_dirs if d not in touched],
+        _tracked_stat_cols(manifest), source.schema,
     )
 
 
@@ -1688,38 +1694,14 @@ def delete_where(
         "_change_type", F.lit("delete")
     ).withColumn("_change_subtype", F.lit("delete"))
     # change set and survivors both derive from the SAME pinned
-    # evaluation — independent writes, overlapped (§2.6)
-    writes = [lambda: _write_change_set(chg, table_path)]
-    if touched:
-        survivors = flagged.where(~F.col(flag)).drop(_DIR_COL, flag)
-        writes.append(
-            lambda: _write_data_dir(
-                survivors, table_path, _tracked_stat_cols(manifest)
-            )
-        )
-    results = _overlap_writes(writes)
-    chg_rel = results[0]
-    kept = [d for d in parent_dirs if d not in touched]
-    dirs = list(kept)
-    dir_stats: dict[str, dict] = {}
-    if touched:
-        rel, ranges = results[1]
-        dir_stats[rel] = ranges
-        dirs.append(rel)
-    return commit(
-        spark,
-        None,
-        table_path,
-        mode="overwrite",
-        batch_id=batch_id,
-        expected_parent=basis,
-        store=st,
-        _op="delete",
-        _dirs=dirs,
-        _rebase=True,
-        _extra_manifest={"change_dir": chg_rel},
-        _dir_stats=dir_stats,
-        _schema=parent.drop(_DIR_COL).schema,
+    # evaluation
+    frames = (
+        [flagged.where(~F.col(flag)).drop(_DIR_COL, flag)] if touched else []
+    )
+    return _commit_rewrite(
+        spark, table_path, st, "delete", basis, batch_id, chg, frames,
+        [d for d in parent_dirs if d not in touched],
+        _tracked_stat_cols(manifest), parent.drop(_DIR_COL).schema,
     )
 
 
@@ -1737,9 +1719,11 @@ def update_where(
     is TRUE get each ``set_exprs`` column replaced by its expression
     (Column or SQL string, evaluated over the row's CURRENT values —
     ``{"cents": "cents + 500"}`` is the usual shape); FALSE or NULL
-    rows are untouched (SQL UPDATE semantics). Unknown SET columns
-    raise — UPDATE never evolves schema (use ``merge_upsert`` with
-    ``evolve_schema`` for that).
+    rows are untouched (SQL UPDATE semantics). Each result is cast to
+    its column's type (SQL store assignment: ``sh * 1.5`` on a SMALLINT
+    stays SMALLINT; under ANSI mode an overflow raises and nothing is
+    published). Unknown SET columns raise — UPDATE never evolves schema
+    (use ``merge_upsert`` with ``evolve_schema`` for that).
 
     Scale shape (the copy-on-write rule shared with merge/delete): one
     predicate scan finds the parent directories CONTAINING a matched
@@ -1812,11 +1796,17 @@ def update_where(
     # CHECK constraints apply to the rows this UPDATE writes; their
     # violation counts ride the pin job via observe (r13) instead of a
     # second scan of the pinned postimages.
+    # Each SET result is cast to its column's type (SQL store
+    # assignment; under ANSI mode an overflow raises): the rewritten
+    # directory must hold exactly the table schema the manifest records
+    # — an uncast ``sh * 1.5`` on a SMALLINT column would write a
+    # DECIMAL directory that a recorded-schema read then misreads.
     _cons = manifest.get("constraints", {})
     _cnames = list(_cons)
+    types = {f.name: f.dataType for f in parent.schema.fields}
     post = pre.select(
         *[
-            (sets[c] if c in sets else F.col(c)).alias(c)
+            (sets[c].cast(types[c]) if c in sets else F.col(c)).alias(c)
             for c in data_cols
         ]
     )
@@ -1838,26 +1828,63 @@ def update_where(
         )
     )
     # change set and rewritten data both derive from the SAME pinned
-    # pre/post evaluations — independent writes, overlapped (§2.6)
-    writes = [lambda: _write_change_set(chg, table_path)]
-    if touched:
-        survivors = flagged.where(~F.col(flag)).drop(_DIR_COL, flag)
-        writes.append(
-            lambda: _write_data_dir(
-                survivors.unionByName(post),
-                table_path,
-                _tracked_stat_cols(manifest),
-            )
-        )
-    results = _overlap_writes(writes)
-    chg_rel = results[0]
-    kept = [d for d in parent_dirs if d not in touched]
-    dirs = list(kept)
-    dir_stats: dict[str, dict] = {}
-    if touched:
-        rel, ranges = results[1]
-        dir_stats[rel] = ranges
-        dirs.append(rel)
+    # pre/post evaluations
+    frames = (
+        [flagged.where(~F.col(flag)).drop(_DIR_COL, flag).unionByName(post)]
+        if touched
+        else []
+    )
+    return _commit_rewrite(
+        spark, table_path, st, "update", basis, batch_id, chg, frames,
+        [d for d in parent_dirs if d not in touched],
+        _tracked_stat_cols(manifest), parent.drop(_DIR_COL).schema,
+    )
+
+
+def _write_change_set(chg: DataFrame, table_path: str) -> dict:
+    """Persist a commit's row-level change set under ``_changes/`` —
+    OUTSIDE the data root so vacuum's unreferenced-dir sweep never
+    confuses CDC files with table data (Delta keeps _change_data the
+    same way). Returns the manifest entries naming it: the
+    table-relative ``change_dir`` and its written ``change_schema``
+    (one frame, one write job — so ``read_changes`` can read it with
+    that schema instead of inferring it from a footer)."""
+    chg_dir = os.path.join(
+        table_path, _CHANGES_DIR, f"g{uuid.uuid4().hex[:12]}"
+    )
+    chg.write.parquet(chg_dir)
+    return {
+        "change_dir": os.path.relpath(chg_dir, table_path),
+        "change_schema": _as_nullable(chg.schema).jsonValue(),
+    }
+
+
+def _commit_rewrite(
+    spark: SparkSession,
+    table_path: str,
+    st: ManifestStore,
+    op: str,
+    basis: int,
+    batch_id: int | None,
+    chg: DataFrame,
+    frames: list[DataFrame],
+    kept: list[str],
+    tracked: list[str],
+    schema,
+) -> int:
+    """Shared tail of the copy-on-write verbs: write the change set and
+    each frame of ``frames`` to a fresh data directory — independent
+    jobs over already-materialized pins, so they overlap (§2.6) — then
+    publish one rewrite commit pinned to ``basis`` with the append-only
+    auto-rebase. The new dirs follow ``kept`` in ``frames`` order, each
+    with its fused stats over ``tracked`` and its written schema (the
+    ``uniform`` evidence); ``schema`` is the table schema the rewrite
+    claims."""
+    results = _overlap_writes(
+        [lambda: _write_change_set(chg, table_path)]
+        + [lambda f=f: _write_data_dir(f, table_path, tracked) for f in frames]
+    )
+    new = results[1:]
     return commit(
         spark,
         None,
@@ -1866,25 +1893,14 @@ def update_where(
         batch_id=batch_id,
         expected_parent=basis,
         store=st,
-        _op="update",
-        _dirs=dirs,
+        _op=op,
+        _dirs=kept + [rel for rel, _ in new],
         _rebase=True,
-        _extra_manifest={"change_dir": chg_rel},
-        _dir_stats=dir_stats,
-        _schema=parent.drop(_DIR_COL).schema,
+        _extra_manifest=results[0],
+        _dir_stats=dict(new),
+        _written={rel: f.schema for (rel, _), f in zip(new, frames)},
+        _schema=schema,
     )
-
-
-def _write_change_set(chg: DataFrame, table_path: str) -> str:
-    """Persist a commit's row-level change set under ``_changes/`` —
-    OUTSIDE the data root so vacuum's unreferenced-dir sweep never
-    confuses CDC files with table data (Delta keeps _change_data the
-    same way). Returns the table-relative directory."""
-    chg_dir = os.path.join(
-        table_path, _CHANGES_DIR, f"g{uuid.uuid4().hex[:12]}"
-    )
-    chg.write.parquet(chg_dir)
-    return os.path.relpath(chg_dir, table_path)
 
 
 # A rewrite commit's output writes (change set / survivors / merge
@@ -1904,18 +1920,31 @@ _OVERLAP_COMMIT_WRITES = os.environ.get(
 
 
 def _overlap_writes(thunks):
-    """Run independent write thunks concurrently (results in input
-    order, first failure re-raised — same contract as the sequential
-    loop; a sibling write that already landed is an orphan dir the
-    next vacuum sweeps, exactly the crash-between-write-and-publish
-    case the manifest-written-last protocol already covers)."""
+    """Run independent write thunks concurrently and return their
+    results in input order. On failure, every sibling is waited for
+    first (none is left writing behind the caller's back); then the
+    EARLIEST failure in input order is raised, with each later
+    failure attached to it as a note. Sequential mode (one thunk, or
+    the overlap switched off) stops at the first failure and never
+    starts the thunks after it. Either way nothing is published: a
+    sibling write that landed is an orphan directory the next vacuum
+    sweeps — the crash-between-write-and-publish case the
+    manifest-written-last protocol already covers."""
     if not _OVERLAP_COMMIT_WRITES or len(thunks) <= 1:
         return [t() for t in thunks]
     from concurrent.futures import ThreadPoolExecutor
 
+    # leaving the block waits for every submitted write
     with ThreadPoolExecutor(max_workers=min(3, len(thunks))) as pool:
         futs = [pool.submit(t) for t in thunks]
-        return [f.result() for f in futs]
+    errors = [f.exception() for f in futs if f.exception() is not None]
+    if errors:
+        for other in errors[1:]:
+            errors[0].add_note(
+                f"a sibling write also failed: {type(other).__name__}: {other}"
+            )
+        raise errors[0]
+    return [f.result() for f in futs]
 
 
 def replace_where(
@@ -1932,6 +1961,9 @@ def replace_where(
     atomically delete every row where ``condition`` is TRUE and insert
     ``df``'s rows, in ONE commit. Rows where the predicate is FALSE
     **or NULL** survive untouched (same NULL rule as delete_where).
+    ``df`` must carry exactly the table's columns with the table's
+    types (else ``ValueError``): its rows land in their own directory,
+    which must hold the manifest schema.
 
     ``validate=True`` (Delta's default): every replacement row must
     itself satisfy the predicate — a reload of ``region='EU'`` that
@@ -2019,6 +2051,20 @@ def replace_where(
             f"(frame-only: {sorted(set(df.columns) - set(par_cols))}, "
             f"table-only: {sorted(set(par_cols) - set(df.columns))})"
         )
+    # the replacement rows land in their own directory: a column type
+    # other than the table's would drift that directory from the
+    # manifest schema
+    par_types = {f.name: _as_nullable(f.dataType) for f in parent.schema.fields}
+    mistyped = {
+        f.name: (f.dataType.simpleString(), par_types[f.name].simpleString())
+        for f in df.schema.fields
+        if _as_nullable(f.dataType) != par_types[f.name]
+    }
+    if mistyped:
+        raise ValueError(
+            "replace_where frame column types differ from the table's "
+            f"(column -> (frame, table)): {mistyped}; cast the frame"
+        )
     tokens = _dir_tokens(parent_dirs)
     touched_tokens = {
         r[_DIR_COL]
@@ -2050,44 +2096,17 @@ def replace_where(
             .withColumn("_change_subtype", F.lit("insert"))
         )
     )
-    kept = [d for d in parent_dirs if d not in touched]
-    tracked = _tracked_stat_cols(manifest)
     # change set, survivors and the replacement frame all derive from
-    # the two pins — independent writes, overlapped (§2.6)
-    writes = [lambda: _write_change_set(chg, table_path)]
-    if touched:
-        survivors = flagged.where(~F.col(flag)).drop(_DIR_COL, flag)
-        writes.append(
-            lambda: _write_data_dir(survivors, table_path, tracked)
-        )
+    # the two pins
+    frames = (
+        [flagged.where(~F.col(flag)).drop(_DIR_COL, flag)] if touched else []
+    )
     if _m["_n"] > 0:  # an empty reload = scoped delete (observed count)
-        writes.append(
-            lambda: _write_data_dir(
-                df.select(*par_cols), table_path, tracked
-            )
-        )
-    results = _overlap_writes(writes)
-    chg_rel = results[0]
-    new_rels: list[str] = []
-    dir_stats: dict[str, dict] = {}
-    for rel, ranges in results[1:]:
-        new_rels.append(rel)
-        dir_stats[rel] = ranges
-    dirs = kept + new_rels
-    return commit(
-        spark,
-        None,
-        table_path,
-        mode="overwrite",
-        batch_id=batch_id,
-        expected_parent=basis,
-        store=st,
-        _op="replace_where",
-        _dirs=dirs,
-        _rebase=True,
-        _extra_manifest={"change_dir": chg_rel},
-        _dir_stats=dir_stats,
-        _schema=parent.drop(_DIR_COL).schema,
+        frames.append(df.select(*par_cols))
+    return _commit_rewrite(
+        spark, table_path, st, "replace_where", basis, batch_id, chg,
+        frames, [d for d in parent_dirs if d not in touched],
+        _tracked_stat_cols(manifest), parent.drop(_DIR_COL).schema,
     )
 
 
@@ -2176,10 +2195,16 @@ def read_snapshot(
     names — partition pruning, pushdown and column pruning all apply
     as on any parquet read.
 
+    Schema: a ``uniform`` manifest (every directory written with
+    exactly the recorded schema) is read with that schema — no footer
+    read, so building the frame runs no Spark job. Otherwise Spark
+    infers the schema from a parquet footer.
+
     ``merge_schema=True``: reconcile schema EVOLUTION across commits
     (a column added in a later append reads as NULL for older
-    directories) — the footer-union pass costs one footer read per
-    file, so leave it off for tables whose schema is known stable.
+    directories) — answered by the manifest-recorded union schema when
+    present; logs without one fall back to the footer-union pass (one
+    footer read per file).
 
     ``timestamp``: TIMESTAMP AS OF — epoch seconds / datetime / ISO
     string, resolved to the latest retained version committed at or
@@ -2254,6 +2279,10 @@ def read_changes(
     directories (footer-union read, as in ``read_snapshot``); evolution
     BETWEEN versions is always reconciled — pieces union with
     ``allowMissingColumns`` so newer columns NULL-pad older deltas.
+    Without ``merge_schema``, append/overwrite pieces of a ``uniform``
+    manifest read with its recorded schema, and change-set pieces with
+    their recorded ``change_schema``; only pieces without such a record
+    infer from a footer.
 
     ``ranges``: optional ``col: (lo, hi)`` bounds with the same
     OPTIMIZATION contract as :func:`scan_snapshot` — delta directories
@@ -2287,22 +2316,20 @@ def read_changes(
             f"({from_version}, {to_version})"
         )
 
-    def _reader():
-        reader = spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        return reader
-
-    def _tagged(
-        dirs: list[str], change: str, v: int, stats: dict | None
-    ) -> DataFrame | None:
-        if ranges and stats:
-            dirs = _prune_dirs({"dirs": dirs, "stats": stats}, ranges)
+    def _tagged(dirs: list[str], change: str, v: int, m: dict) -> DataFrame | None:
+        """Piece over ``dirs`` of manifest ``m`` (a uniform manifest's
+        recorded schema holds for every one of its dirs)."""
+        if ranges and m.get("stats"):
+            dirs = _prune_dirs({"dirs": dirs, "stats": m["stats"]}, ranges)
         if not dirs:
             return None
+        reader = (
+            spark.read.option("mergeSchema", "true")
+            if merge_schema
+            else _snapshot_reader(spark, m, False)
+        )
         return (
-            _reader()
-            .parquet(*[os.path.join(table_path, d) for d in dirs])
+            reader.parquet(*[os.path.join(table_path, d) for d in dirs])
             .withColumn("_change_type", F.lit(change))
             .withColumn("_change_subtype", F.lit(change))
             .withColumn("_commit_version", F.lit(v).cast("long"))
@@ -2310,37 +2337,35 @@ def read_changes(
 
     pieces: list[DataFrame] = []
     prev_m = _load_manifest(table_path, from_version, st)
-    parent_dirs = prev_m["dirs"]
-    parent_stats = prev_m.get("stats", {})
     for v in range(from_version + 1, to_version + 1):
         m = _load_manifest(table_path, v, st)
         if m["op"] == "append":
-            parent_set = set(parent_dirs)
+            parent_set = set(prev_m["dirs"])
             new_dirs = [d for d in m["dirs"] if d not in parent_set]
-            piece = _tagged(new_dirs, "insert", v, m.get("stats"))
-            if piece is not None:
-                pieces.append(piece)
+            pieces.append(_tagged(new_dirs, "insert", v, m))
         elif m["op"] in ("overwrite", "restore", "clone"):
             # restore/clone are logically a truncate-and-reload of the
             # target content — the same delta shape as overwrite
-            dele = _tagged(parent_dirs, "delete", v, parent_stats)
-            if dele is not None:
-                pieces.append(dele)
-            ins = _tagged(m["dirs"], "insert", v, m.get("stats"))
-            if ins is not None:
-                pieces.append(ins)
+            pieces.append(_tagged(prev_m["dirs"], "delete", v, prev_m))
+            pieces.append(_tagged(m["dirs"], "insert", v, m))
         elif m["op"] in ("merge", "delete", "update", "replace_where"):
             # the commit wrote its EXACT row-level change set (with
             # _change_type/_change_subtype baked in) — read it, never
-            # diff snapshots
+            # diff snapshots; one frame wrote it, so its recorded
+            # schema (when present) is exact
+            chg_sch = _stored_schema({"schema": m.get("change_schema")})
+            reader = spark.read
+            if chg_sch is not None:
+                reader = reader.schema(chg_sch)
+            elif merge_schema:
+                reader = reader.option("mergeSchema", "true")
             pieces.append(
-                _reader()
-                .parquet(os.path.join(table_path, m["change_dir"]))
+                reader.parquet(os.path.join(table_path, m["change_dir"]))
                 .withColumn("_commit_version", F.lit(v).cast("long"))
             )
         # op == 'replace': content-preserving, no logical change
-        parent_dirs = m["dirs"]
-        parent_stats = m.get("stats", {})
+        prev_m = m
+    pieces = [p for p in pieces if p is not None]
 
     if not pieces:
         return (
@@ -2387,10 +2412,10 @@ def optimize_table(
     vacuum removes — the old version stays intact (manifest-written-
     last).
 
-    Sizing mirrors compact_corpus: a footer-only pass (the hidden
-    ``_metadata`` columns, computed by the executors) totals bytes and
-    files; the rewrite repartitions to ceil(bytes / target) tasks.
-    Only the two scalar totals hit the driver."""
+    Sizing runs no Spark job: the file count and total bytes come from
+    the snapshot scan's file index (:func:`_scan_size`), which lists
+    these files anyway to plan the rewrite; the rewrite repartitions
+    to ceil(bytes / target) tasks."""
     st = _store(store)
     st.check_path(table_path)
     basis = current_version(table_path, st)
@@ -2404,15 +2429,7 @@ def optimize_table(
     df = read_snapshot(
         spark, table_path, basis, merge_schema=True, store=st
     )
-    n_files, total_bytes = (
-        df.groupBy(F.col("_metadata.file_path").alias("fp"))
-        .agg(F.first(F.col("_metadata.file_size")).alias("sz"))
-        .agg(
-            F.count(F.lit(1)).cast("long"),
-            F.coalesce(F.sum("sz"), F.lit(0)).cast("long"),
-        )
-        .collect()[0]
-    )
+    n_files, total_bytes = _scan_size(df)
     n_target = max(1, -(-int(total_bytes) // int(target_file_bytes)))
     # keep the parent's data-skipping columns tracked through the
     # rewrite (one dir now, so the range is table-wide — honest, just
@@ -2550,6 +2567,7 @@ def optimize_table(
             _rebase=True,
             _dir_stats=dir_stats,
             _schema=df.schema,
+            _written={r: df.schema for r in new_rels},
         )
     if n_target >= n_files:
         return basis
@@ -2563,6 +2581,14 @@ def optimize_table(
         stats_cols=tracked or None,
         _rebase=True,
     )
+
+
+def _scan_size(df: DataFrame) -> tuple[int, int]:
+    """(file count, total bytes) of a plain parquet scan, answered by
+    its file index — the listing Spark already holds to plan the scan —
+    instead of a Spark job over the hidden ``_metadata`` columns."""
+    index = df._jdf.queryExecution().analyzed().relation().location()
+    return len(df.inputFiles()), int(index.sizeInBytes())
 
 
 def clone_table(

@@ -86,6 +86,35 @@ def test_npz_sink_and_source_roundtrip(spark, tmp_path):
     np.testing.assert_array_equal(arrs["y"][0, :, :, 0], y)
 
 
+def test_npz_sink_keeps_units_that_straddle_arrow_batches(spark, tmp_path):
+    """Every NPZ holds ALL of its unit's frames even when the unit's rows
+    arrive in several Arrow batches (2 records per batch, 4 stacks per
+    unit): each stack round-trips."""
+    y = rectangle_grid_labels(30, 30, cell_h=5, cell_w=5, pitch_r=10, pitch_c=10)
+    rng = np.random.default_rng(1)
+    rows, stacks = [], {}
+    for f in range(3):
+        x = rng.random((4, 30, 30, 1)).astype(np.float32)
+        ys = np.stack([y * (s + 1) for s in range(4)])
+        rows += rows_from_arrays(f"fov{f}", x, ys)
+        stacks[f"fov{f}"] = (x, ys)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        out = write_npz_units(images_df(spark, rows), str(tmp_path / "u")).collect()
+    finally:
+        spark.conf.set(key, old)
+    assert sorted(r["fov"] for r in out) == ["fov0", "fov1", "fov2"]
+    for r in out:
+        arrs = decode_npz(open(r["path"], "rb").read())
+        x, ys = stacks[r["fov"]]
+        np.testing.assert_array_equal(arrs["y"][..., 0], ys)
+        np.testing.assert_array_equal(arrs["X"], x)
+    back = read_npz_units(spark, str(tmp_path / "u/*.npz"))
+    assert back.count() == 12
+
+
 def test_npz_blank_routing(spark, tmp_path):
     blank = np.zeros((1, 20, 20), dtype=np.int32)
     df = images_df(spark, rows_from_arrays("fovB", None, blank))

@@ -256,3 +256,34 @@ def test_interval_overlap_join_extra_on_key(spark):
         ).collect()
     )
     assert got == [(1, 10), (2, 11)]
+
+
+def test_x199_empty_orders_returns_empty_frame(spark, tmp_path):
+    """x199 over a zero-row ``orders`` returns an empty frame with the
+    populated result's column types — DuckDB's answer too — instead of
+    raising from ``int(None)`` on the driver-side totals."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    empty_dir = str(tmp_path)
+    src = pq.read_table(os.path.join(SF_SMOKE, "orders.parquet"))
+    pq.write_table(src.slice(0, 0), os.path.join(empty_dir, "orders.parquet"))
+    spec = QUERIES["x199_fd_histogram"]
+    got = spec.build(spark, empty_dir)
+    assert got.collect() == []
+    full = spec.build(spark, SF_SMOKE)
+    assert [(f.name, f.dataType) for f in got.schema] == [
+        (f.name, f.dataType) for f in full.schema
+    ]
+    import duckdb
+
+    con = duckdb.connect()
+    try:
+        con.execute(
+            "CREATE VIEW orders AS SELECT * FROM "
+            f"read_parquet('{empty_dir}/orders.parquet')"
+        )
+        assert con.execute(spec.oracle).fetchall() == []
+    finally:
+        con.close()

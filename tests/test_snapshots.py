@@ -3663,3 +3663,281 @@ def test_timestamps_monotonic_across_rebase(spark, tmp_path):
     h = {e["version"]: e["ts_us"] for e in snap.history(t)}
     assert h[v] > h[v - 1] > h[v - 2]
     assert h[v] == 5_000 * 1_000_000 + 1  # floored past the append
+
+
+# --- manifest-answered metadata: uniform marker, change_schema, sizing ---
+
+
+def _jobs(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
+def _footer_schema(spark, t, dirs):
+    return spark.read.parquet(*[os.path.join(t, d) for d in dirs]).schema
+
+
+def _uniform_crud_table(spark, t):
+    """Three appends, then one of each rewrite verb, on a 3-column table."""
+    base = spark.range(120).select(
+        F.col("id").alias("k"),
+        (F.col("id") % 9).cast("smallint").alias("sh"),
+        F.when(F.col("id") % 2 == 0, "a").otherwise("b").alias("tag"),
+    )
+    for i in range(3):
+        snap.commit(spark, base.where(F.col("k") % 3 == i), t,
+                    stats_cols=["k"])
+    snap.update_where(spark, t, "k < 10", {"sh": "sh + 1"})
+    snap.delete_where(spark, t, "k > 110")
+    snap.merge_upsert(
+        spark,
+        base.where("k < 5").withColumn("tag", F.lit("m")),
+        t,
+        keys=["k"],
+    )
+    snap.replace_where(
+        spark, base.where("k BETWEEN 40 AND 50"), t, "k BETWEEN 40 AND 50"
+    )
+    return base
+
+
+def test_uniform_table_reads_build_without_spark_jobs(spark, tmp_path):
+    """On a uniform table every version carries the marker, and building
+    read_snapshot, scan_snapshot and read_changes runs ZERO Spark jobs
+    (no footer inference); the frames read what the inferred reads do."""
+    t = str(tmp_path / "tbl")
+    _uniform_crud_table(spark, t)
+    head = snap.current_version(t)
+    for v in range(head + 1):
+        m = snap._load_manifest(t, v, snap._POSIX)
+        assert m.get("uniform") is True, (v, m["op"])
+        if m["op"] != "append":
+            assert "change_schema" in m, v
+
+    before = _jobs(spark)
+    cur = snap.read_snapshot(spark, t)
+    past = snap.read_snapshot(spark, t, 1)
+    scanned = snap.scan_snapshot(spark, t, {"k": (0, 20)})
+    feed = snap.read_changes(spark, t, 0)
+    assert _jobs(spark) == before
+
+    m = snap._load_manifest(t, head, snap._POSIX)
+    assert cur.schema == _footer_schema(spark, t, m["dirs"])
+    inferred = spark.read.parquet(*[os.path.join(t, d) for d in m["dirs"]])
+    assert sorted(map(tuple, cur.collect())) == sorted(
+        map(tuple, inferred.collect())
+    )
+    assert past.count() == 80
+    assert scanned.where("k <= 20").count() == 21
+    got = {r[0]: r[1] for r in feed.groupBy("_change_type").count().collect()}
+    # appends v1, v2: 80 inserts; update: 10 pre/post; delete: 9;
+    # merge: 5 pre/post; replace_where: 11 deleted + 11 inserted
+    assert got == {"insert": 80 + 10 + 5 + 11, "delete": 10 + 9 + 5 + 11}
+
+
+def test_recorded_schema_equals_footer_schema_across_types(spark, tmp_path):
+    """The recorded-schema read returns exactly the schema footer
+    inference would, across decimal, timestamp/ntz, short, binary,
+    date, nested array/map/struct and field metadata — through appends
+    and every rewrite verb."""
+    df = spark.sql(
+        """SELECT id AS k,
+                  CAST(id AS DECIMAL(12, 3)) AS dec,
+                  CAST(id AS SMALLINT) AS sh,
+                  TIMESTAMP'2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, id) AS ts,
+                  TIMESTAMP_NTZ'2024-01-01 00:00:00' AS ntz,
+                  DATE'2024-01-01' + CAST(id AS INT) AS d,
+                  CAST(CAST(id AS STRING) AS BINARY) AS bin,
+                  array(id, id + 1) AS arr,
+                  map('k', id) AS mp,
+                  named_struct('a', id, 'b', named_struct('c', 'x')) AS st
+           FROM range(40)"""
+    ).withColumn("note", F.col("k").alias("note", metadata={"comment": "hi"}))
+    t = str(tmp_path / "tbl")
+    snap.commit(spark, df.where("k < 20"), t)
+    snap.commit(spark, df.where("k >= 20"), t)
+    snap.update_where(spark, t, "k < 5", {"dec": "dec * 2", "sh": "sh + 1"})
+    snap.delete_where(spark, t, "k = 39")
+    snap.merge_upsert(spark, df.where("k IN (1, 50)"), t, keys=["k"])
+    snap.replace_where(spark, df.where("k = 7"), t, "k = 7")
+    for v in range(snap.current_version(t) + 1):
+        m = snap._load_manifest(t, v, snap._POSIX)
+        assert m.get("uniform") is True, v
+        got = snap.read_snapshot(spark, t, v).schema
+        assert got == _footer_schema(spark, t, m["dirs"]), v
+        assert got.fields[-1].metadata == {"comment": "hi"}
+        if "change_schema" in m:
+            chg = snap._stored_schema({"schema": m["change_schema"]})
+            assert chg == _footer_schema(spark, t, [m["change_dir"]]), v
+
+
+def test_legacy_and_evolved_manifests_still_infer(spark, tmp_path):
+    """Without the marker a plain read infers from the footer: a legacy
+    manifest (no ``uniform``) ignores even a wrong recorded schema, and
+    a schema-evolving append leaves the marker off."""
+    import json
+
+    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "source")
+    t = str(tmp_path / "tbl")
+    snap.commit(spark, docs.where(F.col("doc_id") < 30), t)
+    path = snap._manifest_path(t, 0)
+    m = json.loads(open(path).read())
+    assert m["uniform"] is True
+    # a recorded schema that disagrees with the files: honored only
+    # under the marker, so dropping the marker must fall back to footers
+    m["schema"]["fields"] = m["schema"]["fields"][:1]
+    del m["uniform"]
+    with open(path, "w") as fh:
+        json.dump(m, fh)
+    before = _jobs(spark)
+    legacy = snap.read_snapshot(spark, t, 0)
+    assert _jobs(spark) > before  # footer inference ran
+    assert legacy.columns == ["doc_id", "source"]
+
+    t2 = str(tmp_path / "evolved")
+    snap.commit(spark, docs.where(F.col("doc_id") < 30), t2)
+    v1 = snap.commit(
+        spark,
+        docs.where(F.col("doc_id") >= 30).withColumn("grade", F.lit(1)),
+        t2,
+    )
+    m1 = snap._load_manifest(t2, v1, snap._POSIX)
+    assert "uniform" not in m1
+    plain = snap.read_snapshot(spark, t2, v1)
+    assert plain.schema == _footer_schema(spark, t2, m1["dirs"])
+    # a later same-schema append cannot re-earn the marker: the evolved
+    # table's old dirs still lack the new column
+    v2 = snap.commit(
+        spark,
+        docs.where(F.col("doc_id") < 3).withColumn("grade", F.lit(2)),
+        t2,
+    )
+    assert "uniform" not in snap._load_manifest(t2, v2, snap._POSIX)
+    # restore and clone re-reference dirs they did not write: no marker
+    vr = snap.restore_table(spark, t2, 0)
+    assert "uniform" not in snap._load_manifest(t2, vr, snap._POSIX)
+    dst = str(tmp_path / "clone")
+    snap.clone_table(spark, t2, dst, version=0)
+    assert "uniform" not in snap._load_manifest(dst, 0, snap._POSIX)
+
+
+def test_update_where_casts_set_results_to_column_type(spark, tmp_path):
+    """A SET expression whose type differs from the column (SMALLINT *
+    1.5 is a DECIMAL) is cast to the column type, so every rewritten
+    directory's footer schema equals the manifest schema and the merged
+    read returns the cast values; an ANSI cast overflow raises and
+    publishes nothing."""
+    t = str(tmp_path / "tbl")
+    df = spark.range(200).select(
+        F.col("id"), ((F.col("id") * 7) % 101).cast("smallint").alias("sh")
+    )
+    snap.commit(spark, df.where("id < 100"), t)
+    snap.commit(spark, df.where("id >= 100"), t)
+    v = snap.update_where(spark, t, "id < 10", {"sh": "sh * 1.5"})
+    vals = [(i * 7) % 101 for i in range(200)]
+    want = sum(int(s * 1.5) if i < 10 else s for i, s in enumerate(vals))
+    got = snap.read_snapshot(spark, t, v, merge_schema=True)
+    assert got.agg(F.sum("sh")).collect()[0][0] == want
+    m = snap._load_manifest(t, v, snap._POSIX)
+    recorded = snap._stored_schema(m)
+    for d in m["dirs"]:
+        assert _footer_schema(spark, t, [d]) == recorded, d
+    assert snap.read_snapshot(spark, t, v).agg(F.sum("sh")).collect()[0][0] == want
+
+    with pytest.raises(Exception, match="CAST_OVERFLOW|overflow"):
+        snap.update_where(spark, t, "id < 10", {"sh": "sh * 100000"})
+    assert snap.current_version(t) == v
+
+
+def test_replace_where_rejects_mistyped_frame(spark, tmp_path):
+    """replace_where refuses a frame whose column names match but whose
+    types differ from the table's — its directory would drift from the
+    manifest schema."""
+    t = str(tmp_path / "tbl")
+    df = spark.range(20).select(F.col("id"), F.col("id").cast("int").alias("v"))
+    snap.commit(spark, df, t)
+    bad = df.where("id < 5").withColumn("v", F.col("v").cast("double"))
+    with pytest.raises(ValueError, match="types differ"):
+        snap.replace_where(spark, bad, t, "id < 5")
+    assert snap.current_version(t) == 0
+    ok = snap.replace_where(spark, df.where("id < 5"), t, "id < 5")
+    assert snap.read_snapshot(spark, t, ok).count() == 20
+
+
+def test_overlap_writes_waits_for_siblings_and_raises_earliest():
+    """All sibling writes finish before the raise; the earliest failure
+    in input order is raised with the later ones attached as notes."""
+    import threading
+    import time
+
+    done = threading.Event()
+
+    def slow_fail():
+        time.sleep(0.3)
+        done.set()
+        raise RuntimeError("late sibling")
+
+    def fast_fail():
+        raise KeyError("first in order")
+
+    prev = snap._OVERLAP_COMMIT_WRITES
+    snap._OVERLAP_COMMIT_WRITES = True
+    try:
+        with pytest.raises(KeyError) as ei:
+            snap._overlap_writes([lambda: 1, fast_fail, slow_fail])
+        assert done.is_set()
+        assert any("late sibling" in n for n in ei.value.__notes__)
+        assert snap._overlap_writes([lambda: 1, lambda: 2]) == [1, 2]
+    finally:
+        snap._OVERLAP_COMMIT_WRITES = prev
+
+
+def test_failed_rewrite_write_publishes_nothing_and_vacuum_sweeps(
+    spark, tmp_path, monkeypatch
+):
+    """Fault injection: when one write of a rewrite commit raises, no
+    manifest is published, the sibling write that landed is an orphan,
+    and vacuum removes it."""
+    t = str(tmp_path / "tbl")
+    snap.commit(spark, spark.range(50).withColumnRenamed("id", "k"), t)
+    real = snap._write_data_dir
+
+    def failing(df, table_path, cols):
+        real(df, table_path, cols)  # lands, then the thunk fails
+        raise OSError("injected write failure")
+
+    monkeypatch.setattr(snap, "_write_data_dir", failing)
+    with pytest.raises(OSError, match="injected"):
+        snap.delete_where(spark, t, "k < 10")
+    monkeypatch.setattr(snap, "_write_data_dir", real)
+    assert snap.current_version(t) == 0
+    data = os.listdir(os.path.join(t, "data"))
+    changes = os.listdir(os.path.join(t, "_changes"))
+    assert len(data) == 2 and len(changes) == 1  # orphans on disk
+    removed = snap.vacuum(t)
+    assert len(removed) == 2
+    assert os.listdir(os.path.join(t, "data")) == snap._load_manifest(
+        t, 0, snap._POSIX
+    )["dirs"][0].split("/")[1:]
+    assert os.listdir(os.path.join(t, "_changes")) == []
+    assert snap.read_snapshot(spark, t).count() == 50
+
+
+def test_optimize_sizing_matches_metadata_aggregate(spark, tmp_path):
+    """The file-index sizing equals the old ``_metadata`` aggregate
+    (distinct files, summed file sizes) and runs no Spark job."""
+    t = str(tmp_path / "tbl")
+    df = spark.range(300).select(F.col("id"), (F.col("id") * 3).alias("v"))
+    for i in range(3):
+        snap.commit(spark, df.where(F.col("id") % 3 == i).repartition(2), t)
+    scan = snap.read_snapshot(spark, t, merge_schema=True)
+    before = _jobs(spark)
+    n_files, total = snap._scan_size(scan)
+    assert _jobs(spark) == before
+    old = (
+        scan.groupBy(F.col("_metadata.file_path").alias("fp"))
+        .agg(F.first(F.col("_metadata.file_size")).alias("sz"))
+        .agg(F.count(F.lit(1)), F.sum("sz"))
+        .collect()[0]
+    )
+    assert (n_files, total) == (old[0], old[1])
+    assert n_files == 6

@@ -191,6 +191,24 @@ def test_disc_percentile_rejects_empty_and_all_null_columns(spark):
         disc_percentile_by_histogram(nulls, "x", 0.5)
 
 
+@pytest.mark.parametrize(
+    "qs", [[], [0.0], [0.5, 0], [1.5], [-0.1], [0.5, float("nan")]]
+)
+def test_disc_percentiles_reject_bad_qs_up_front(spark, qs):
+    """An empty qs list or any q outside 0 < q <= 1 raises a named
+    ValueError before any Spark job runs."""
+    from deepcell_data_engineering_spark.functions.stats import (
+        disc_percentiles_by_histogram,
+    )
+
+    df = spark.createDataFrame([(1,), (2,)], "x int")
+    sc = spark.sparkContext._jsc.sc()
+    before = sc.dagScheduler().numTotalJobs()
+    with pytest.raises(ValueError, match="qs|0 < q <= 1"):
+        disc_percentiles_by_histogram(df, "x", qs)
+    assert sc.dagScheduler().numTotalJobs() == before
+
+
 def test_key_skew_report_from_precomputed_counts_matches(spark):
     """counts= reuses a caller-built frequency table: the report must
     be identical to the direct-aggregation path."""
