@@ -33,28 +33,25 @@ def entry(spark: SparkSession) -> DataFrame:
 # The driver oracle-checks the first 50 registry entries per round.
 # Current rotation: the most recently changed code leads — the snapshot-
 # lifecycle queries (MERGE/DELETE/UPDATE feeds, schema-evolution merge,
-# clone/restore, vacuum, replace_where, Z-order), whose reads and
-# OPTIMIZE now take schema and size from the manifest, and the round-14
-# rewrites the driver never re-verified (x76, x103, x199; x199 also
-# gained an empty-input guard). Then the rest of the round-13 additions
-# x202–x233 that never had a driver verdict, then the oldest round-9
-# verdicts in registry order (d35–d44). The r9 rows this window drops
-# (d45–d49, x02–x04) and the ~28 r9-stale rows behind them are next.
+# clone/restore, constraints, vacuum, replace_where, Z-order), whose
+# four copy-on-write verbs now share one skeleton, and the round-14
+# rewrites the driver never re-verified (x76, x103, x199). Then the
+# round-13 additions that never had a driver verdict, then the oldest
+# round-9 verdicts (d35–d49, x02–x04; d48 is a change-feed MERGE). The
+# window drops x204–x211 (driver-correct in the round-14 window; no
+# snapshot code); they and the ~28 r9-stale rows behind them are next.
 _CHECK_FIRST = [
-    # snapshot lifecycle (reads/OPTIMIZE answer from the manifest)
+    # snapshot lifecycle (the copy-on-write verbs share one skeleton)
     "x151_merge_feed_view", "x162_delete_feed_view",
     "x167_schema_evolution_merge", "x185_lifecycle_clone_restore",
-    "x200_update_feed_view", "x217_vacuum_lifecycle",
-    "x218_replace_where_lifecycle", "x230_zorder_lifecycle",
+    "x200_update_feed_view", "x202_constraint_lifecycle",
+    "x217_vacuum_lifecycle", "x218_replace_where_lifecycle",
+    "x230_zorder_lifecycle",
     # round-14 rewrites never re-verified by the driver
     "x76_quality_gate_corpus", "x103_zorder_skipping",
     "x199_fd_histogram",
     # never driver-checked (round-13 additions)
-    "x202_constraint_lifecycle", "x203_stream_rate_feed",
-    "x204_kaplan_meier", "x205_mutual_information",
-    "x206_zipf_slope", "x207_rfm_segments",
-    "x208_cohort_retention", "x209_key_skew_audit",
-    "x210_mcnemar_paired", "x211_benford_digits",
+    "x203_stream_rate_feed",
     "x212_theil_index", "x213_activity_streaks",
     "x214_funnel_latency", "x215_cuped_adjustment",
     "x216_runs_test", "x219_item_similarity",
@@ -65,11 +62,14 @@ _CHECK_FIRST = [
     "x228_js_divergence", "x229_info_gain",
     "x231_spearman_rank_corr",
     "x232_dow_seasonality", "x233_capture_recapture",
-    # oldest driver verdicts (round 9) — first 10 in registry order
+    # oldest driver verdicts (round 9)
     "d35_approx_distinct", "d36_exists_subquery",
     "d37_scalar_subquery", "d38_ntile_percent_rank",
     "d39_array_hof", "d40_except_all", "d41_moment_stats",
     "d42_snapshot_diff", "d43_quantiles", "d44_null_semantics",
+    "d45_share_of_total", "d46_try_cast", "d47_incremental_agg",
+    "d48_apply_changes", "d49_revenue_rollup",
+    "x02_quality_features", "x03_lang_id", "x04_exact_dedup",
 ]
 
 

@@ -95,9 +95,7 @@ _UNSET = object()  # sentinel: expected_parent=None means "expect empty table"
 # back to shuffle — the same size cutover Delta's merge uses. The pin
 # job's Observation supplies the exact count for free, so the decision
 # costs no extra action.
-_MERGE_BROADCAST_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_MERGE_BROADCAST_KEYS", "2000000")
-)
+_MERGE_BROADCAST_MAX_ROWS = 2_000_000
 
 
 class ConstraintViolationError(RuntimeError):
@@ -414,6 +412,23 @@ def current_version(
     return max(versions) if versions else None
 
 
+def _resolve_version(
+    table_path: str, st: ManifestStore, version: int | None = None,
+    timestamp=None,
+) -> int:
+    """``version``; else TIMESTAMP AS OF ``timestamp`` (exclusive with
+    ``version``); else the head, raising on a table with no commits."""
+    if timestamp is not None:
+        if version is not None:
+            raise ValueError("pass either version or timestamp, not both")
+        return version_at_timestamp(table_path, timestamp, st)
+    if version is None:
+        version = current_version(table_path, st)
+        if version is None:
+            raise ValueError(f"no committed versions at {table_path!r}")
+    return version
+
+
 class ManifestMissingError(ValueError):
     """The manifest for a version is absent (never committed, or
     vacuumed). Distinct from a CORRUPT manifest: ``json.loads`` errors
@@ -530,51 +545,6 @@ def _snapshot_reader(spark: SparkSession, manifest: dict, merge_schema: bool):
     return reader
 
 
-def _column_ranges(df: DataFrame, cols: list[str]) -> dict[str, list]:
-    """One aggregation: [min, max] per named column, keeping only
-    JSON-stable scalars (int/float/str/bool). A column that is all-NULL
-    or non-scalar is omitted — omission disables pruning on it, never
-    correctness."""
-    aggs = []
-    for c in cols:
-        aggs.append(F.min(c).alias(f"_lo_{c}"))
-        aggs.append(F.max(c).alias(f"_hi_{c}"))
-    row = df.agg(*aggs).collect()[0]
-    out: dict[str, list] = {}
-    for c in cols:
-        lo, hi = row[f"_lo_{c}"], row[f"_hi_{c}"]
-        if isinstance(lo, (int, float, str, bool)) and isinstance(
-            hi, (int, float, str, bool)
-        ):
-            out[c] = [lo, hi]
-    return out
-
-
-def _rewritten_dir_stats(
-    spark: SparkSession, table_path: str, manifest: dict, dirs: list[str]
-) -> dict[str, dict]:
-    """Recompute data-skipping stats for freshly REWRITTEN directories
-    (merge survivors, delete survivors, merge source) over the columns
-    the parent manifest already tracks — so CRUD commits keep the
-    skipping metadata alive instead of degrading dirs to unprunable.
-    One aggregation per new dir, over data that was just written (the
-    copy-on-write cost class); tables that never recorded stats pay
-    nothing. A dir that cannot be profiled (e.g. written empty) is
-    skipped — absent stats stay merely unprunable."""
-    cols = _tracked_stat_cols(manifest)
-    if not cols:
-        return {}
-    out: dict[str, dict] = {}
-    for rel in dirs:
-        try:
-            out[rel] = _column_ranges(
-                spark.read.parquet(os.path.join(table_path, rel)), cols
-            )
-        except Exception:
-            continue
-    return out
-
-
 def _tracked_stat_cols(manifest: dict) -> list[str]:
     """Columns the parent manifest tracks data-skipping stats for."""
     return sorted(
@@ -592,36 +562,47 @@ def _write_parquet_with_ranges(
     written; here the scan disappears (guide: measure once, don't
     recompute what the write already streamed past).
 
-    Equivalence contract with the read-back path (`_column_ranges`
-    over ``spark.read.parquet(out_dir)``): identical min/max over
-    identical rows, the same JSON-stable scalar filter, and the same
-    skip-the-dir behavior when a requested column cannot be aggregated
-    (missing after schema evolution, unorderable type): the caller
-    gets ``{}`` and records no stats — unprunable, never wrong."""
+    The ranges are the min/max of exactly the rows written, through
+    the same JSON-stable scalar filter as every other stats producer
+    (:func:`_ranges_of`). When a requested column cannot be aggregated
+    (missing after schema evolution, unorderable type) the dir is
+    written without stats: the caller gets ``{}`` — unprunable, never
+    wrong."""
     if not cols:
         df.write.parquet(out_dir)
         return {}
     from pyspark.sql import Observation
 
-    aggs = []
-    for c in cols:
-        aggs.append(F.min(c).alias(f"_lo_{c}"))
-        aggs.append(F.max(c).alias(f"_hi_{c}"))
     obs = Observation()
     try:
-        observed = df.observe(obs, *aggs)
+        observed = df.observe(obs, *_range_aggs(cols))
         observed.schema  # force analysis: bad column -> fall back
     except Exception:
         df.write.parquet(out_dir)
         return {}
     observed.write.parquet(out_dir)
-    row = obs.get
+    return _ranges_of(obs.get, cols)
+
+
+def _range_aggs(cols: list[str]) -> list:
+    """min/max aggregates per column, aliased for :func:`_ranges_of`."""
+    return [
+        agg
+        for c in cols
+        for agg in (F.min(c).alias(f"_lo_{c}"), F.max(c).alias(f"_hi_{c}"))
+    ]
+
+
+def _ranges_of(row, cols: list[str]) -> dict[str, list]:
+    """[min, max] per column from a row of :func:`_range_aggs`, keeping
+    only JSON-stable scalars (int/float/str/bool). A column that is
+    all-NULL or non-scalar is omitted — omission disables pruning on
+    it, never correctness."""
+    scalar = (int, float, str, bool)
     out: dict[str, list] = {}
     for c in cols:
-        lo, hi = row.get(f"_lo_{c}"), row.get(f"_hi_{c}")
-        if isinstance(lo, (int, float, str, bool)) and isinstance(
-            hi, (int, float, str, bool)
-        ):
+        lo, hi = row[f"_lo_{c}"], row[f"_hi_{c}"]
+        if isinstance(lo, scalar) and isinstance(hi, scalar):
             out[c] = [lo, hi]
     return out
 
@@ -703,10 +684,7 @@ def scan_snapshot(
     ``read_snapshot`` schema)."""
     st = _store(store)
     st.check_path(table_path)
-    if version is None:
-        version = current_version(table_path, st)
-        if version is None:
-            raise ValueError(f"no committed versions at {table_path!r}")
+    version = _resolve_version(table_path, st, version)
     manifest = _load_manifest(table_path, version, st)
     kept = _prune_dirs(manifest, ranges)
     if not kept:
@@ -1254,20 +1232,28 @@ def drop_constraint(
 
 
 _CHANGES_DIR = "_changes"
-# Internal column used by merge/delete to attribute each parent row to
-# its data directory. Deliberately unlikely; both entry points raise
-# cleanly if a user column collides (a silent withColumn overwrite
-# would corrupt touched-dir detection AND the change set).
+# Internal columns of the copy-on-write verbs: _DIR_COL attributes each
+# basis row to its data directory, _FLAG_COL pins one evaluation of a
+# verb's row classification. Deliberately unlikely names; every verb
+# raises before its first Spark job if the table or an incoming frame
+# carries one (a silent withColumn overwrite would corrupt touched-dir
+# detection AND the change set).
 _DIR_COL = "_dde_internal_dir"
+_FLAG_COL = "_dde_internal_flag"
+
+
+def _check_reserved(columns: list[str], what: str) -> None:
+    clash = [c for c in (_DIR_COL, _FLAG_COL) if c in columns]
+    if clash:
+        raise ValueError(
+            f"{what} carries reserved column(s) {clash}, which "
+            "merge_upsert/delete_where/update_where/replace_where use "
+            "internally — rename before using copy-on-write CRUD"
+        )
 
 
 def _with_dir_col(parent: DataFrame) -> DataFrame:
-    if _DIR_COL in parent.columns:
-        raise ValueError(
-            f"table carries a column named {_DIR_COL!r}, which "
-            "merge/delete reserve for internal directory attribution — "
-            "rename it before using copy-on-write CRUD"
-        )
+    _check_reserved(parent.columns, "table")
     # Greedy `.*/` pins the LAST `data/<dir>/` pair in the file path, so
     # a table (or clone source) living under an ANCESTOR directory named
     # 'data' (/warehouse/data/tbl/data/cX/part.parquet) still yields the
@@ -1283,24 +1269,6 @@ def _with_dir_col(parent: DataFrame) -> DataFrame:
             1,
         ),
     )
-
-
-def _resolve_touched(
-    touched_tokens: set[str], tokens: dict[str, str], table_path: str
-) -> set[str]:
-    """Map extracted dir tokens back to manifest entries, failing with a
-    DESCRIPTIVE error (not a bare KeyError) when a row's file path does
-    not attribute to any manifest directory — the loud form of what
-    would otherwise corrupt touched-dir accounting."""
-    unknown = sorted(t for t in touched_tokens if t not in tokens)
-    if unknown:
-        raise ValueError(
-            f"cannot attribute rows of {table_path!r} to manifest data "
-            f"directories: extracted tokens {unknown} are not among the "
-            f"manifest's {sorted(tokens)} — the table layout does not "
-            "match its manifest (files outside a data/<dir>/ directory?)"
-        )
-    return {tokens[t] for t in touched_tokens}
 
 
 def _dir_tokens(parent_dirs: list[str]) -> dict[str, str]:
@@ -1327,6 +1295,186 @@ def _dir_tokens(parent_dirs: list[str]) -> dict[str, str]:
             f"{parent_dirs!r} — cannot attribute rows to directories"
         )
     return tokens
+
+
+def _as_col(e):
+    """A Column, or a SQL expression string parsed into one."""
+    return F.expr(e) if isinstance(e, str) else e
+
+
+def _as_changes(df: DataFrame, change: str, subtype: str | None = None):
+    """``df`` as change-feed rows: ``_change_type`` = ``change``,
+    ``_change_subtype`` = ``subtype`` (default: ``change``)."""
+    return df.withColumn("_change_type", F.lit(change)).withColumn(
+        "_change_subtype", F.lit(subtype or change)
+    )
+
+
+def _write_change_set(chg: DataFrame, table_path: str) -> dict:
+    """Persist a commit's row-level change set under ``_changes/`` —
+    OUTSIDE the data root so vacuum's unreferenced-dir sweep never
+    confuses CDC files with table data (Delta keeps _change_data the
+    same way). Returns the manifest entries naming it: the
+    table-relative ``change_dir`` and its written ``change_schema``
+    (one frame, one write job — so ``read_changes`` can read it with
+    that schema instead of inferring it from a footer)."""
+    chg_dir = os.path.join(
+        table_path, _CHANGES_DIR, f"g{uuid.uuid4().hex[:12]}"
+    )
+    chg.write.parquet(chg_dir)
+    return {
+        "change_dir": os.path.relpath(chg_dir, table_path),
+        "change_schema": _as_nullable(chg.schema).jsonValue(),
+    }
+
+
+# A rewrite commit's output writes (change set / survivors / merge
+# source) are mutually independent jobs over frames that derive from
+# the SAME already-materialized pins, so the driver may submit them
+# concurrently and let the scheduler back-fill each write's task tail
+# with the next write's tasks (guide §2.6 — actions are sequential
+# only because the driver calls them sequentially). This is the warm
+# x128 overlap case, NOT the rejected cold-audit-read case (r13): the
+# inputs are pinned blocks plus just-scanned parquet, and each thunk
+# is one write job, so the driver-side analysis contention that made
+# cold snapshot reads 2x slower does not apply.
+def _overlap_writes(thunks):
+    """Run independent write thunks concurrently and return their
+    results in input order; a single thunk runs inline. On failure,
+    every sibling is waited for first (none is left writing behind the
+    caller's back); then the EARLIEST failure in input order is
+    raised, with each later failure attached to it as a note. Nothing
+    is published: a sibling write that landed is an orphan directory
+    the next vacuum sweeps — the crash-between-write-and-publish case
+    the manifest-written-last protocol already covers."""
+    if len(thunks) <= 1:
+        return [t() for t in thunks]
+    from concurrent.futures import ThreadPoolExecutor
+
+    # leaving the block waits for every submitted write
+    with ThreadPoolExecutor(max_workers=min(3, len(thunks))) as pool:
+        futs = [pool.submit(t) for t in thunks]
+    errors = [f.exception() for f in futs if f.exception() is not None]
+    if errors:
+        for other in errors[1:]:
+            errors[0].add_note(
+                f"a sibling write also failed: {type(other).__name__}: {other}"
+            )
+        raise errors[0]
+    return [f.result() for f in futs]
+
+
+class _Rewrite:
+    """The copy-on-write skeleton of merge_upsert, delete_where,
+    update_where and replace_where (Delta's rewrite protocol at
+    directory granularity); each verb supplies only its row
+    classification and change set.
+
+    Construction resolves the basis (the head; None on an empty table
+    when ``empty_ok``, else raises), the replayed ``batch_id``'s
+    version (``seen``), and refuses reserved columns in ``incoming``
+    frames and the table before any Spark job. ``scan`` reads the
+    basis with its union schema (a plain read could drop a column an
+    ``evolve_schema`` merge added); ``rows`` adds ``_DIR_COL``."""
+
+    def __init__(
+        self, spark, table_path, store, batch_id, incoming=(),
+        empty_ok=False,
+    ):
+        for df in incoming:
+            _check_reserved(df.columns, "the incoming frame")
+        self.spark, self.table_path = spark, table_path
+        self.batch_id = batch_id
+        self.st = st = _store(store)
+        self.basis = (
+            current_version(table_path, st)
+            if empty_ok
+            else _resolve_version(table_path, st)
+        )
+        self.seen = None
+        if self.basis is not None and batch_id is not None:
+            self.seen = _batch_id_seen(table_path, self.basis, batch_id, st)
+        if self.basis is None or self.seen is not None:
+            return
+        self.manifest = _load_manifest(table_path, self.basis, st)
+        self.tokens = _dir_tokens(self.manifest["dirs"])
+        self.scan = _snapshot_reader(spark, self.manifest, True).parquet(
+            *[os.path.join(table_path, d) for d in self.manifest["dirs"]]
+        )
+        self.rows = _with_dir_col(self.scan)
+        self.touched: set[str] = set()
+
+    def find(self, matches: DataFrame) -> DataFrame:
+        """Rows of every directory holding a row of ``matches`` (a
+        filter of ``rows``). One catalog-sized ``collect`` — one dir
+        token per touched directory — discovers them into ``touched``;
+        a token that maps to no manifest directory fails descriptively
+        instead of corrupting touched-dir accounting."""
+        found = {
+            r[_DIR_COL] for r in matches.select(_DIR_COL).distinct().collect()
+        }
+        unknown = sorted(found - set(self.tokens))
+        if unknown:
+            raise ValueError(
+                f"cannot attribute rows of {self.table_path!r} to manifest "
+                f"data directories: extracted tokens {unknown} are not "
+                f"among the manifest's {sorted(self.tokens)} — the table "
+                "layout does not match its manifest (files outside a "
+                "data/<dir>/ directory?)"
+            )
+        self.touched = {self.tokens[t] for t in found}
+        return self.rows.where(F.col(_DIR_COL).isin(list(found)))
+
+    def split(self, cond) -> tuple[DataFrame, DataFrame]:
+        """(matched, survivors) of the touched directories: rows where
+        ``cond`` is TRUE match, FALSE or NULL survive (SQL DML). The
+        predicate is evaluated over the touched dirs EXACTLY ONCE (one
+        ``localCheckpoint`` pin), so both halves — and every change set
+        derived from them — agree even for a non-deterministic
+        predicate."""
+        flagged = (
+            self.find(self.rows.where(cond))
+            .withColumn(_FLAG_COL, F.coalesce(cond, F.lit(False)))
+            .localCheckpoint(eager=True)
+        )
+        flag = F.col(_FLAG_COL)
+        return (
+            flagged.where(flag).drop(_DIR_COL, _FLAG_COL),
+            flagged.where(~flag).drop(_DIR_COL, _FLAG_COL),
+        )
+
+    def publish(
+        self, op: str, chg: DataFrame, survivors: DataFrame,
+        inserted: DataFrame | None = None, schema=None,
+    ) -> int:
+        """Write the change set, the ``survivors`` (only when a dir was
+        touched: no empty dirs) and ``inserted`` (when given) as
+        overlapping jobs over the pins (§2.6), then publish one rewrite
+        commit pinned to the basis with the append-only auto-rebase:
+        untouched dirs carried, each new dir with fused stats over the
+        tracked columns and its written schema (``uniform`` evidence).
+        ``schema`` (default: the basis scan's) is the table schema."""
+        frames = [survivors] if self.touched else []
+        if inserted is not None:
+            frames.append(inserted)
+        tracked = _tracked_stat_cols(self.manifest)
+        results = _overlap_writes(
+            [lambda: _write_change_set(chg, self.table_path)]
+            + [
+                lambda f=f: _write_data_dir(f, self.table_path, tracked)
+                for f in frames
+            ]
+        )
+        new = results[1:]
+        kept = [d for d in self.manifest["dirs"] if d not in self.touched]
+        return commit(
+            self.spark, None, self.table_path, mode="overwrite",
+            batch_id=self.batch_id, expected_parent=self.basis,
+            store=self.st, _op=op, _dirs=kept + [rel for rel, _ in new],
+            _rebase=True, _extra_manifest=results[0], _dir_stats=dict(new),
+            _written={rel: f.schema for (rel, _), f in zip(new, frames)},
+            _schema=self.scan.schema if schema is None else schema,
+        )
 
 
 def merge_upsert(
@@ -1407,13 +1555,9 @@ def merge_upsert(
     materialization — the source is the DELTA, never the table, so
     this stays proportional to the change at 100 TB.
     """
-    st = _store(store)
-    st.check_path(table_path)
-    basis = current_version(table_path, st)
-    if basis is not None and batch_id is not None:
-        seen = _batch_id_seen(table_path, basis, batch_id, st)
-        if seen is not None:
-            return seen
+    rw = _Rewrite(spark, table_path, store, batch_id, [source], empty_ok=True)
+    if rw.seen is not None:
+        return rw.seen
     # pin ONE evaluation of the source before any of the jobs below
     # read it — a recompute-on-block-loss here fails loudly instead of
     # silently re-rolling a non-deterministic source. The exact row
@@ -1425,13 +1569,7 @@ def merge_upsert(
     # to look up a delta-sized key set (guide §3.1).
     from pyspark.sql import Observation
 
-    dc = None
-    if delete_condition is not None:
-        dc = (
-            F.expr(delete_condition)
-            if isinstance(delete_condition, str)
-            else delete_condition
-        )
+    dc = _as_col(delete_condition)
     _obs = Observation()
     _aggs = [F.count(F.lit(1)).alias("n")]
     if dc is not None:
@@ -1455,13 +1593,11 @@ def merge_upsert(
         source = source.where(~F.coalesce(dc, F.lit(False)))
     if source_meta_cols:
         source = source.drop(*source_meta_cols)
-    if basis is None:
+    if rw.basis is None:
         # empty table: MERGE degenerates to pure insert (tombstones for
         # keys that never existed fold to no-ops); change set is the
         # source itself
-        chg = source.withColumn("_change_type", F.lit("insert")).withColumn(
-            "_change_subtype", F.lit("insert")
-        )
+        chg = _as_changes(source, "insert")
         return commit(
             spark,
             source,
@@ -1469,27 +1605,12 @@ def merge_upsert(
             mode="overwrite",
             batch_id=batch_id,
             expected_parent=None,
-            store=st,
+            store=rw.st,
             _op="merge",
             _extra_manifest=_write_change_set(chg, table_path),
         )
 
-    manifest = _load_manifest(table_path, basis, st)
-    parent_dirs: list[str] = manifest["dirs"]
-    # mergeSchema: an earlier evolve_schema=True merge leaves MIXED-
-    # schema directories (rewritten dirs carry the union, carried-by-
-    # reference dirs the old schema); a plain read would infer from an
-    # arbitrary footer and could silently DROP the evolved column from
-    # this rewrite. The manifest-recorded union schema replaces the
-    # footer-union pass when present (same union, zero schema jobs).
-    parent_scan = _snapshot_reader(spark, manifest, True).parquet(
-        *[os.path.join(table_path, d) for d in parent_dirs]
-    )
-    src_set, par_set = set(source.columns), set(parent_scan.columns)
-    if _DIR_COL in src_set:
-        raise ValueError(
-            f"merge source carries reserved column {_DIR_COL!r}"
-        )
+    src_set, par_set = set(source.columns), set(rw.scan.columns)
     if src_set != par_set and not evolve_schema:
         raise ValueError(
             "merge_upsert source schema differs from the table's "
@@ -1497,26 +1618,24 @@ def merge_upsert(
             f"table-only: {sorted(par_set - src_set)}); pass "
             "evolve_schema=True to evolve, or align the source"
         )
-    # the dir column rides a _metadata pseudo-column, resolvable only
-    # on the direct file scan — attach it BEFORE any evolution union
-    parent = _with_dir_col(parent_scan)
     if src_set != par_set:
         # NULL-pad each side with the other's missing columns so every
-        # directory this commit writes carries the UNION schema.
+        # directory this commit writes carries the UNION schema (the
+        # dir column is already attached: it resolves only on the
+        # direct file scan, never above this union).
         if par_set - src_set:
             source = source.unionByName(
-                parent_scan.limit(0), allowMissingColumns=True
+                rw.scan.limit(0), allowMissingColumns=True
             )
         if src_set - par_set:
-            parent = parent.unionByName(
+            rw.rows = rw.rows.unionByName(
                 source.limit(0), allowMissingColumns=True
             )
     # table-level CHECK constraints apply to the rows this MERGE
     # writes — the final (post-split, post-evolution) source
     _enforce_constraints(
-        source, manifest.get("constraints", {}), table_path
+        source, rw.manifest.get("constraints", {}), table_path
     )
-    tokens = _dir_tokens(parent_dirs)
     # the MERGE precondition (at most one source row per key) makes the
     # projected key set already distinct — no dedup shuffle before the
     # semi/anti joins, whose semantics tolerate duplicates anyway
@@ -1529,72 +1648,45 @@ def merge_upsert(
         if del_keys is not None
         else src_keys
     )
-    # catalog-sized: one dir token per touched directory. The key set
-    # broadcasts (see the pin above), so the TABLE side never shuffles:
-    # one pruned scan per job, delta-sized hash set on every executor.
-    touched_tokens = {
-        r[_DIR_COL]
-        for r in parent.join(_keyside(all_keys), keys, "semi")
-        .select(_DIR_COL)
-        .distinct()
-        .collect()
-    }
-    touched = _resolve_touched(touched_tokens, tokens, table_path)
-    touched_parent = parent.where(
-        F.col(_DIR_COL).isin(list(touched_tokens))
-    )
-    survivors = touched_parent.join(
-        _keyside(all_keys), keys, "anti"
-    ).drop(_DIR_COL)
-    preimages = touched_parent.join(
-        _keyside(src_keys), keys, "semi"
-    ).drop(_DIR_COL)
+    # the key set broadcasts (see the pin above), so the TABLE side
+    # never shuffles: one pruned scan per job, delta-sized hash set on
+    # every executor.
+    touched = rw.find(rw.rows.join(_keyside(all_keys), keys, "semi"))
+    survivors = touched.join(_keyside(all_keys), keys, "anti").drop(_DIR_COL)
+    preimages = touched.join(_keyside(src_keys), keys, "semi").drop(_DIR_COL)
 
-    data_cols = [c for c in source.columns]
+    data_cols = source.columns
     # ONE left join against the (delta-sized, deduped) preimage key set
     # classifies every source row as update_postimage (key existed) or
     # insert — the previous semi + anti pair scanned the source twice
     # for the same boolean
-    _mflag = "_dde_matched"
     pre_keys = preimages.select(*keys).dropDuplicates(keys)
     src_flagged = source.join(
-        _keyside(pre_keys.withColumn(_mflag, F.lit(True))), keys, "left"
+        _keyside(pre_keys.withColumn(_FLAG_COL, F.lit(True))), keys, "left"
     )
-    chg = (
-        preimages.select(*data_cols)
-        .withColumn("_change_type", F.lit("delete"))
-        .withColumn("_change_subtype", F.lit("update_preimage"))
-        .unionByName(
-            src_flagged.select(
-                *data_cols,
-                F.lit("insert").alias("_change_type"),
-                F.when(F.col(_mflag), F.lit("update_postimage"))
-                .otherwise(F.lit("insert"))
-                .alias("_change_subtype"),
-            )
+    chg = _as_changes(
+        preimages.select(*data_cols), "delete", "update_preimage"
+    ).unionByName(
+        src_flagged.select(
+            *data_cols,
+            F.lit("insert").alias("_change_type"),
+            F.when(F.col(_FLAG_COL), F.lit("update_postimage"))
+            .otherwise(F.lit("insert"))
+            .alias("_change_subtype"),
         )
     )
     if del_keys is not None:
-        tombstoned = touched_parent.join(
+        tombstoned = touched.join(
             _keyside(del_keys), keys, "semi"
         ).drop(_DIR_COL)
         chg = chg.unionByName(
-            tombstoned.select(*data_cols)
-            .withColumn("_change_type", F.lit("delete"))
-            .withColumn("_change_subtype", F.lit("delete"))
+            _as_changes(tombstoned.select(*data_cols), "delete")
         )
-    # survivors only when some parent directory actually contained a
-    # matched key — a pure-insert merge (no key matches; the common CDC
-    # upsert-stream case) must not publish an empty survivors dir; and a
-    # pure-tombstone batch has no upsert rows, so no source directory
+    # a pure-tombstone batch has no upsert rows, so no source directory
     # (the upsert count was observed on the pin)
-    frames = [survivors] if touched else []
-    if del_keys is None or (_m["n_upsert"] or 0) > 0:
-        frames.append(source)
-    return _commit_rewrite(
-        spark, table_path, st, "merge", basis, batch_id, chg, frames,
-        [d for d in parent_dirs if d not in touched],
-        _tracked_stat_cols(manifest), source.schema,
+    upserts = del_keys is None or (_m["n_upsert"] or 0) > 0
+    return rw.publish(
+        "merge", chg, survivors, source if upserts else None, source.schema
     )
 
 
@@ -1645,64 +1737,13 @@ def delete_where(
     only the touched directories — the same volume the copy-on-write
     rewrite writes anyway.
     """
-    st = _store(store)
-    st.check_path(table_path)
-    basis = current_version(table_path, st)
-    if basis is None:
-        raise ValueError(f"no committed versions at {table_path!r}")
-    if batch_id is not None:
-        seen = _batch_id_seen(table_path, basis, batch_id, st)
-        if seen is not None:
-            return seen
-    cond = F.expr(condition) if isinstance(condition, str) else condition
-
-    manifest = _load_manifest(table_path, basis, st)
-    parent_dirs: list[str] = manifest["dirs"]
-    # schema reconciliation for the same reason as merge_upsert: a
-    # prior evolve_schema merge leaves mixed-schema dirs, and inferring
-    # from an arbitrary footer could silently drop the evolved column
-    # from the survivor rewrite. The manifest-recorded union schema
-    # replaces the footer-union pass when present.
-    parent = _with_dir_col(
-        _snapshot_reader(spark, manifest, True).parquet(
-            *[os.path.join(table_path, d) for d in parent_dirs]
-        )
-    )
-    tokens = _dir_tokens(parent_dirs)
-    # discovery scan — catalog-sized: one dir token per directory
-    # containing a match
-    touched_tokens = {
-        r[_DIR_COL]
-        for r in parent.where(cond).select(_DIR_COL).distinct().collect()
-    }
-    touched = _resolve_touched(touched_tokens, tokens, table_path)
-    # ONE pinned evaluation of the predicate over the touched dirs;
-    # change set AND survivors derive from it (see docstring).
-    flag = _DIR_COL + "_del"
-    if flag in parent.columns:
-        raise ValueError(
-            f"table carries a column named {flag!r}, which delete_where "
-            "reserves for internal predicate pinning — rename it"
-        )
-    flagged = (
-        parent.where(F.col(_DIR_COL).isin(list(touched_tokens)))
-        .withColumn(flag, F.coalesce(cond, F.lit(False)))
-        .localCheckpoint(eager=True)
-    )
-    deleted = flagged.where(F.col(flag)).drop(_DIR_COL, flag)
-    chg = deleted.withColumn(
-        "_change_type", F.lit("delete")
-    ).withColumn("_change_subtype", F.lit("delete"))
+    rw = _Rewrite(spark, table_path, store, batch_id)
+    if rw.seen is not None:
+        return rw.seen
     # change set and survivors both derive from the SAME pinned
-    # evaluation
-    frames = (
-        [flagged.where(~F.col(flag)).drop(_DIR_COL, flag)] if touched else []
-    )
-    return _commit_rewrite(
-        spark, table_path, st, "delete", basis, batch_id, chg, frames,
-        [d for d in parent_dirs if d not in touched],
-        _tracked_stat_cols(manifest), parent.drop(_DIR_COL).schema,
-    )
+    # evaluation (see docstring)
+    deleted, survivors = rw.split(_as_col(condition))
+    return rw.publish("delete", _as_changes(deleted, "delete"), survivors)
 
 
 def update_where(
@@ -1744,53 +1785,18 @@ def update_where(
     predicates or SET expressions still commit a self-consistent
     version + feed. Basis-pinned via ``expected_parent`` with merge's
     append-only auto-rebase; ``batch_id`` dedups streaming replays."""
-    st = _store(store)
-    st.check_path(table_path)
-    basis = current_version(table_path, st)
-    if basis is None:
-        raise ValueError(f"no committed versions at {table_path!r}")
-    if batch_id is not None:
-        seen = _batch_id_seen(table_path, basis, batch_id, st)
-        if seen is not None:
-            return seen
-    cond = F.expr(condition) if isinstance(condition, str) else condition
-    sets = {
-        c: (F.expr(e) if isinstance(e, str) else e)
-        for c, e in set_exprs.items()
-    }
-
-    manifest = _load_manifest(table_path, basis, st)
-    parent_dirs: list[str] = manifest["dirs"]
-    parent = _with_dir_col(
-        _snapshot_reader(spark, manifest, True).parquet(
-            *[os.path.join(table_path, d) for d in parent_dirs]
-        )
-    )
-    data_cols = [c for c in parent.columns if c != _DIR_COL]
-    unknown = sorted(set(sets) - set(data_cols))
+    rw = _Rewrite(spark, table_path, store, batch_id)
+    if rw.seen is not None:
+        return rw.seen
+    sets = {c: _as_col(e) for c, e in set_exprs.items()}
+    types = {f.name: f.dataType for f in rw.scan.schema.fields}
+    unknown = sorted(set(sets) - set(types))
     if unknown:
         raise ValueError(
             f"update_where SET columns {unknown} are not table columns "
-            f"(have: {sorted(data_cols)}); UPDATE never evolves schema"
+            f"(have: {sorted(types)}); UPDATE never evolves schema"
         )
-    tokens = _dir_tokens(parent_dirs)
-    touched_tokens = {
-        r[_DIR_COL]
-        for r in parent.where(cond).select(_DIR_COL).distinct().collect()
-    }
-    touched = _resolve_touched(touched_tokens, tokens, table_path)
-    flag = _DIR_COL + "_upd"
-    if flag in parent.columns:
-        raise ValueError(
-            f"table carries a column named {flag!r}, which update_where "
-            "reserves for internal predicate pinning — rename it"
-        )
-    flagged = (
-        parent.where(F.col(_DIR_COL).isin(list(touched_tokens)))
-        .withColumn(flag, F.coalesce(cond, F.lit(False)))
-        .localCheckpoint(eager=True)
-    )
-    pre = flagged.where(F.col(flag)).drop(_DIR_COL, flag)
+    pre, kept = rw.split(_as_col(condition))
     # ONE pinned evaluation of the SET expressions — the postimage
     # feeds BOTH the change set and the rewritten data. Table-level
     # CHECK constraints apply to the rows this UPDATE writes; their
@@ -1801,150 +1807,28 @@ def update_where(
     # directory must hold exactly the table schema the manifest records
     # — an uncast ``sh * 1.5`` on a SMALLINT column would write a
     # DECIMAL directory that a recorded-schema read then misreads.
-    _cons = manifest.get("constraints", {})
-    _cnames = list(_cons)
-    types = {f.name: f.dataType for f in parent.schema.fields}
+    cons = rw.manifest.get("constraints", {})
+    cnames = list(cons)
     post = pre.select(
         *[
             (sets[c].cast(types[c]) if c in sets else F.col(c)).alias(c)
-            for c in data_cols
+            for c in rw.scan.columns
         ]
     )
-    if _cons:
+    if cons:
         from pyspark.sql import Observation
 
-        _cobs = Observation()
-        post = post.observe(_cobs, *_constraint_aggs(_cnames, _cons))
+        cobs = Observation()
+        post = post.observe(cobs, *_constraint_aggs(cnames, cons))
     post = post.localCheckpoint(eager=True)
-    if _cons:
-        _raise_violations(_cobs.get, _cnames, table_path)
-    chg = (
-        pre.withColumn("_change_type", F.lit("delete"))
-        .withColumn("_change_subtype", F.lit("update_preimage"))
-        .unionByName(
-            post.withColumn("_change_type", F.lit("insert")).withColumn(
-                "_change_subtype", F.lit("update_postimage")
-            )
-        )
+    if cons:
+        _raise_violations(cobs.get, cnames, table_path)
+    chg = _as_changes(pre, "delete", "update_preimage").unionByName(
+        _as_changes(post, "insert", "update_postimage")
     )
     # change set and rewritten data both derive from the SAME pinned
     # pre/post evaluations
-    frames = (
-        [flagged.where(~F.col(flag)).drop(_DIR_COL, flag).unionByName(post)]
-        if touched
-        else []
-    )
-    return _commit_rewrite(
-        spark, table_path, st, "update", basis, batch_id, chg, frames,
-        [d for d in parent_dirs if d not in touched],
-        _tracked_stat_cols(manifest), parent.drop(_DIR_COL).schema,
-    )
-
-
-def _write_change_set(chg: DataFrame, table_path: str) -> dict:
-    """Persist a commit's row-level change set under ``_changes/`` —
-    OUTSIDE the data root so vacuum's unreferenced-dir sweep never
-    confuses CDC files with table data (Delta keeps _change_data the
-    same way). Returns the manifest entries naming it: the
-    table-relative ``change_dir`` and its written ``change_schema``
-    (one frame, one write job — so ``read_changes`` can read it with
-    that schema instead of inferring it from a footer)."""
-    chg_dir = os.path.join(
-        table_path, _CHANGES_DIR, f"g{uuid.uuid4().hex[:12]}"
-    )
-    chg.write.parquet(chg_dir)
-    return {
-        "change_dir": os.path.relpath(chg_dir, table_path),
-        "change_schema": _as_nullable(chg.schema).jsonValue(),
-    }
-
-
-def _commit_rewrite(
-    spark: SparkSession,
-    table_path: str,
-    st: ManifestStore,
-    op: str,
-    basis: int,
-    batch_id: int | None,
-    chg: DataFrame,
-    frames: list[DataFrame],
-    kept: list[str],
-    tracked: list[str],
-    schema,
-) -> int:
-    """Shared tail of the copy-on-write verbs: write the change set and
-    each frame of ``frames`` to a fresh data directory — independent
-    jobs over already-materialized pins, so they overlap (§2.6) — then
-    publish one rewrite commit pinned to ``basis`` with the append-only
-    auto-rebase. The new dirs follow ``kept`` in ``frames`` order, each
-    with its fused stats over ``tracked`` and its written schema (the
-    ``uniform`` evidence); ``schema`` is the table schema the rewrite
-    claims."""
-    results = _overlap_writes(
-        [lambda: _write_change_set(chg, table_path)]
-        + [lambda f=f: _write_data_dir(f, table_path, tracked) for f in frames]
-    )
-    new = results[1:]
-    return commit(
-        spark,
-        None,
-        table_path,
-        mode="overwrite",
-        batch_id=batch_id,
-        expected_parent=basis,
-        store=st,
-        _op=op,
-        _dirs=kept + [rel for rel, _ in new],
-        _rebase=True,
-        _extra_manifest=results[0],
-        _dir_stats=dict(new),
-        _written={rel: f.schema for (rel, _), f in zip(new, frames)},
-        _schema=schema,
-    )
-
-
-# A rewrite commit's output writes (change set / survivors / merge
-# source) are mutually independent jobs over frames that derive from
-# the SAME already-materialized pins, so the driver may submit them
-# concurrently and let the scheduler back-fill each write's task tail
-# with the next write's tasks (guide §2.6 — actions are sequential
-# only because the driver calls them sequentially). This is the warm
-# x128 overlap case, NOT the rejected cold-audit-read case (r13): the
-# inputs are pinned blocks plus just-scanned parquet, and each thunk
-# is one write job, so the driver-side analysis contention that made
-# cold snapshot reads 2x slower does not apply. Set
-# SPARK_GRAFT_OVERLAP_COMMIT_WRITES=0 to force sequential writes.
-_OVERLAP_COMMIT_WRITES = os.environ.get(
-    "SPARK_GRAFT_OVERLAP_COMMIT_WRITES", "1"
-) not in ("0", "false", "False")
-
-
-def _overlap_writes(thunks):
-    """Run independent write thunks concurrently and return their
-    results in input order. On failure, every sibling is waited for
-    first (none is left writing behind the caller's back); then the
-    EARLIEST failure in input order is raised, with each later
-    failure attached to it as a note. Sequential mode (one thunk, or
-    the overlap switched off) stops at the first failure and never
-    starts the thunks after it. Either way nothing is published: a
-    sibling write that landed is an orphan directory the next vacuum
-    sweeps — the crash-between-write-and-publish case the
-    manifest-written-last protocol already covers."""
-    if not _OVERLAP_COMMIT_WRITES or len(thunks) <= 1:
-        return [t() for t in thunks]
-    from concurrent.futures import ThreadPoolExecutor
-
-    # leaving the block waits for every submitted write
-    with ThreadPoolExecutor(max_workers=min(3, len(thunks))) as pool:
-        futs = [pool.submit(t) for t in thunks]
-    errors = [f.exception() for f in futs if f.exception() is not None]
-    if errors:
-        for other in errors[1:]:
-            errors[0].add_note(
-                f"a sibling write also failed: {type(other).__name__}: {other}"
-            )
-        raise errors[0]
-    return [f.result() for f in futs]
+    return rw.publish("update", chg, kept.unionByName(post))
 
 
 def replace_where(
@@ -1993,18 +1877,11 @@ def replace_where(
     a key prefix (io_utils.py:37, figure_eight_functions.py:180); this
     is that verb with transactional semantics.
     """
-    st = _store(store)
-    st.check_path(table_path)
-    cond = F.expr(condition) if isinstance(condition, str) else condition
-    if _DIR_COL in df.columns:
-        raise ValueError(
-            f"replacement frame carries reserved column {_DIR_COL!r}"
-        )
-    basis = current_version(table_path, st)
-    manifest = (
-        _load_manifest(table_path, basis, st) if basis is not None else None
-    )
-    cons = manifest.get("constraints", {}) if manifest else {}
+    cond = _as_col(condition)
+    rw = _Rewrite(spark, table_path, store, batch_id, [df], empty_ok=True)
+    if rw.seen is not None:
+        return rw.seen
+    cons = rw.manifest.get("constraints", {}) if rw.basis is not None else {}
     cnames = list(cons)
     # ONE pinned evaluation: validation + constraints + write + CDC.
     # The predicate-validation count, the emptiness count and the
@@ -2027,24 +1904,14 @@ def replace_where(
             "you really mean to insert rows outside the replaced "
             "scope"
         )
-    if basis is None:
+    if rw.basis is None:
         # initial load: nothing to replace, plain v0 overwrite
         return commit(
             spark, df, table_path, mode="overwrite", batch_id=batch_id,
-            store=st, _op="replace_where",
+            store=rw.st, _op="replace_where",
         )
-    if batch_id is not None:
-        seen = _batch_id_seen(table_path, basis, batch_id, st)
-        if seen is not None:
-            return seen
     _raise_violations(_m, cnames, table_path)
-    parent_dirs: list[str] = manifest["dirs"]
-    parent = _with_dir_col(
-        _snapshot_reader(spark, manifest, True).parquet(
-            *[os.path.join(table_path, d) for d in parent_dirs]
-        )
-    )
-    par_cols = [c for c in parent.columns if c != _DIR_COL]
+    par_cols = rw.scan.columns
     if set(df.columns) != set(par_cols):
         raise ValueError(
             "replace_where frame schema differs from the table's "
@@ -2054,7 +1921,9 @@ def replace_where(
     # the replacement rows land in their own directory: a column type
     # other than the table's would drift that directory from the
     # manifest schema
-    par_types = {f.name: _as_nullable(f.dataType) for f in parent.schema.fields}
+    par_types = {
+        f.name: _as_nullable(f.dataType) for f in rw.scan.schema.fields
+    }
     mistyped = {
         f.name: (f.dataType.simpleString(), par_types[f.name].simpleString())
         for f in df.schema.fields
@@ -2065,49 +1934,15 @@ def replace_where(
             "replace_where frame column types differ from the table's "
             f"(column -> (frame, table)): {mistyped}; cast the frame"
         )
-    tokens = _dir_tokens(parent_dirs)
-    touched_tokens = {
-        r[_DIR_COL]
-        for r in parent.where(cond).select(_DIR_COL).distinct().collect()
-    }
-    touched = _resolve_touched(touched_tokens, tokens, table_path)
-    flag = _DIR_COL + "_del"
-    if flag in parent.columns:
-        raise ValueError(
-            f"table carries a column named {flag!r}, which "
-            "replace_where reserves for internal predicate pinning — "
-            "rename it"
-        )
     # ONE pinned evaluation of the predicate over the touched dirs
     # (delete_where's rule): change set and survivors derive from it
-    flagged = (
-        parent.where(F.col(_DIR_COL).isin(list(touched_tokens)))
-        .withColumn(flag, F.coalesce(cond, F.lit(False)))
-        .localCheckpoint(eager=True)
+    removed, survivors = rw.split(cond)
+    chg = _as_changes(removed, "delete").unionByName(
+        _as_changes(df.select(*par_cols), "insert")
     )
-    removed = flagged.where(F.col(flag)).drop(_DIR_COL, flag)
-    chg = (
-        removed.select(*par_cols)
-        .withColumn("_change_type", F.lit("delete"))
-        .withColumn("_change_subtype", F.lit("delete"))
-        .unionByName(
-            df.select(*par_cols)
-            .withColumn("_change_type", F.lit("insert"))
-            .withColumn("_change_subtype", F.lit("insert"))
-        )
-    )
-    # change set, survivors and the replacement frame all derive from
-    # the two pins
-    frames = (
-        [flagged.where(~F.col(flag)).drop(_DIR_COL, flag)] if touched else []
-    )
-    if _m["_n"] > 0:  # an empty reload = scoped delete (observed count)
-        frames.append(df.select(*par_cols))
-    return _commit_rewrite(
-        spark, table_path, st, "replace_where", basis, batch_id, chg,
-        frames, [d for d in parent_dirs if d not in touched],
-        _tracked_stat_cols(manifest), parent.drop(_DIR_COL).schema,
-    )
+    # an empty reload is a scoped delete (observed count)
+    inserted = df.select(*par_cols) if _m["_n"] > 0 else None
+    return rw.publish("replace_where", chg, survivors, inserted)
 
 
 def version_at_timestamp(
@@ -2132,9 +1967,7 @@ def version_at_timestamp(
     st = _store(store)
     st.check_path(table_path)
     target = _to_epoch_us(timestamp)
-    latest = current_version(table_path, st)
-    if latest is None:
-        raise ValueError(f"no committed versions at {table_path!r}")
+    latest = _resolve_version(table_path, st)
     best: int | None = None
     earliest_ts: int | None = None
     head_ts = 0
@@ -2212,16 +2045,7 @@ def read_snapshot(
     ``version``)."""
     st = _store(store)
     st.check_path(table_path)
-    if timestamp is not None:
-        if version is not None:
-            raise ValueError(
-                "pass either version or timestamp, not both"
-            )
-        version = version_at_timestamp(table_path, timestamp, st)
-    if version is None:
-        version = current_version(table_path, st)
-        if version is None:
-            raise ValueError(f"no committed versions at {table_path!r}")
+    version = _resolve_version(table_path, st, version, timestamp)
     m = _load_manifest(table_path, version, st)
     if not m["dirs"]:
         raise ValueError(f"version {version} references no data")
@@ -2306,10 +2130,7 @@ def read_changes(
     piece at all."""
     st = _store(store)
     st.check_path(table_path)
-    if to_version is None:
-        to_version = current_version(table_path, st)
-        if to_version is None:
-            raise ValueError(f"no committed versions at {table_path!r}")
+    to_version = _resolve_version(table_path, st, to_version)
     if not 0 <= from_version <= to_version:
         raise ValueError(
             f"need 0 <= from_version <= to_version, got "
@@ -2330,8 +2151,7 @@ def read_changes(
         )
         return (
             reader.parquet(*[os.path.join(table_path, d) for d in dirs])
-            .withColumn("_change_type", F.lit(change))
-            .withColumn("_change_subtype", F.lit(change))
+            .transform(_as_changes, change)
             .withColumn("_commit_version", F.lit(v).cast("long"))
         )
 
@@ -2371,8 +2191,7 @@ def read_changes(
         return (
             read_snapshot(spark, table_path, to_version, store=st)
             .limit(0)
-            .withColumn("_change_type", F.lit("insert"))
-            .withColumn("_change_subtype", F.lit("insert"))
+            .transform(_as_changes, "insert")
             .withColumn("_commit_version", F.lit(0).cast("long"))
         )
     out = pieces[0]
@@ -2418,9 +2237,7 @@ def optimize_table(
     to ceil(bytes / target) tasks."""
     st = _store(store)
     st.check_path(table_path)
-    basis = current_version(table_path, st)
-    if basis is None:
-        raise ValueError(f"no committed versions at {table_path!r}")
+    basis = _resolve_version(table_path, st)
     # merge_schema: OPTIMIZE is the documented remedy for the mixed-
     # schema dirs an evolve_schema merge leaves behind — reading with
     # the footer-union pass makes the rewrite carry the evolved UNION
@@ -2434,15 +2251,7 @@ def optimize_table(
     # keep the parent's data-skipping columns tracked through the
     # rewrite (one dir now, so the range is table-wide — honest, just
     # no longer selective until appends re-fragment the key space)
-    tracked = sorted(
-        {
-            c
-            for s in _load_manifest(table_path, basis, st)
-            .get("stats", {})
-            .values()
-            for c in s
-        }
-    )
+    tracked = _tracked_stat_cols(_load_manifest(table_path, basis, st))
     if zorder_by:
         # OPTIMIZE ZORDER BY (Delta/Iceberg's multi-dimensional
         # clustering, at this log's DIRECTORY granularity): interleave
@@ -2537,22 +2346,13 @@ def optimize_table(
         # every bucket's [min, max] in ONE grouped pass over the
         # partition-discovered write (vs one read-back job per bucket
         # — at real bucket counts that was O(buckets) full re-reads)
-        aggs = []
-        for c in stats_cols:
-            aggs.append(F.min(c).alias(f"_lo_{c}"))
-            aggs.append(F.max(c).alias(f"_hi_{c}"))
-        by_bucket: dict[str, dict] = {}
-        for r in spark.read.parquet(commit_dir).groupBy("_zb").agg(
-            *aggs
-        ).collect():
-            rng: dict[str, list] = {}
-            for c in stats_cols:
-                lo, hi = r[f"_lo_{c}"], r[f"_hi_{c}"]
-                if isinstance(lo, (int, float, str, bool)) and isinstance(
-                    hi, (int, float, str, bool)
-                ):
-                    rng[c] = [lo, hi]
-            by_bucket[f"_zb={r['_zb']}"] = rng
+        by_bucket = {
+            f"_zb={r['_zb']}": _ranges_of(r, stats_cols)
+            for r in spark.read.parquet(commit_dir)
+            .groupBy("_zb")
+            .agg(*_range_aggs(stats_cols))
+            .collect()
+        }
         dir_stats = {
             f"{rel}/{s}": by_bucket.get(s, {}) for s in subs
         }
@@ -2625,10 +2425,7 @@ def clone_table(
     st = _store(store)
     st.check_path(src_path)
     st.check_path(dst_path)
-    if version is None:
-        version = current_version(src_path, st)
-        if version is None:
-            raise ValueError(f"no committed versions at {src_path!r}")
+    version = _resolve_version(src_path, st, version)
     m = _load_manifest(src_path, version, st)
     root = (
         os.path.abspath(src_path) if "://" not in src_path else src_path
@@ -2720,15 +2517,10 @@ def restore_table(
     discarded from history's new tip."""
     st = _store(store)
     st.check_path(table_path)
-    if timestamp is not None:
-        if version is not None:
-            raise ValueError("pass either version or timestamp, not both")
-        version = version_at_timestamp(table_path, timestamp, st)
-    if version is None:
+    if version is None and timestamp is None:
         raise ValueError("restore_table needs a version or timestamp")
-    basis = current_version(table_path, st)
-    if basis is None:
-        raise ValueError(f"no committed versions at {table_path!r}")
+    version = _resolve_version(table_path, st, version, timestamp)
+    basis = _resolve_version(table_path, st)
     m = _load_manifest(table_path, version, st)
     missing = _missing_data_dirs(table_path, m["dirs"], st)
     if missing:

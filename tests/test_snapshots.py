@@ -1562,23 +1562,37 @@ def test_merge_schema_contract_and_evolution(spark, tmp_path):
 
 
 def test_crud_reserved_dir_column_raises(spark, tmp_path):
-    """A user column colliding with the internal directory-attribution
-    column fails loudly in both merge and delete instead of being
-    silently clobbered (which would corrupt touched-dir detection and
-    the change set)."""
-    docs = (
-        load_table(spark, SF_SMOKE, "documents")
-        .select("doc_id", "source")
-        .withColumn(snap._DIR_COL, F.lit("boom"))
-    )
-    t = str(tmp_path / "tbl")
-    snap.commit(spark, docs.where(F.col("doc_id") < 10), t)
-    with pytest.raises(ValueError, match=snap._DIR_COL):
-        snap.delete_where(spark, t, "doc_id = 1")
-    with pytest.raises(ValueError, match=snap._DIR_COL):
-        snap.merge_upsert(
-            spark, docs.where(F.col("doc_id") < 2), t, keys=["doc_id"]
+    """A reserved internal column, in the table or in an incoming frame,
+    fails loudly in every copy-on-write verb (and in a merge into an
+    empty table) before any Spark job runs and without publishing a
+    version, instead of being silently clobbered (which would corrupt
+    touched-dir detection and the change set)."""
+    for col in (snap._DIR_COL, snap._FLAG_COL):
+        docs = (
+            load_table(spark, SF_SMOKE, "documents")
+            .select("doc_id", "source")
+            .withColumn(col, F.lit("boom"))
         )
+        t = str(tmp_path / col)
+        empty = str(tmp_path / f"empty{col}")
+        snap.commit(spark, docs.where(F.col("doc_id") < 10), t)
+        src = docs.where(F.col("doc_id") < 2)
+        verbs = [
+            lambda: snap.delete_where(spark, t, "doc_id = 1"),
+            lambda: snap.update_where(
+                spark, t, "doc_id = 1", {"source": "'x'"}
+            ),
+            lambda: snap.merge_upsert(spark, src, t, keys=["doc_id"]),
+            lambda: snap.replace_where(spark, src, t, "doc_id < 2"),
+            lambda: snap.merge_upsert(spark, src, empty, keys=["doc_id"]),
+        ]
+        for verb in verbs:
+            before = _jobs(spark)
+            with pytest.raises(ValueError, match=col):
+                verb()
+            assert _jobs(spark) == before, col
+        assert snap.current_version(t) == 0
+        assert snap.current_version(empty) is None
 
 
 def test_read_changes_stats_pruned(spark, tmp_path):
@@ -3879,16 +3893,11 @@ def test_overlap_writes_waits_for_siblings_and_raises_earliest():
     def fast_fail():
         raise KeyError("first in order")
 
-    prev = snap._OVERLAP_COMMIT_WRITES
-    snap._OVERLAP_COMMIT_WRITES = True
-    try:
-        with pytest.raises(KeyError) as ei:
-            snap._overlap_writes([lambda: 1, fast_fail, slow_fail])
-        assert done.is_set()
-        assert any("late sibling" in n for n in ei.value.__notes__)
-        assert snap._overlap_writes([lambda: 1, lambda: 2]) == [1, 2]
-    finally:
-        snap._OVERLAP_COMMIT_WRITES = prev
+    with pytest.raises(KeyError) as ei:
+        snap._overlap_writes([lambda: 1, fast_fail, slow_fail])
+    assert done.is_set()
+    assert any("late sibling" in n for n in ei.value.__notes__)
+    assert snap._overlap_writes([lambda: 1, lambda: 2]) == [1, 2]
 
 
 def test_failed_rewrite_write_publishes_nothing_and_vacuum_sweeps(
@@ -3941,3 +3950,47 @@ def test_optimize_sizing_matches_metadata_aggregate(spark, tmp_path):
     )
     assert (n_files, total) == (old[0], old[1])
     assert n_files == 6
+
+
+def test_rewrite_verbs_job_budget(spark, tmp_path):
+    """Each copy-on-write verb on a 4-directory table runs at most its
+    pinned number of Spark jobs, so a refactor cannot add a job
+    silently."""
+    t = str(tmp_path / "tbl")
+    base = spark.range(2000).select(
+        F.col("id").alias("k"),
+        (F.col("id") * 7 % 1000).alias("cents"),
+        F.when(F.col("id") % 2 == 0, "a").otherwise("b").alias("tag"),
+    )
+    for i in range(4):
+        snap.commit(spark, base.where(F.col("k") % 4 == i), t,
+                    stats_cols=["k"])
+    upserts = base.where("k < 50").unionByName(
+        spark.range(2000, 2050).select(
+            F.col("id").alias("k"), F.lit(5).cast("long").alias("cents"),
+            F.lit("n").alias("tag"),
+        )
+    )
+    cdc = base.where("k BETWEEN 100 AND 140").withColumn(
+        "op", F.when(F.col("k") % 2 == 0, "D").otherwise("U")
+    )
+    reload = base.where("k BETWEEN 500 AND 520")
+    budget = [
+        ("merge", 11, lambda: snap.merge_upsert(
+            spark, upserts, t, keys=["k"])),
+        ("merge with tombstones", 13, lambda: snap.merge_upsert(
+            spark, cdc, t, keys=["k"], delete_condition="op = 'D'",
+            source_meta_cols=["op"])),
+        ("update", 6, lambda: snap.update_where(
+            spark, t, "k < 30", {"cents": "cents + 500"})),
+        ("delete", 5, lambda: snap.delete_where(spark, t, "k > 1900")),
+        ("delete matching nothing", 2, lambda: snap.delete_where(
+            spark, t, "k < 0")),
+        ("replace_where", 7, lambda: snap.replace_where(
+            spark, reload, t, "k BETWEEN 500 AND 520")),
+    ]
+    for name, most, verb in budget:
+        before = _jobs(spark)
+        verb()
+        assert _jobs(spark) - before <= most, name
+    assert snap.current_version(t) == 3 + len(budget)
