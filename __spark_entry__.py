@@ -31,45 +31,38 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # The driver oracle-checks the first 50 registry entries per round.
-# Current rotation: the most recently changed code leads — the snapshot-
-# lifecycle queries (MERGE/DELETE/UPDATE feeds, schema-evolution merge,
-# clone/restore, constraints, vacuum, replace_where, Z-order), whose
-# four copy-on-write verbs now share one skeleton, and the round-14
-# rewrites the driver never re-verified (x76, x103, x199). Then the
-# round-13 additions that never had a driver verdict, then the oldest
-# round-9 verdicts (d35–d49, x02–x04; d48 is a change-feed MERGE). The
-# window drops x204–x211 (driver-correct in the round-14 window; no
-# snapshot code); they and the ~28 r9-stale rows behind them are next.
+# The window is rebuilt each round from the committed correctness
+# verdicts (CORRECTNESS_r*.json): first the queries whose code changed since
+# their last verdict, then the queries whose last verdict is oldest,
+# in registry order. This round: the five queries that call
+# merge_upsert or replace_where (their schema checks moved before the
+# source pin), then the 28 queries last checked in round 9, then
+# round-10 verdicts in registry order up to 50. Round 14 checked
+# d35–d49, x02–x04 and x202–x233 (50/50 correct); they leave the window.
 _CHECK_FIRST = [
-    # snapshot lifecycle (the copy-on-write verbs share one skeleton)
-    "x151_merge_feed_view", "x162_delete_feed_view",
-    "x167_schema_evolution_merge", "x185_lifecycle_clone_restore",
-    "x200_update_feed_view", "x202_constraint_lifecycle",
-    "x217_vacuum_lifecycle", "x218_replace_where_lifecycle",
-    "x230_zorder_lifecycle",
-    # round-14 rewrites never re-verified by the driver
-    "x76_quality_gate_corpus", "x103_zorder_skipping",
-    "x199_fd_histogram",
-    # never driver-checked (round-13 additions)
-    "x203_stream_rate_feed",
-    "x212_theil_index", "x213_activity_streaks",
-    "x214_funnel_latency", "x215_cuped_adjustment",
-    "x216_runs_test", "x219_item_similarity",
-    "x220_anova_f", "x221_forecast_backtest",
-    "x222_single_source_risk", "x223_interarrival_dispersion",
-    "x224_jackknife_loo", "x225_wilcoxon_signed_rank",
-    "x226_holt_linear", "x227_neyman_allocation",
-    "x228_js_divergence", "x229_info_gain",
-    "x231_spearman_rank_corr",
-    "x232_dow_seasonality", "x233_capture_recapture",
-    # oldest driver verdicts (round 9)
-    "d35_approx_distinct", "d36_exists_subquery",
-    "d37_scalar_subquery", "d38_ntile_percent_rank",
-    "d39_array_hof", "d40_except_all", "d41_moment_stats",
-    "d42_snapshot_diff", "d43_quantiles", "d44_null_semantics",
-    "d45_share_of_total", "d46_try_cast", "d47_incremental_agg",
-    "d48_apply_changes", "d49_revenue_rollup",
-    "x02_quality_features", "x03_lang_id", "x04_exact_dedup",
+    # merge_upsert / replace_where callers
+    "x151_merge_feed_view", "x167_schema_evolution_merge",
+    "x185_lifecycle_clone_restore", "x196_tombstone_merge_feed",
+    "x218_replace_where_lifecycle",
+    # last verdict in round 9
+    "x05_minhash_signatures", "x06_minhash_lsh_pairs", "x07_ngram_jaccard",
+    "x08_simhash", "x09_cosine_topk", "x10_embedding_neardup",
+    "x46_df_heavy_hitters", "x47_bigram_pmi", "x48_inverted_index",
+    "x49_source_overlap", "x50_ann_recall", "x51_cluster_representatives",
+    "x52_mixture_plan", "x53_incremental_lsh", "x54_stream_screen",
+    "x55_variant_extract", "x56_dup_ngram_coverage",
+    "x140_session_stats", "x141_psi_drift", "x142_time_weighted_avg",
+    "x143_ship_latency_quantiles", "x144_failure_rate_ci",
+    "x145_cdc_incremental_view", "x146_skyline_frontier",
+    "x147_gini_concentration", "x148_proration_hamilton",
+    "x149_fuzzy_vocab_pairs", "x150_benford_digits",
+    # last verdict in round 10, registry order
+    "x11_srp_lsh_topk", "x12_crop_grid", "x13_overlap_vote",
+    "x14_ivf_topk", "x15_json_extract", "x16_asof_join", "x17_sessionize",
+    "x19_kmeans_centroids", "x18_winnow_fingerprint", "x20_interval_join",
+    "x21_dup_clusters", "x22_tfidf_topk", "x23_pattern_scrub",
+    "x24_stratified_sample", "x25_vocab_topk", "x26_bm25",
+    "x27_corpus_build",
 ]
 
 

@@ -20,7 +20,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from deepcell_data_engineering_spark.session import get_spark  # noqa: E402
+from deepcell_data_engineering_spark.plans.profile import (  # noqa: E402
+    median,
+    open_session,
+)
 
 
 def main() -> None:
@@ -32,30 +35,13 @@ def main() -> None:
     import __spark_entry__ as entrymod
 
     qmap = entrymod.queries()
-    spark = get_spark(app_name="dde-spark-bench", master=f"local[{cpus}]")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # Warm the JVM and the per-table file listing + parquet footer caches so
-    # the first query touching each table doesn't absorb catalog cold-start:
-    # on a real cluster the metastore/file-index cache is durably warm, and
-    # attributing one table's listing to whichever query happens to run
-    # first misprices that query.
-    from deepcell_data_engineering_spark.catalog import TABLE_NAMES, load_table
-
-    for t in TABLE_NAMES:
-        load_table(spark, sf_dir, t).limit(1).collect()
+    spark = open_session("dde-spark-bench", sf_dir, master=f"local[{cpus}]")
     first = sorted(qmap)[0]
     qmap[first](spark, sf_dir).limit(1).collect()
 
     # median of n runs per query: round-over-round deltas shouldn't be
     # single-sample noise (GC pause, first-touch page faults)
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-
-    def median(xs: list[float]) -> float:
-        s = sorted(xs)
-        mid = len(s) // 2
-        return s[mid] if len(s) % 2 else (s[mid - 1] + s[mid]) / 2
-
     samples: dict[str, list[float]] = {name: [] for name in qmap}
     for _ in range(runs):
         for name in sorted(qmap):
@@ -105,6 +91,10 @@ def main() -> None:
             total_min / max(len(timings_min), 1), 4
         ),
         "runs_per_query": runs,
+        # the layout the numbers were taken on: totals from different
+        # core counts are not comparable
+        "cpus": int(cpus) if cpus.isdigit() else cpus,
+        "default_parallelism": spark.sparkContext.defaultParallelism,
         "p95_query_sec": round(
             sorted(timings.values())[max(0, int(len(timings) * 0.95) - 1)], 4
         )

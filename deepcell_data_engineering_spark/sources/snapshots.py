@@ -1558,6 +1558,17 @@ def merge_upsert(
     rw = _Rewrite(spark, table_path, store, batch_id, [source], empty_ok=True)
     if rw.seen is not None:
         return rw.seen
+    # the schema contract needs no job (the basis schema is the
+    # manifest's), so it runs before the pin below
+    src_set = set(source.columns) - set(source_meta_cols or [])
+    par_set = set(rw.scan.columns) if rw.basis is not None else src_set
+    if src_set != par_set and not evolve_schema:
+        raise ValueError(
+            "merge_upsert source schema differs from the table's "
+            f"(source-only: {sorted(src_set - par_set)}, "
+            f"table-only: {sorted(par_set - src_set)}); pass "
+            "evolve_schema=True to evolve, or align the source"
+        )
     # pin ONE evaluation of the source before any of the jobs below
     # read it — a recompute-on-block-loss here fails loudly instead of
     # silently re-rolling a non-deterministic source. The exact row
@@ -1610,14 +1621,6 @@ def merge_upsert(
             _extra_manifest=_write_change_set(chg, table_path),
         )
 
-    src_set, par_set = set(source.columns), set(rw.scan.columns)
-    if src_set != par_set and not evolve_schema:
-        raise ValueError(
-            "merge_upsert source schema differs from the table's "
-            f"(source-only: {sorted(src_set - par_set)}, "
-            f"table-only: {sorted(par_set - src_set)}); pass "
-            "evolve_schema=True to evolve, or align the source"
-        )
     if src_set != par_set:
         # NULL-pad each side with the other's missing columns so every
         # directory this commit writes carries the UNION schema (the
@@ -1881,7 +1884,35 @@ def replace_where(
     rw = _Rewrite(spark, table_path, store, batch_id, [df], empty_ok=True)
     if rw.seen is not None:
         return rw.seen
-    cons = rw.manifest.get("constraints", {}) if rw.basis is not None else {}
+    cons = {}
+    if rw.basis is not None:
+        cons = rw.manifest.get("constraints", {})
+        par_cols = rw.scan.columns
+        if set(df.columns) != set(par_cols):
+            raise ValueError(
+                "replace_where frame schema differs from the table's "
+                f"(frame-only: {sorted(set(df.columns) - set(par_cols))}, "
+                f"table-only: {sorted(set(par_cols) - set(df.columns))})"
+            )
+        # the replacement rows land in their own directory: a column
+        # type other than the table's would drift that directory from
+        # the manifest schema. Both checks read schemas only (the
+        # basis schema is the manifest's): no job runs before them.
+        par_types = {
+            f.name: _as_nullable(f.dataType) for f in rw.scan.schema.fields
+        }
+        mistyped = {
+            f.name: (
+                f.dataType.simpleString(), par_types[f.name].simpleString()
+            )
+            for f in df.schema.fields
+            if _as_nullable(f.dataType) != par_types[f.name]
+        }
+        if mistyped:
+            raise ValueError(
+                "replace_where frame column types differ from the table's "
+                f"(column -> (frame, table)): {mistyped}; cast the frame"
+            )
     cnames = list(cons)
     # ONE pinned evaluation: validation + constraints + write + CDC.
     # The predicate-validation count, the emptiness count and the
@@ -1911,29 +1942,6 @@ def replace_where(
             store=rw.st, _op="replace_where",
         )
     _raise_violations(_m, cnames, table_path)
-    par_cols = rw.scan.columns
-    if set(df.columns) != set(par_cols):
-        raise ValueError(
-            "replace_where frame schema differs from the table's "
-            f"(frame-only: {sorted(set(df.columns) - set(par_cols))}, "
-            f"table-only: {sorted(set(par_cols) - set(df.columns))})"
-        )
-    # the replacement rows land in their own directory: a column type
-    # other than the table's would drift that directory from the
-    # manifest schema
-    par_types = {
-        f.name: _as_nullable(f.dataType) for f in rw.scan.schema.fields
-    }
-    mistyped = {
-        f.name: (f.dataType.simpleString(), par_types[f.name].simpleString())
-        for f in df.schema.fields
-        if _as_nullable(f.dataType) != par_types[f.name]
-    }
-    if mistyped:
-        raise ValueError(
-            "replace_where frame column types differ from the table's "
-            f"(column -> (frame, table)): {mistyped}; cast the frame"
-        )
     # ONE pinned evaluation of the predicate over the touched dirs
     # (delete_where's rule): change set and survivors derive from it
     removed, survivors = rw.split(cond)

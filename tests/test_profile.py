@@ -1,0 +1,74 @@
+"""The per-query profiler (plans/profile.py) and its command line
+(tools/profile_queries.py) at sf0.001."""
+
+import importlib.util
+import os
+
+import pytest
+
+from conftest import SF_SMOKE
+from deepcell_data_engineering_spark.plans import profile as prof
+from deepcell_data_engineering_spark.relational import QUERIES
+
+TOOL = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "tools",
+    "profile_queries.py",
+)
+
+
+def _cli():
+    spec = importlib.util.spec_from_file_location("profile_queries", TOOL)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_median_is_true_median():
+    assert prof.median([1, 2, 3, 4]) == 2.5
+    assert prof.median([3, 1, 2]) == 2
+
+
+def test_profile_record_splits_build_from_collect(spark):
+    d11 = prof.profile(
+        spark, "d11_star_join_agg", QUERIES["d11_star_join_agg"].build,
+        SF_SMOKE, 3,
+    )
+    assert d11["build_jobs"] == 0
+    assert d11["collect_jobs"] >= 1
+    assert d11["scans"] >= 1
+    assert len(d11["samples"]) == 3
+    assert d11["min"] <= d11["median"] <= d11["max"]
+    # x199's two driver collects run inside build()
+    x199 = prof.profile(
+        spark, "x199_fd_histogram", QUERIES["x199_fd_histogram"].build,
+        SF_SMOKE, 2,
+    )
+    assert x199["build_jobs"] >= 2
+    assert len(x199["samples"]) == 2
+    assert x199["min"] <= x199["median"] <= x199["max"]
+
+
+def test_unknown_name_raises_before_a_session_starts(monkeypatch):
+    def no_session(*a, **k):
+        raise AssertionError("a session was started")
+
+    monkeypatch.setattr(prof, "get_spark", no_session)
+    with pytest.raises(ValueError, match="no_such_query"):
+        _cli().main(["d11_star_join_agg", "no_such_query",
+                     "--sf-dir", SF_SMOKE])
+
+
+def test_cli_writes_one_plan_per_name(spark, tmp_path):
+    names = ["d11_star_join_agg", "x199_fd_histogram"]
+    out = _cli().main(
+        [*names, "--sf-dir", SF_SMOKE, "--runs", "1",
+         "--plans", str(tmp_path)]
+    )
+    assert out["runs"] == 1 and out["sf_dir"] == SF_SMOKE
+    assert sorted(out["queries"]) == names
+    for n in names:
+        rec = out["queries"][n]
+        assert rec["plan"] == str(tmp_path / f"{n}.txt")
+        assert os.path.getsize(rec["plan"]) > 0
+    assert sorted(os.listdir(tmp_path)) == [f"{n}.txt" for n in names]

@@ -1561,6 +1561,33 @@ def test_merge_schema_contract_and_evolution(spark, tmp_path):
     assert post == {i: i % 3 for i in range(10)}
 
 
+def test_schema_checks_run_before_the_pin(spark, tmp_path):
+    """A merge source with an extra column, and a replace_where frame
+    with an extra or a mistyped column, are refused from the manifest
+    schema before any Spark job runs (no pin of the frame) and without
+    publishing a version."""
+    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "source")
+    t = str(tmp_path / "tbl")
+    snap.commit(spark, docs.where(F.col("doc_id") < 20), t)
+    src = docs.where(F.col("doc_id") < 5)
+    extra = src.withColumn("grade", F.lit(1))
+    mistyped = src.withColumn("doc_id", F.col("doc_id").cast("string"))
+    verbs = [
+        (lambda: snap.merge_upsert(spark, extra, t, keys=["doc_id"]),
+         "evolve_schema"),
+        (lambda: snap.replace_where(spark, extra, t, "doc_id < 5"),
+         "schema differs"),
+        (lambda: snap.replace_where(spark, mistyped, t, "doc_id < 5"),
+         "column types differ"),
+    ]
+    for verb, msg in verbs:
+        before = _jobs(spark)
+        with pytest.raises(ValueError, match=msg):
+            verb()
+        assert _jobs(spark) == before, msg
+    assert snap.current_version(t) == 0
+
+
 def test_crud_reserved_dir_column_raises(spark, tmp_path):
     """A reserved internal column, in the table or in an incoming frame,
     fails loudly in every copy-on-write verb (and in a merge into an

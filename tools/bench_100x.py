@@ -201,6 +201,7 @@ def _stream_drain_leg(spark, sf_dir: str, runs: int) -> dict:
     from pyspark.sql import functions as F
 
     from deepcell_data_engineering_spark.catalog import load_table
+    from deepcell_data_engineering_spark.plans.profile import median
     from deepcell_data_engineering_spark.sources import snapshots as snap
     from deepcell_data_engineering_spark.streaming import snapshot_source
 
@@ -256,8 +257,7 @@ def _stream_drain_leg(spark, sf_dir: str, runs: int) -> dict:
                 shutil.rmtree(ckpt, ignore_errors=True)
             assert seen["n"] == expected, (seen["n"], expected)
             ts.append(_time.time() - t0)
-        s = sorted(ts)
-        return {"sec": s[len(s) // 2], "rows": expected}
+        return {"sec": median(ts), "rows": expected}
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -295,15 +295,13 @@ def main() -> None:
             ]
         )
 
+    from deepcell_data_engineering_spark.plans.profile import (
+        median,
+        open_session,
+    )
     from deepcell_data_engineering_spark.relational import QUERIES as REG
-    from deepcell_data_engineering_spark.session import get_spark
 
-    spark = get_spark()
-    spark.range(1000).count()
-
-    def median(xs: list[float]) -> float:
-        s = sorted(xs)
-        return s[len(s) // 2]
+    spark = open_session("dde-spark-bench-100x", SF01)
 
     out: dict[str, dict] = {}
     for name in queries:

@@ -4,7 +4,7 @@ Three consecutive rounds re-litigated a ~1.2x uniform in-session bench
 drift by hand. This post-pass makes the adjudication a committed
 artifact: compare the current bench (bench_out.json) against the prior
 round's BENCH_r{N-1}.json, and for every query whose timing moved more
-than the threshold, re-bench it ALONE (tools/bench_isolated.py in a
+than the threshold, re-bench it ALONE (tools/profile_queries.py in a
 fresh subprocess — nothing else scheduled in the session) and record
 the verdict:
 
@@ -82,7 +82,7 @@ def main() -> None:
     if movers:
         cmd = [
             sys.executable,
-            os.path.join(ROOT, "tools", "bench_isolated.py"),
+            os.path.join(ROOT, "tools", "profile_queries.py"),
             *movers,
             "--runs",
             str(args.runs),

@@ -323,15 +323,13 @@ def main() -> None:
             [sys.executable, os.path.join(os.path.dirname(__file__), "gen_scale_data.py"), SF1]
         )
 
+    from deepcell_data_engineering_spark.plans.profile import (
+        median,
+        open_session,
+    )
     from deepcell_data_engineering_spark.relational import QUERIES as REG
-    from deepcell_data_engineering_spark.session import get_spark
 
-    spark = get_spark()
-    spark.range(1000).count()  # warm the JVM
-
-    def median(xs: list[float]) -> float:
-        s = sorted(xs)
-        return s[len(s) // 2]
+    spark = open_session("dde-spark-bench-scaling", SF01)
 
     out: dict[str, dict] = {}
     for name in queries:
