@@ -34,35 +34,36 @@ def entry(spark: SparkSession) -> DataFrame:
 # The window is rebuilt each round from the committed correctness
 # verdicts (CORRECTNESS_r*.json): first the queries whose code changed since
 # their last verdict, then the queries whose last verdict is oldest,
-# in registry order. This round: the five queries that call
-# merge_upsert or replace_where (their schema checks moved before the
-# source pin), then the 28 queries last checked in round 9, then
-# round-10 verdicts in registry order up to 50. Round 14 checked
-# d35–d49, x02–x04 and x202–x233 (50/50 correct); they leave the window.
+# in registry order. This round: x63 and x199 (rewritten exact
+# quantile legs) and the seven other grouped_cumsum callers (the range
+# partition count now defaults to the cluster's parallelism), then
+# the rest of the round-10 verdicts in registry order, then round-11
+# verdicts in registry order up to 50. The previous window (the
+# merge_upsert / replace_where callers, the round-9 verdicts and
+# x11–x27) leaves it.
 _CHECK_FIRST = [
-    # merge_upsert / replace_where callers
-    "x151_merge_feed_view", "x167_schema_evolution_merge",
-    "x185_lifecycle_clone_restore", "x196_tombstone_merge_feed",
-    "x218_replace_where_lifecycle",
-    # last verdict in round 9
-    "x05_minhash_signatures", "x06_minhash_lsh_pairs", "x07_ngram_jaccard",
-    "x08_simhash", "x09_cosine_topk", "x10_embedding_neardup",
-    "x46_df_heavy_hitters", "x47_bigram_pmi", "x48_inverted_index",
-    "x49_source_overlap", "x50_ann_recall", "x51_cluster_representatives",
-    "x52_mixture_plan", "x53_incremental_lsh", "x54_stream_screen",
-    "x55_variant_extract", "x56_dup_ngram_coverage",
-    "x140_session_stats", "x141_psi_drift", "x142_time_weighted_avg",
-    "x143_ship_latency_quantiles", "x144_failure_rate_ci",
-    "x145_cdc_incremental_view", "x146_skyline_frontier",
-    "x147_gini_concentration", "x148_proration_hamilton",
-    "x149_fuzzy_vocab_pairs", "x150_benford_digits",
+    # rewritten quantile legs, then the other grouped_cumsum callers
+    "x63_hist_quantiles", "x199_fd_histogram",
+    "x103_zorder_skipping", "x106_range_partition_plan",
+    "x160_weighted_quantiles", "x161_heaps_law", "x163_lorenz_deciles",
+    "x168_spearman_rho", "x183_percentile_cont",
     # last verdict in round 10, registry order
-    "x11_srp_lsh_topk", "x12_crop_grid", "x13_overlap_vote",
-    "x14_ivf_topk", "x15_json_extract", "x16_asof_join", "x17_sessionize",
-    "x19_kmeans_centroids", "x18_winnow_fingerprint", "x20_interval_join",
-    "x21_dup_clusters", "x22_tfidf_topk", "x23_pattern_scrub",
-    "x24_stratified_sample", "x25_vocab_topk", "x26_bm25",
-    "x27_corpus_build",
+    "x28_bpe_tokens", "x29_semantic_neardup", "x30_containment",
+    "x31_corpus_report", "x32_repetition_signals", "x33_decontaminate",
+    "x34_chunk_documents", "x35_pack_sequences", "x36_embedding_health",
+    "x37_funnel", "x38_gapfill", "x39_salted_skew_join",
+    "x57_sketch_topk", "x72_udtf_chunks", "x70_recursive_closure",
+    "x71_lateral_topk", "x69_hll_rollup", "x68_bpe_train",
+    "x67_triangle_hubs", "x66_similarity_join_exact", "x65_quality_gate",
+    "x64_hll_set_algebra", "x62_cms_frequencies", "x60_zorder_key",
+    "x61_weighted_sample", "x59_hll_distinct", "x58_bloom_pruned_join",
+    "x74_fuzzy_name_join", "x133_record_linkage_fs", "x152_kendall_tau",
+    "x155_anti_entropy_repair",
+    # last verdict in round 11, registry order
+    "x73_bpe_encode", "x77_simhash_neardup", "x75_sliding_distinct",
+    "x76_quality_gate_corpus", "x78_kcore", "x79_join_size_estimate",
+    "x80_pq_adc_topk", "x81_pq_recall", "x82_sql_udf",
+    "x83_kmv_intersections",
 ]
 
 

@@ -125,7 +125,7 @@ def grouped_cumsum(
     group_cols: list[str],
     order_col: str,
     count_col: str | list[str],
-    n_parts: int = 32,
+    n_parts: int | None = None,
 ) -> DataFrame:
     """Distributed inclusive prefix sum of ``count_col`` over
     ``order_col`` within each group: the classic two-phase scan.
@@ -149,12 +149,22 @@ def grouped_cumsum(
     The result is independent of where the range partitioner split
     (any split of a sorted sequence yields the same prefix sums), so
     its sampling nondeterminism cannot move a result. Returns ``hist``
-    plus a long ``cum`` column; pass a LIST of count columns to scan
-    several measures over ONE shared layout (returns ``cum_<col>``
-    per column) — chaining two single-column calls instead would nest
-    a second range partitioner inside the first call's join, whose
-    branches then re-sample splits independently and trip the
-    divergence guard below (observed: x158's two-sided CDF).
+    plus long ``cum`` and ``tot`` columns: ``tot`` is the whole group's
+    sum of ``count_col``, a whole-group window over the tiny offsets
+    frame (≤ n_parts × |groups| rows) that rides the same broadcast,
+    so a caller needs no separately aggregated total joined back. Pass
+    a LIST of count columns to scan several measures over ONE shared
+    layout (returns ``cum_<col>`` and ``tot_<col>`` per column) —
+    chaining two single-column calls instead would nest a second range
+    partitioner inside the first call's join, whose branches then
+    re-sample splits independently and trip the divergence guard below
+    (observed: x158's two-sided CDF).
+
+    ``n_parts`` (default: the context's ``defaultParallelism``) is the
+    number of range partitions: one per core keeps every core busy
+    without paying scheduler overhead for empty tasks on a small
+    histogram. It is an explicit count, not AQE-coalesced, because
+    both branches must split identically (below).
 
     Same-splits invariant (r8 ADVICE): the ``_pid`` join is only
     correct if the partial-cumsum branch and the offsets branch see
@@ -178,6 +188,8 @@ def grouped_cumsum(
 
     single = isinstance(count_col, str)
     count_cols = [count_col] if single else list(count_col)
+    if n_parts is None:
+        n_parts = hist.sparkSession.sparkContext.defaultParallelism
     parts = hist.repartitionByRange(
         n_parts, *group_cols, order_col
     ).withColumn("_pid", F.spark_partition_id())
@@ -199,10 +211,14 @@ def grouped_cumsum(
         F.min(order_col).alias("_olo"),
         F.max(order_col).alias("_ohi"),
     )
+    wgroup = Window.partitionBy(*group_cols)
     for c in count_cols:
         offsets = offsets.withColumn(
             f"_off_{c}",
             F.coalesce(F.sum(f"_ptot_{c}").over(woff), F.lit(0)),
+        ).withColumn(
+            "tot" if single else f"tot_{c}",
+            F.sum(f"_ptot_{c}").over(wgroup).cast("long"),
         )
     offsets = offsets.drop(*[f"_ptot_{c}" for c in count_cols])
     # the assertion lives INSIDE the cum expression so column pruning

@@ -391,22 +391,29 @@ def hist_quantiles(
     exact q-th smallest value (percentile_disc semantics: the value at
     row ceil(q*n)). The containment lo <= exact <= hi is a hard
     guarantee, not an expectation. Register tables are tiny (< 4 *
-    log2(max) rows per group), so the cumulative window and the
-    range join below cost nothing at any data scale."""
+    log2(max) rows per group), so the two windows below cost nothing
+    at any data scale: the running count ``cum`` and the group total
+    ``n`` come out of ONE select over the registers (no separate total
+    aggregate joined back), and only the FOLLOWING select explodes the
+    qs — in the same select the windows would run over the q-multiplied
+    rows."""
     gc = list(group_cols)
-    cum_w = Window.partitionBy(*gc).orderBy("bin_id").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = registers.withColumn("cum", F.sum("c").over(cum_w))
-    tot = registers.groupBy(*gc).agg(F.sum("c").alias("n"))
-    ks = tot.select(
+    grp = Window.partitionBy(*gc)
+    cum = registers.select(
         *gc,
-        "n",
-        F.explode(F.array(*[F.lit(float(q)) for q in qs])).alias("q"),
-    ).withColumn("k", F.ceil(F.col("q") * F.col("n")).cast("bigint"))
+        "bin_id",
+        F.sum("c").over(
+            grp.orderBy("bin_id").rowsBetween(
+                Window.unboundedPreceding, Window.currentRow
+            )
+        ).alias("cum"),
+        F.sum("c").over(grp).alias("n"),
+    )
     pick = (
-        ks.join(cum, gc)
-        .where(F.col("cum") >= F.col("k"))
+        cum.select(
+            "*", F.explode(F.array(*[F.lit(float(q)) for q in qs])).alias("q")
+        )
+        .where(F.col("cum") >= F.ceil(F.col("q") * F.col("n")))
         .groupBy(*gc, "q", "n")
         .agg(F.min("bin_id").alias("bin_id"))
     )

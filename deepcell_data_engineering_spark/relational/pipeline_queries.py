@@ -3297,22 +3297,22 @@ def x63(spark: SparkSession, sf_dir: str) -> DataFrame:
     sk = hist_quantiles(hist_registers(v, "x", ["g"]), ["g"], qs).select(
         "g", "q", F.col("lo").alias("sketch_lo"), F.col("hi").alias("sketch_hi"), "n"
     )
-    ranked = v.withColumn(
-        "rn", F.row_number().over(Window.partitionBy("g").orderBy("x"))
-    )
-    ks = (
-        v.groupBy("g")
-        .agg(F.count(F.lit(1)).alias("n_ex"))
-        .select(
-            "g",
-            "n_ex",
-            F.explode(F.array(*[F.lit(float(q)) for q in qs])).alias("q"),
-        )
-        .withColumn("k", F.ceil(F.col("q") * F.col("n_ex")).cast("bigint"))
+    # the exact leg: row number and group size are two windows over
+    # ONE partitioning of the rows (no separate count aggregate joined
+    # back); the qs explode in the FOLLOWING select, so the windows
+    # run over the rows, not over their q-multiplied copies
+    grp = Window.partitionBy("g")
+    ranked = v.select(
+        "g",
+        "x",
+        F.row_number().over(grp.orderBy("x")).alias("rn"),
+        F.count(F.lit(1)).over(grp).alias("n_ex"),
     )
     exact = (
-        ks.join(ranked, "g")
-        .where(F.col("rn") == F.col("k"))
+        ranked.select(
+            "*", F.explode(F.array(*[F.lit(float(q)) for q in qs])).alias("q")
+        )
+        .where(F.col("rn") == F.ceil(F.col("q") * F.col("n_ex")))
         .select("g", "q", F.col("x").alias("exact_cents"))
     )
     return (
@@ -15958,35 +15958,31 @@ def x199(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The tot -> q1/q3 -> params chain previously nested FOUR broadcast
     # subtrees, and broadcast subtrees escape AQE shuffle-stage reuse
     # (the r13 x103 lesson) — the executed plan re-ran the histogram
-    # per consumer: 10 orders scans for one query. Now two dedicated
-    # scalar actions (each exact longs, lossless through the driver)
-    # and the bin parameters rebuilt from literals: scan totals + both
-    # quartiles in ONE conditional aggregate over the shared cum; the
-    # IEEE width expression is unchanged SQL (round/cbrt over the same
-    # doubles — constant-folded once), so bins are bit-identical.
-    _t = hist.agg(
-        F.sum("c").cast("long").alias("n"),
+    # per consumer: 10 orders scans for one query. Now ONE scalar
+    # action over the shared cum (exact longs, lossless through the
+    # driver): n is the prefix scan's own group total, and each
+    # quartile is the least value whose cumulative count reaches the
+    # integer ceil-rank (25n+99) div 100 — the oracle's rank, in exact
+    # integer SQL. The bin parameters are then rebuilt from literals;
+    # the IEEE width expression is unchanged SQL (round/cbrt over the
+    # same doubles — constant-folded once), so bins are bit-identical.
+    def rank_value(pct):
+        k = F.expr(f"({pct} * tot_c + 99) div 100")
+        return F.min(F.when(F.col("cum_c") >= k, F.col("cents")))
+
+    _q = cum.agg(
+        F.max("tot_c").alias("n"),
         F.min("cents").alias("cmin"),
+        rank_value(25).alias("q1"),
+        rank_value(75).alias("q3"),
     ).collect()[0]
-    if _t["n"] is None:
+    if _q["n"] is None:
         # empty orders: no quartiles, no bins — the empty result DuckDB
-        # returns too, answered from the totals action already taken
+        # returns too, answered from the one action already taken
         return spark.createDataFrame(
             [], "bin BIGINT, lo_cents BIGINT, bin_width BIGINT, n_rows BIGINT"
         )
-    _n, _cmin = int(_t["n"]), int(_t["cmin"])
-    _q = cum.agg(
-        F.min(
-            F.when(
-                F.col("cum_c") >= F.lit((25 * _n + 99) // 100), F.col("cents")
-            )
-        ).alias("q1"),
-        F.min(
-            F.when(
-                F.col("cum_c") >= F.lit((75 * _n + 99) // 100), F.col("cents")
-            )
-        ).alias("q3"),
-    ).collect()[0]
+    _n, _cmin = int(_q["n"]), int(_q["cmin"])
     params = spark.createDataFrame(
         [(_cmin, _n, int(_q["q1"]), int(_q["q3"]))],
         "cmin LONG, n LONG, q1 LONG, q3 LONG",

@@ -1346,11 +1346,23 @@ def _overlap_writes(thunks):
     raised, with each later failure attached to it as a note. Nothing
     is published: a sibling write that landed is an orphan directory
     the next vacuum sweeps — the crash-between-write-and-publish case
-    the manifest-written-last protocol already covers."""
+    the manifest-written-last protocol already covers.
+
+    Each pooled thunk runs under the caller's Spark local properties
+    (job group, job description, scheduler pool) and the session's job
+    tags, captured here in the caller's thread, so ``cancelJobGroup``
+    and job-group attribution cover the overlapped writes too."""
     if len(thunks) <= 1:
         return [t() for t in thunks]
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
+    session = SparkSession.getActiveSession()
+    if session is not None:
+        # one wrap per thunk: each clones the properties it installs,
+        # so concurrent writes never share one mutable property set
+        thunks = [inheritable_thread_target(session)(t) for t in thunks]
     # leaving the block waits for every submitted write
     with ThreadPoolExecutor(max_workers=min(3, len(thunks))) as pool:
         futs = [pool.submit(t) for t in thunks]

@@ -324,3 +324,59 @@ def test_grouped_cumsum_multi_column_one_layout(spark):
         assert {k: v[idx] for k, v in got.items()} == solo, col
     # single-string form keeps its historical output name
     assert "cum" in ly.grouped_cumsum(df, ["g"], "k", "c1").columns
+
+
+def test_grouped_cumsum_group_totals(spark):
+    """``tot`` (single count column) / ``tot_<col>`` (several) is the
+    whole group's sum of the count column on every row of the group,
+    whatever the split count — grouped and ungrouped, with a NULL
+    order value and a single-row group."""
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.RandomState(5)
+    pdf = pd.DataFrame(
+        {
+            "g": rng.choice(["a", "b", "c"], 400),
+            "k": rng.randint(0, 3_000, 400),
+            "c1": rng.randint(0, 9, 400),
+            "c2": rng.randint(1, 4, 400),
+        }
+    )
+    pdf = pdf.groupby(["g", "k"], as_index=False)[["c1", "c2"]].sum()
+    rows = [
+        (g, int(k), int(a), int(b)) for g, k, a, b in pdf.itertuples(index=False)
+    ] + [
+        ("a", None, 6, 2),  # NULL order value counts toward its group
+        ("solo", 17, 4, 3),  # single-row group
+    ]
+    df = spark.createDataFrame(rows, "g string, k long, c1 long, c2 long")
+    full = pd.DataFrame(rows, columns=["g", "k", "c1", "c2"])
+    want = full.groupby("g")[["c1", "c2"]].sum()
+    n_rows = len(rows)
+    for n_parts in (1, 3, 32, None):
+        out = ly.grouped_cumsum(df, ["g"], "k", "c1", n_parts=n_parts)
+        got = out.select("g", "tot").collect()
+        assert len(got) == n_rows, n_parts
+        assert all(r["tot"] == want.loc[r["g"], "c1"] for r in got), n_parts
+
+        multi = ly.grouped_cumsum(
+            df, ["g"], "k", ["c1", "c2"], n_parts=n_parts
+        ).collect()
+        assert len(multi) == n_rows, n_parts
+        for r in multi:
+            assert r["tot_c1"] == want.loc[r["g"], "c1"], n_parts
+            assert r["tot_c2"] == want.loc[r["g"], "c2"], n_parts
+
+        flat = ly.grouped_cumsum(
+            df.drop("g"), [], "k", ["c1", "c2"], n_parts=n_parts
+        ).collect()
+        assert {(r["tot_c1"], r["tot_c2"]) for r in flat} == {
+            (int(full["c1"].sum()), int(full["c2"].sum()))
+        }, n_parts
+        # the last row of each group carries cum == tot
+        last = {}
+        for r in out.where(F.col("k").isNotNull()).collect():
+            if r["g"] not in last or r["k"] > last[r["g"]]["k"]:
+                last[r["g"]] = r
+        assert all(r["cum"] == r["tot"] for r in last.values()), n_parts

@@ -39,7 +39,8 @@ def test_profile_record_splits_build_from_collect(spark):
     assert d11["scans"] >= 1
     assert len(d11["samples"]) == 3
     assert d11["min"] <= d11["median"] <= d11["max"]
-    # x199's two driver collects run inside build()
+    # x199's one driver collect runs inside build(), and its prefix
+    # scan's range partitioner samples in a job of its own
     x199 = prof.profile(
         spark, "x199_fd_histogram", QUERIES["x199_fd_histogram"].build,
         SF_SMOKE, 2,
@@ -47,6 +48,23 @@ def test_profile_record_splits_build_from_collect(spark):
     assert x199["build_jobs"] >= 2
     assert len(x199["samples"]) == 2
     assert x199["min"] <= x199["median"] <= x199["max"]
+
+
+def test_quantile_queries_job_budget(spark):
+    """The histogram-quantile queries stay within their Spark job
+    budgets: x199 takes n, min and both quartiles in ONE action over
+    the prefix scan (its group total rides the scan), and x63 reads
+    group sizes from windows instead of a joined-back aggregate."""
+    x199 = prof.profile(
+        spark, "x199_fd_histogram", QUERIES["x199_fd_histogram"].build,
+        SF_SMOKE, 1,
+    )
+    assert x199["build_jobs"] <= 9
+    x63 = prof.profile(
+        spark, "x63_hist_quantiles", QUERIES["x63_hist_quantiles"].build,
+        SF_SMOKE, 1,
+    )
+    assert x63["collect_jobs"] <= 7
 
 
 def test_unknown_name_raises_before_a_session_starts(monkeypatch):

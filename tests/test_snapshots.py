@@ -3927,6 +3927,29 @@ def test_overlap_writes_waits_for_siblings_and_raises_earliest():
     assert snap._overlap_writes([lambda: 1, lambda: 2]) == [1, 2]
 
 
+def test_overlapped_writes_keep_the_callers_job_group(spark, tmp_path):
+    """Every job a rewrite commit starts, the pooled writes included,
+    carries the caller's job group, so cancelJobGroup reaches them."""
+    t = str(tmp_path / "tbl")
+    base = spark.range(400).select(
+        F.col("id").alias("k"), (F.col("id") % 7).alias("v")
+    )
+    for i in range(2):
+        snap.commit(spark, base.where(F.col("k") % 2 == i), t)
+    upserts = base.where("k < 20").withColumn("v", F.col("v") + 100)
+    sc = spark.sparkContext
+    sc.setJobGroup("overlap-group", "merge under a job group")
+    try:
+        before = _jobs(spark)
+        snap.merge_upsert(spark, upserts, t, keys=["k"])
+        started = _jobs(spark) - before
+    finally:
+        sc._jsc.clearJobGroup()
+    assert started > 0
+    grouped = sc.statusTracker().getJobIdsForGroup("overlap-group")
+    assert len(grouped) == started
+
+
 def test_failed_rewrite_write_publishes_nothing_and_vacuum_sweeps(
     spark, tmp_path, monkeypatch
 ):

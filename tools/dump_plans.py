@@ -47,7 +47,7 @@ HEADLINERS = [
     ("x60_zorder_key", "z-order key: pure bit arithmetic in codegen, TakeOrdered top-k"),
     ("x61_weighted_sample", "A-ES weighted sample: one window shuffle, md5 draw replayable by the oracle"),
     ("x62_cms_frequencies", "count-min: explode(depth) + grouped count; broadcast counter-table lookup"),
-    ("x63_hist_quantiles", "log-histogram quantiles: bounded registers, tiny cumulative window + range probe"),
+    ("x63_hist_quantiles", "log-histogram quantiles: bounded registers, two tiny windows (running count, group total) + rank filter"),
     ("x64_hll_set_algebra", "HLL set algebra: pair lattice over 4 KiB register tables, corpora never joined"),
     ("x65_quality_gate", "quality gate: whole constraint suite fused into one aggregation pass per table"),
     ("x66_similarity_join_exact", "prefix-filter similarity join: selective candidate equi-join, row-local verify"),
