@@ -34,36 +34,37 @@ def entry(spark: SparkSession) -> DataFrame:
 # The window is rebuilt each round from the committed correctness
 # verdicts (CORRECTNESS_r*.json): first the queries whose code changed since
 # their last verdict, then the queries whose last verdict is oldest,
-# in registry order. This round: x63 and x199 (rewritten exact
-# quantile legs) and the seven other grouped_cumsum callers (the range
-# partition count now defaults to the cluster's parallelism), then
-# the rest of the round-10 verdicts in registry order, then round-11
-# verdicts in registry order up to 50. The previous window (the
-# merge_upsert / replace_where callers, the round-9 verdicts and
-# x11–x27) leaves it.
+# in registry order. This round: the eleven exact-quantile queries
+# that now read their totals from the prefix scan and pick their
+# ranks in one conditional-min aggregate (x76 and x199 through the
+# shared rank helpers), then the rest of the round-11 verdicts
+# (x84–x112, x153–x164) in registry order, then round-12 verdicts in
+# registry order up to 50. The previous window (x63, the other
+# grouped_cumsum callers, the round-10 rest and x73–x83) leaves it.
 _CHECK_FIRST = [
-    # rewritten quantile legs, then the other grouped_cumsum callers
-    "x63_hist_quantiles", "x199_fd_histogram",
-    "x103_zorder_skipping", "x106_range_partition_plan",
-    "x160_weighted_quantiles", "x161_heaps_law", "x163_lorenz_deciles",
-    "x168_spearman_rho", "x183_percentile_cont",
-    # last verdict in round 10, registry order
-    "x28_bpe_tokens", "x29_semantic_neardup", "x30_containment",
-    "x31_corpus_report", "x32_repetition_signals", "x33_decontaminate",
-    "x34_chunk_documents", "x35_pack_sequences", "x36_embedding_health",
-    "x37_funnel", "x38_gapfill", "x39_salted_skew_join",
-    "x57_sketch_topk", "x72_udtf_chunks", "x70_recursive_closure",
-    "x71_lateral_topk", "x69_hll_rollup", "x68_bpe_train",
-    "x67_triangle_hubs", "x66_similarity_join_exact", "x65_quality_gate",
-    "x64_hll_set_algebra", "x62_cms_frequencies", "x60_zorder_key",
-    "x61_weighted_sample", "x59_hll_distinct", "x58_bloom_pruned_join",
-    "x74_fuzzy_name_join", "x133_record_linkage_fs", "x152_kendall_tau",
-    "x155_anti_entropy_repair",
+    # exact-quantile queries on the shared rank lookup
+    "x103_zorder_skipping", "x105_mad_outliers",
+    "x106_range_partition_plan", "x108_winsorized_stats",
+    "x143_ship_latency_quantiles", "x158_ks_two_sample",
+    "x160_weighted_quantiles", "x163_lorenz_deciles",
+    "x183_percentile_cont", "x199_fd_histogram", "x76_quality_gate_corpus",
     # last verdict in round 11, registry order
-    "x73_bpe_encode", "x77_simhash_neardup", "x75_sliding_distinct",
-    "x76_quality_gate_corpus", "x78_kcore", "x79_join_size_estimate",
-    "x80_pq_adc_topk", "x81_pq_recall", "x82_sql_udf",
-    "x83_kmv_intersections",
+    "x84_split_leakage", "x85_skew_report", "x86_join_order_plan",
+    "x87_table_profile", "x88_kmv_incremental", "x89_retention_cohorts",
+    "x90_cbo_estimates", "x91_profile_approx_certified", "x92_ivfpq_topk",
+    "x93_approx_quantile_certified", "x94_adaptive_salted_join",
+    "x95_adaptive_lsh", "x96_ivfpq_residual_topk",
+    "x97_python_datasource", "x98_polymorphic_udtf",
+    "x99_ewma_user_value", "x100_cms_incremental", "x101_scd2_build",
+    "x102_point_in_time_join", "x104_weighted_sample_incremental",
+    "x107_snapshot_audit", "x109_corpus_divergence",
+    "x110_event_pattern_match", "x111_trend_slope", "x112_welch_ttest",
+    "x153_mann_whitney_u", "x154_ref_integrity_audit", "x156_grouped_ols",
+    "x157_mutual_information", "x159_market_basket", "x161_heaps_law",
+    "x162_delete_feed_view", "x164_stats_pruned_scan",
+    # last verdict in round 12, registry order
+    "d01_scan_filter", "d02_like_strings", "d03_natural_sort", "d04_topk",
+    "d05_distinct", "d10_inner_join",
 ]
 
 

@@ -23,6 +23,10 @@ SQL twin so the oracle gate can hash-check the layout math itself:
   per-partition partial cumsums, broadcast the k partition offsets.
   The 100×-safe replacement for an ordered window whose partition key
   has few values (or none) over a near-unique ordering column.
+- :func:`disc_rank` / :func:`value_at_rank` — the one exact-quantile
+  lookup every percentile_disc-style caller shares: the integer rank
+  ceil(nu*n/de) and the least value whose running count reaches it,
+  as one conditional-min aggregate over a cumulative histogram.
 - :func:`equi_depth_boundaries` — exact range-partitioner boundary
   values (what ``repartitionByRange`` estimates by sampling), derived
   from a distributed prefix sum over the VALUE HISTOGRAM (distinct
@@ -253,18 +257,40 @@ def grouped_cumsum(
     )
 
 
+def disc_rank(n: Column, nu: int, de: int) -> Column:
+    """The percentile_disc rank ceil(nu*n/de) of an integer fraction
+    nu/de of a count n, as exact BIGINT arithmetic: (nu*n + de - 1)
+    div de. No float q*n whose rounding could tip the ceil between
+    engines — DuckDB's ``(nu * n + de - 1) // de`` is the same
+    integer."""
+    return F.call_function(
+        "div", n.cast("long") * F.lit(nu) + F.lit(de - 1), F.lit(de)
+    )
+
+
+def value_at_rank(cum: Column, value: Column, k: Column) -> Column:
+    """Aggregate: the least ``value`` whose inclusive running count
+    ``cum`` reaches rank ``k`` — the lookup over a cumulative
+    histogram that :func:`grouped_cumsum` (or an ordered window)
+    produces. ``value`` may be a struct led by the order column, to
+    carry the straddling row's other columns. NULL when no row
+    reaches ``k``. One call per rank, all inside ONE grouped
+    aggregate: no probe frame, no join back."""
+    return F.min(F.when(cum >= k, value))
+
+
 def boundary_ranges(
     cum_df: DataFrame,
     group_cols: list[str],
     value_col: str,
     count_col: str,
-    total_col: str,
     n_ranges: int,
 ) -> DataFrame:
-    """Equi-depth boundary extraction from a cumulative histogram by
-    pure integer arithmetic — no target join, no lag window. Value v
-    (inclusive cum ``cum``, previous cum = cum - count) is the
-    boundary for target rank t_i = ceil(i*n/B) exactly when i lies in
+    """Equi-depth boundary extraction from :func:`grouped_cumsum`'s
+    output (its ``cum`` and group total ``tot``) by pure integer
+    arithmetic — no target join, no lag window. Value v (inclusive
+    cum ``cum``, previous cum = cum - count) is the boundary for
+    target rank t_i = ceil(i*n/B) exactly when i lies in
     [floor((cum-count)*B/n) + 1, floor(cum*B/n)] clamped to [1, B-1].
     Emits one (group..., i, b) row per boundary."""
     B = n_ranges
@@ -273,14 +299,12 @@ def boundary_ranges(
         cum_df.withColumn(
             "i_lo",
             F.greatest(
-                F.lit(1), _int_div(cum_prev * B, F.col(total_col)) + F.lit(1)
+                F.lit(1), _int_div(cum_prev * B, F.col("tot")) + F.lit(1)
             ),
         )
         .withColumn(
             "i_hi",
-            F.least(
-                F.lit(B - 1), _int_div(F.col("cum") * B, F.col(total_col))
-            ),
+            F.least(F.lit(B - 1), _int_div(F.col("cum") * B, F.col("tot"))),
         )
         .where(F.col("i_hi") >= F.col("i_lo"))
         .select(
@@ -292,39 +316,43 @@ def boundary_ranges(
 
 
 def equi_depth_boundaries(
-    df: DataFrame, value_col: str, n_ranges: int
+    df: DataFrame, value_col: str, n_ranges: int, count_col: str | None = None
 ) -> DataFrame:
     """Exact equi-depth range-partition boundaries: the (n_ranges - 1)
     values at ranks ceil(i * n / n_ranges), i = 1..n_ranges-1 — the
     exact version of what ``repartitionByRange`` estimates by
     reservoir sampling. Returns a 1-row DataFrame with ``boundaries``
-    (sorted array) and ``n_total``.
+    (sorted array) and ``n_total``. Pass ``count_col`` when ``df`` is
+    already the VALUE HISTOGRAM (one row per distinct non-NULL
+    ``value_col``, its row count in ``count_col``), so a caller that
+    also needs the histogram builds it once.
 
     Distributed shape: groupBy(value).count builds the VALUE HISTOGRAM;
     the prefix sum over it is the two-phase :func:`grouped_cumsum`
     (range-repartition + per-partition scans + broadcast offsets), so
     no single task ever sorts the whole histogram even when the value
-    is near-unique; boundaries then fall out of per-row integer
-    arithmetic (:func:`boundary_ranges`) — no driver scalar per
-    boundary, no global row sort, no target join."""
-    vc = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(F.col(value_col).alias("v"))
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    tot = vc.agg(F.sum("c").cast("long").alias("n_total"))
-    cum = grouped_cumsum(vc, [], "v", "c").crossJoin(F.broadcast(tot))
-    # global (no-grouping) collapse: n_total is constant across rows,
+    is near-unique, and the row total rides the same scan (``tot``);
+    boundaries then fall out of per-row integer arithmetic
+    (:func:`boundary_ranges`) — no driver scalar per boundary, no
+    global row sort, no target join."""
+    if count_col is None:
+        vc = (
+            df.where(F.col(value_col).isNotNull())
+            .groupBy(F.col(value_col).alias("v"))
+            .agg(F.count(F.lit(1)).alias("c"))
+        )
+    else:
+        vc = df.select(F.col(value_col).alias("v"), F.col(count_col).alias("c"))
+    # global (no-grouping) collapse: the total is constant across rows,
     # so max() carries it — and the plan-contract sweep can PROVE the
     # frame is 1 row when a caller broadcasts it into a cross join
     # (a groupBy on the constant would be 1 row only by construction)
-    bounds = boundary_ranges(
-        cum, ["n_total"], "v", "c", "n_total", n_ranges
+    return boundary_ranges(
+        grouped_cumsum(vc, [], "v", "c"), ["tot"], "v", "c", n_ranges
     ).agg(
-        F.max("n_total").alias("n_total"),
+        F.max("tot").alias("n_total"),
         F.sort_array(F.collect_list("b")).alias("boundaries"),
     )
-    return bounds
 
 
 def range_assign(value: Column, boundaries: Column) -> Column:

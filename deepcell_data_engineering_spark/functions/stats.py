@@ -193,6 +193,8 @@ def disc_percentiles_by_histogram(
     anything else raises ``ValueError`` before any Spark work."""
     from pyspark.sql import Window
 
+    from deepcell_data_engineering_spark.functions.layout import value_at_rank
+
     if not qs:
         raise ValueError("disc percentiles need a non-empty qs list")
     bad = [q for q in qs if not 0 < q <= 1]
@@ -209,12 +211,10 @@ def disc_percentiles_by_histogram(
         .withColumn("n", F.sum("c").over(wall))
     )
     aggs = [
-        F.min(
-            F.when(
-                F.col("cum")
-                >= F.ceil(F.lit(float(q)) * F.col("n").cast("double")),
-                F.col("v"),
-            )
+        value_at_rank(
+            F.col("cum"),
+            F.col("v"),
+            F.ceil(F.lit(float(q)) * F.col("n").cast("double")),
         ).alias(f"_p{i}")
         for i, q in enumerate(qs)
     ]
@@ -412,24 +412,31 @@ def grouped_disc_percentile(
     df: DataFrame,
     group_col: str,
     value_col: str,
-    q_num: int,
-    q_den: int,
-    out_col: str = "p",
+    fractions: dict[str, tuple[int, int]],
 ) -> DataFrame:
-    """Exact per-group percentile_disc(q_num/q_den): the least value
-    whose cumulative count reaches ceil(q*n) = (q_num*n + q_den - 1)
-    div q_den within its group. The quantile arrives as an INTEGER
-    fraction so the target rank is pure integer arithmetic — no float
-    q*n whose rounding could differ between engines — and the disc
-    value IS a data value, hashable cross-engine (an interpolated
-    percentile of an even group is engine-float-shaped).
+    """Exact per-group percentile_disc for every ``{name: (nu, de)}``
+    in ``fractions``: the least value whose cumulative count reaches
+    ceil(nu*n/de) within its group (:func:`layout.disc_rank`). Each
+    quantile arrives as an INTEGER fraction so the target rank is pure
+    integer arithmetic — no float q*n whose rounding could differ
+    between engines — and the disc value IS a data value, hashable
+    cross-engine (an interpolated percentile of an even group is
+    engine-float-shaped). The lower median is ``{"med": (1, 2)}``.
 
-    Distributed shape (the disc_percentile_by_histogram pattern, made
+    Distributed shape (the disc_percentiles_by_histogram pattern, made
     grouped and driver-free): groupBy(group, value).count builds the
-    per-group VALUE HISTOGRAM; the cumulative window is PARTITIONED BY
-    the group — every group's ordered scan runs in parallel and no
-    stage sees a global row sort. Returns (group_col, out_col)."""
+    per-group VALUE HISTOGRAM; the cumulative window and the group
+    total are PARTITIONED BY the group, so every group's ordered scan
+    runs in parallel and no stage sees a global row sort; then ONE
+    grouped aggregate picks every rank (:func:`layout.value_at_rank`).
+    Returns (group_col, n, *names): n counts the group's non-NULL
+    values."""
     from pyspark.sql import Window
+
+    from deepcell_data_engineering_spark.functions.layout import (
+        disc_rank,
+        value_at_rank,
+    )
 
     vc = (
         df.where(F.col(value_col).isNotNull())
@@ -439,27 +446,17 @@ def grouped_disc_percentile(
     w = Window.partitionBy("g").orderBy("v").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    wg = Window.partitionBy("g")
     cum = vc.withColumn("cum", F.sum("c").over(w)).withColumn(
-        "n", F.sum("c").over(wg)
+        "n", F.sum("c").over(Window.partitionBy("g"))
     )
-    t = F.col("n") * q_num + F.lit(q_den - 1)
-    k = (t - F.pmod(t, F.lit(q_den))) / F.lit(q_den)
-    return (
-        cum.where(F.col("cum") >= k.cast("long"))
-        .groupBy("g")
-        .agg(F.min("v").alias(out_col))
-        .select(F.col("g").alias(group_col), out_col)
-    )
-
-
-def grouped_disc_median(
-    df: DataFrame, group_col: str, value_col: str, out_col: str = "med"
-) -> DataFrame:
-    """Per-group lower median: percentile_disc at 1/2 (rank
-    ceil(n/2) = (n+1) div 2). See grouped_disc_percentile."""
-    return grouped_disc_percentile(
-        df, group_col, value_col, 1, 2, out_col
+    return cum.groupBy(F.col("g").alias(group_col)).agg(
+        F.max("n").alias("n"),
+        *[
+            value_at_rank(
+                F.col("cum"), F.col("v"), disc_rank(F.col("n"), nu, de)
+            ).alias(name)
+            for name, (nu, de) in fractions.items()
+        ],
     )
 
 
@@ -477,19 +474,19 @@ def mad_outlier_report(
     Two grouped-histogram median passes + one conditional-count
     aggregation; every window is partitioned by the group. Returns one
     row per group: n, med, mad, n_outliers, n_low, n_high."""
-    med = grouped_disc_median(df, group_col, value_col, "med")
+    med = grouped_disc_percentile(df, group_col, value_col, {"med": (1, 2)})
     dev = (
         df.where(F.col(value_col).isNotNull())
         .join(F.broadcast(med), group_col)
         .withColumn("dev", F.abs(F.col(value_col) - F.col("med")))
     )
-    mad = grouped_disc_median(dev, group_col, "dev", "mad")
+    mad = grouped_disc_percentile(dev, group_col, "dev", {"mad": (1, 2)})
     out = F.col("dev") > F.lit(n_sigmas) * F.col("mad")
     return (
-        dev.join(F.broadcast(mad), group_col)
+        dev.join(F.broadcast(mad.drop("n")), group_col)
         .groupBy(group_col)
         .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
+            F.max("n").alias("n"),
             F.min("med").alias("med"),
             F.min("mad").alias("mad"),
             F.sum(F.when(out, 1).otherwise(0)).cast("long").alias("n_outliers"),
@@ -525,21 +522,17 @@ def winsorized_stats(
 
     Returns per group: n, p_lo, p_hi, n_clip_lo, n_clip_hi,
     wsum_scaled (exact BIGINT)."""
-    p_lo = grouped_disc_percentile(
-        df, group_col, value_col, lo[0], lo[1], "p_lo"
-    )
-    p_hi = grouped_disc_percentile(
-        df, group_col, value_col, hi[0], hi[1], "p_hi"
+    ps = grouped_disc_percentile(
+        df, group_col, value_col, {"p_lo": lo, "p_hi": hi}
     )
     v = F.col(value_col)
     clip = F.least(F.greatest(v, F.col("p_lo")), F.col("p_hi"))
     return (
         df.where(v.isNotNull())
-        .join(F.broadcast(p_lo), group_col)
-        .join(F.broadcast(p_hi), group_col)
+        .join(F.broadcast(ps), group_col)
         .groupBy(group_col)
         .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
+            F.max("n").alias("n"),
             F.min("p_lo").alias("p_lo"),
             F.min("p_hi").alias("p_hi"),
             F.sum(F.when(v < F.col("p_lo"), 1).otherwise(0))
@@ -563,6 +556,8 @@ def ks_distance(
     1-row frame (n_a, n_b, d_num, ks_d, ks_at) where d_num is the
     integer sup |cumA*nB - cumB*nA|, ks_d = d_num/(nA*nB) is the one
     rounded float, and ks_at is the smallest value achieving the sup.
+    An empty histogram gives n_a = n_b = 0 and NULL for the rest; an
+    empty side gives ks_d NULL (DuckDB's x / 0), not a division error.
 
     The histogram is the mergeable STATE of this statistic (per-value
     counts add), so the same function serves the batch query (x158)
@@ -570,43 +565,38 @@ def ks_distance(
     incrementally — whole-CDF drift from state, never from raw
     history. Both cumulative sides ride ONE multi-column
     grouped_cumsum (a row-sized value domain never funnels through a
-    single-partition window); the totals and max attaches are 1-row
-    plan-provable broadcasts."""
+    single-partition window), whose group totals are nA and nB; then
+    ONE global aggregate takes the totals and the sup: the min of
+    (-|diff|, value) is the largest difference at its smallest value.
+    No totals aggregate, no join."""
     from deepcell_data_engineering_spark.functions.layout import (
         grouped_cumsum,
     )
 
-    cum = grouped_cumsum(hist, [], order_col, [a_col, b_col])
-    totals = hist.agg(
-        F.sum(a_col).cast("long").alias("n_a"),
-        F.sum(b_col).cast("long").alias("n_b"),
+    ta, tb = f"tot_{a_col}", f"tot_{b_col}"
+    dn = F.abs(
+        F.col(f"cum_{a_col}") * F.col(tb) - F.col(f"cum_{b_col}") * F.col(ta)
     )
-    diffs = cum.crossJoin(F.broadcast(totals)).select(
-        F.col(order_col).alias("v"),
-        "n_a",
-        "n_b",
-        F.abs(
-            F.col(f"cum_{a_col}") * F.col("n_b")
-            - F.col(f"cum_{b_col}") * F.col("n_a")
-        ).alias("dn"),
-    )
-    dmax = diffs.agg(F.max("dn").alias("d_num"))
-    at = diffs.join(F.broadcast(dmax), F.col("dn") == F.col("d_num")).agg(
-        F.min("v").alias("ks_at")
-    )
+    best = F.min(F.struct((-dn).alias("neg_dn"), F.col(order_col).alias("v")))
     return (
-        totals.crossJoin(F.broadcast(dmax))
-        .crossJoin(F.broadcast(at))
+        grouped_cumsum(hist, [], order_col, [a_col, b_col])
+        .agg(
+            F.coalesce(F.max(ta), F.lit(0).cast("long")).alias("n_a"),
+            F.coalesce(F.max(tb), F.lit(0).cast("long")).alias("n_b"),
+            best.alias("best"),
+        )
         .select(
             "n_a",
             "n_b",
-            "d_num",
+            (-F.col("best.neg_dn")).alias("d_num"),
             F.round(
-                F.col("d_num").cast("double")
-                / (F.col("n_a") * F.col("n_b")).cast("double")
+                F.try_divide(
+                    (-F.col("best.neg_dn")).cast("double"),
+                    (F.col("n_a") * F.col("n_b")).cast("double"),
+                )
                 + F.lit(0.0),
                 6,
             ).alias("ks_d"),
-            "ks_at",
+            F.col("best.v").alias("ks_at"),
         )
     )

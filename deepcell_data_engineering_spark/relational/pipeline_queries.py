@@ -6784,19 +6784,14 @@ def x103(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("m").alias("cm"),
         )
     )
-    # per-layout row totals: every source row emits EXACTLY ONE struct
-    # per layout (explode of a 3-element array), so sum(c) per layout
-    # is identically n_total — which the narrow 2-column stats scan
-    # already computed. The previous vc.groupBy("layout") ran under a
-    # broadcast, and broadcast subtrees escape AQE stage reuse (the
-    # r13 lesson), so it re-executed the ENTIRE exploded aggregation —
-    # the query's most expensive subtree — once more per run. Now the
-    # broadcast side is the cheap stats scan (r14; isolated A/B below).
-    cum = ly.grouped_cumsum(vc, ["layout"], "code", "c").crossJoin(
-        F.broadcast(stats.select(F.col("n_total").cast("long").alias("n")))
-    )
+    # per-layout row totals are the prefix scan's own group totals
+    # (tot), so no separately aggregated total is joined back (a
+    # broadcast vc.groupBy("layout") would re-execute the exploded
+    # aggregation: broadcast subtrees escape AQE stage reuse, the r13
+    # lesson).
+    cum = ly.grouped_cumsum(vc, ["layout"], "code", "c")
     bounds = (
-        ly.boundary_ranges(cum, ["layout"], "code", "c", "n", 64)
+        ly.boundary_ranges(cum, ["layout"], "code", "c", 64)
         .groupBy("layout")
         .agg(F.sort_array(F.collect_list("b")).alias("barr"))
     )
@@ -6940,7 +6935,7 @@ def x104(spark: SparkSession, sf_dir: str) -> DataFrame:
     "MAD has breakdown point 0.5, and the DISC formulation keeps every "
     "statistic an actual data value — exact and hashable across "
     "engines, no interpolated-median float shape. Distributed shape: "
-    "two grouped-histogram median passes (grouped_disc_median — the "
+    "two grouped-histogram median passes (grouped_disc_percentile — the "
     "cumulative window is PARTITIONED BY group, value-histogram "
     "granularity, never a global row sort) + one conditional-count "
     "aggregation; medians broadcast back as 5-row joins.",
@@ -7017,26 +7012,18 @@ def x106(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents")
     )
     # ONE orders scan (r13): the value histogram drives BOTH the
-    # boundary derivation (equi_depth_boundaries' internals, inlined so
-    # the histogram is shared) and the per-range rollup — range ids are
-    # assigned to DISTINCT cents values and the counts regrouped, which
-    # is bit-identical to assigning raw rows (all rows of a value share
-    # a range). Previously the raw scan ran twice (histogram +
-    # assignment); the isNotNull filter mirrors equi_depth_boundaries
-    # (o_totalprice is non-null, so no row is dropped).
+    # boundaries (equi_depth_boundaries' histogram entry) and the
+    # per-range rollup — range ids are assigned to DISTINCT cents
+    # values and the counts regrouped, which is bit-identical to
+    # assigning raw rows (all rows of a value share a range). The
+    # isNotNull filter is the histogram contract (o_totalprice is
+    # non-null, so no row is dropped).
     vc = (
         o.where(F.col("cents").isNotNull())
         .groupBy(F.col("cents").alias("v"))
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    tot = vc.agg(F.sum("c").cast("long").alias("n_total"))
-    cum = ly.grouped_cumsum(vc, [], "v", "c").crossJoin(F.broadcast(tot))
-    bounds = ly.boundary_ranges(
-        cum, ["n_total"], "v", "c", "n_total", 16
-    ).agg(
-        F.max("n_total").alias("n_total"),
-        F.sort_array(F.collect_list("b")).alias("boundaries"),
-    )
+    bounds = ly.equi_depth_boundaries(vc, "v", 16, count_col="c")
     assigned = vc.crossJoin(F.broadcast(bounds)).withColumn(
         "range_id", ly.range_assign(F.col("v"), F.col("boundaries"))
     )
@@ -10389,8 +10376,10 @@ def x142(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ceil(q*n) = (n*q_num + q_den - 1) // q_den — no float q*n; the "
     "cumulative window runs over the per-group VALUE histogram, "
     "~thousands of distinct day values, never rows). The join "
-    "shuffles on orderkey once; the three percentile passes share the "
-    "one histogram shape. Days are exact integer micros division.",
+    "shuffles on orderkey once; ONE grouped aggregate over the "
+    "cumulative histogram picks all three ranks and the group size, "
+    "so there is no separate count and nothing to join back. Days "
+    "are exact integer micros division.",
 )
 def x143(spark: SparkSession, sf_dir: str) -> DataFrame:
     from deepcell_data_engineering_spark.functions.layout import _int_div
@@ -10414,12 +10403,10 @@ def x143(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(86_400_000_000),
         ).alias("days"),
     )
-    cnt = j.groupBy("g").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    p50 = grouped_disc_percentile(j, "g", "days", 1, 2, "p50")
-    p90 = grouped_disc_percentile(j, "g", "days", 9, 10, "p90")
-    p99 = grouped_disc_percentile(j, "g", "days", 99, 100, "p99")
     return (
-        cnt.join(p50, "g").join(p90, "g").join(p99, "g")
+        grouped_disc_percentile(
+            j, "g", "days", {"p50": (1, 2), "p90": (9, 10), "p99": (99, 100)}
+        )
         .select(
             F.col("g").alias("priority"), "n",
             F.col("p50").cast("bigint").alias("p50_days"),
@@ -11884,25 +11871,22 @@ def x159(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(0.9) could tip a ceil across engines. The ENGINE aggregates "
     "the per-(flag, value) WEIGHT histogram, runs the grouped_cumsum "
     "two-phase scan over it (value domain is row-sized; no single-"
-    "partition window), and picks min(v) with cum >= k via a "
-    "broadcast of the 12-row (flag, pct, k) frame. The ORACLE "
+    "partition window) — which also yields each flag's total weight "
+    "— and picks all four min(v) with cum >= k in ONE per-flag "
+    "aggregate, exploded to the 12 output rows. The ORACLE "
     "brute-force EXPANDS every line into `quantity` unit rows "
     "(generate_series lateral — the literal definition of a weighted "
     "quantile) and row-numbers each flag to read the k-th unit "
     "directly: two independent algorithms, identical integer "
     "answers. Ties are safe in both: equal values share a cents key "
     "in the histogram, and whatever order ROW_NUMBER breaks ties in, "
-    "the VALUE at rank k is unique. Output: 12 rows at any scale. "
-    "Declared BNLJ bound (1): the per-flag totals x percentile-"
-    "literals cross attach — |l_returnflag domain| (3) x 4 rows, "
-    "data-size-independent but a grouped aggregate, so not "
-    "plan-provable.",
-    bnlj_bounded=1,
+    "the VALUE at rank k is unique. Output: 12 rows at any scale.",
 )
 def x160(spark: SparkSession, sf_dir: str) -> DataFrame:
     from deepcell_data_engineering_spark.functions.layout import (
-        _int_div,
+        disc_rank,
         grouped_cumsum,
+        value_at_rank,
     )
 
     li = load_table(spark, sf_dir, "lineitem").select(
@@ -11911,47 +11895,24 @@ def x160(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_quantity").cast("long").alias("w"),
     )
     hist = li.groupBy("f", "v").agg(F.sum("w").alias("wc"))
-    cum = grouped_cumsum(hist, ["f"], "v", "wc")
-    tot = hist.groupBy("f").agg(F.sum("wc").cast("long").alias("total_w"))
-    pcts = spark.createDataFrame(
-        [("p25", 1, 4), ("p50", 1, 2), ("p75", 3, 4), ("p90", 9, 10)],
-        "pct STRING, nu LONG, de LONG",
-    )
-    # the 12-row frame renames f -> flag BEFORE the join: with the
-    # qualified-alias form Catalyst's self-join dedup failed to extract
-    # the equality as a hash key (both sides trace to hist.f) and fell
-    # back to BroadcastNestedLoopJoin; with a fresh attribute the plan
-    # is a BroadcastHashJoin on the flag with the cum >= k residual.
-    # (r14 rejected experiment, measured: collecting tot to the driver
-    # and rebuilding ks from LOCAL data cut executed fact scans 5 -> 3
-    # but ran 4x the tasks — AQE stopped coalescing the cum subtree's
-    # exchanges — and 2.4 -> 16 s wall isolated. The tot-under-
-    # broadcast shape stands.)
-    ks = tot.crossJoin(F.broadcast(pcts)).select(
-        F.col("f").alias("flag"),
-        "pct",
-        "total_w",
-        _int_div(
-            F.col("nu") * F.col("total_w") + F.col("de") - F.lit(1),
-            F.col("de"),
-        ).alias("k_target"),
-    )
+    pcts = [("p25", 1, 4), ("p50", 1, 2), ("p75", 3, 4), ("p90", 9, 10)]
+    total_w = F.max("tot")
+    rows = [
+        F.struct(
+            F.lit(pct).alias("pct"),
+            disc_rank(total_w, nu, de).alias("k_target"),
+            total_w.alias("total_w"),
+            value_at_rank(
+                F.col("cum"), F.col("v"), disc_rank(F.col("tot"), nu, de)
+            ).alias("value_cents"),
+        )
+        for pct, nu, de in pcts
+    ]
     return (
-        cum.join(
-            F.broadcast(ks),
-            (F.col("f") == F.col("flag"))
-            & (F.col("cum") >= F.col("k_target")),
-        )
-        .groupBy(
-            F.col("flag").alias("l_returnflag"),
-            "pct",
-            "k_target",
-            "total_w",
-        )
-        .agg(F.min("v").alias("value_cents"))
-        .select(
-            "l_returnflag", "pct", "k_target", "total_w", "value_cents"
-        )
+        grouped_cumsum(hist, ["f"], "v", "wc")
+        .groupBy(F.col("f").alias("l_returnflag"))
+        .agg(F.array(*rows).alias("r"))
+        .select("l_returnflag", F.inline("r"))
         .orderBy("l_returnflag", "pct")
     )
 
@@ -12212,7 +12173,7 @@ def x163(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cum = grouped_cumsum(hist, [], "rev", ["c", "rv"])
     totals = hist.agg(
-        F.sum("c").cast("long").alias("nc"),
+        F.coalesce(F.sum("c"), F.lit(0)).cast("long").alias("nc"),
         F.sum("rv").cast("long").alias("total"),
     )
     deciles = spark.range(1, 11).select(F.col("id").alias("decile"))
@@ -12224,9 +12185,11 @@ def x163(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("k"),
     )
     # the straddling value cell: least rev with cum_c >= k; its
-    # predecessor counts/sums come from the same row (cum - cell)
+    # predecessor counts/sums come from the same row (cum - cell). The
+    # right outer join keeps every decile of ck, so over no customers
+    # (nc coalesced to 0) the 10 rows still come out, with NULL sums.
     hit = (
-        cum.join(F.broadcast(ck), F.col("cum_c") >= F.col("k"))
+        cum.join(F.broadcast(ck), F.col("cum_c") >= F.col("k"), "right")
         .groupBy("decile", "k", "total")
         .agg(F.min_by(F.struct("rev", "c", "rv", "cum_c", "cum_rv"), "rev").alias("s"))
         .select(
@@ -14217,15 +14180,19 @@ def x182(spark: SparkSession, sf_dir: str) -> DataFrame:
     "exactly representable. The ORACLE is DuckDB's own "
     "quantile_cont — an independent third-party implementation (the "
     "x156/x178 pattern). ENGINE: never row-ranks — the per-group "
-    "VALUE HISTOGRAM's grouped_cumsum locates each straddling value "
-    "with two rank probes (least value whose cumulative count "
-    "reaches the target rank, the x163 technique), so cost is one "
-    "histogram shuffle + vocabulary-sized probe joins at any scale.",
+    "VALUE HISTOGRAM's grouped_cumsum (which also carries each "
+    "priority's row count) feeds ONE per-priority aggregate that "
+    "reads both straddling values of all three quartiles (least "
+    "value whose cumulative count reaches the target rank, the x163 "
+    "technique), so cost is one histogram shuffle + one "
+    "vocabulary-sized aggregate at any scale — no probe frame, no "
+    "join.",
 )
 def x183(spark: SparkSession, sf_dir: str) -> DataFrame:
     from deepcell_data_engineering_spark.functions.layout import (
         _int_div,
         grouped_cumsum,
+        value_at_rank,
     )
 
     o = load_table(spark, sf_dir, "orders").select(
@@ -14235,56 +14202,26 @@ def x183(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist = o.groupBy("p", "cents").agg(
         F.count(F.lit(1)).cast("long").alias("c")
     )
-    cum = grouped_cumsum(hist, ["p"], "cents", ["c"])
-    totals = hist.groupBy("p").agg(F.sum("c").cast("long").alias("n"))
-    quarters = spark.range(1, 4).select(F.col("id").alias("q"))
-    idx4 = (F.col("n") - 1) * F.col("q")
-    probes = totals.crossJoin(F.broadcast(quarters)).select(
-        "p",
-        "q",
-        "n",
-        (_int_div(idx4, F.lit(4)) + 1).alias("klo"),
-        F.pmod(idx4, F.lit(4)).cast("long").alias("rem"),
-        F.least(
-            _int_div(idx4, F.lit(4)) + 2, F.col("n")
-        ).alias("khi"),
-    )
-    j = cum.join(F.broadcast(probes), "p")
-    lo = (
-        j.where(F.col("cum_c") >= F.col("klo"))
-        .groupBy("p", "q", "n", "rem")
-        .agg(F.min("cents").alias("xlo"))
-    )
-    hi = (
-        j.where(F.col("cum_c") >= F.col("khi"))
-        .groupBy("p", "q")
-        .agg(F.min("cents").alias("xhi"))
-    )
-    vals = lo.join(hi, ["p", "q"]).select(
-        "p",
-        "q",
-        "n",
-        (
-            (
-                F.col("xlo") * (F.lit(4) - F.col("rem"))
-                + F.col("xhi") * F.col("rem")
-            ).cast("double")
-            / F.lit(4.0)
-        ).alias("v"),
-    )
+    # quartile q: idx4 = (n-1)*q; the value at position idx4/4 is
+    # (x_lo*(4-rem) + x_hi*rem)/4 with x_lo at rank idx4 div 4 + 1,
+    # x_hi at the next rank (clamped to n) and rem = idx4 mod 4
+    def quartile(q):
+        klo = _int_div((F.col("tot") - 1) * q, F.lit(4)) + 1
+        khi = F.least(klo + 1, F.col("tot"))
+        lo = value_at_rank(F.col("cum"), F.col("cents"), klo)
+        hi = value_at_rank(F.col("cum"), F.col("cents"), khi)
+        rem = F.pmod((F.max("tot") - 1) * q, F.lit(4))
+        v = (lo * (F.lit(4) - rem) + hi * rem).cast("double") / F.lit(4.0)
+        return F.round(v + F.lit(0.0), 6)
+
     return (
-        vals.groupBy(F.col("p").alias("o_orderpriority"))
+        grouped_cumsum(hist, ["p"], "cents", "c")
+        .groupBy(F.col("p").alias("o_orderpriority"))
         .agg(
-            F.max("n").cast("long").alias("n_rows"),
-            F.round(
-                F.max(F.when(F.col("q") == 1, F.col("v"))) + F.lit(0.0), 6
-            ).alias("p25"),
-            F.round(
-                F.max(F.when(F.col("q") == 2, F.col("v"))) + F.lit(0.0), 6
-            ).alias("p50"),
-            F.round(
-                F.max(F.when(F.col("q") == 3, F.col("v"))) + F.lit(0.0), 6
-            ).alias("p75"),
+            F.max("tot").alias("n_rows"),
+            quartile(1).alias("p25"),
+            quartile(2).alias("p50"),
+            quartile(3).alias("p75"),
         )
         .orderBy("o_orderpriority")
     )
@@ -15943,7 +15880,9 @@ def x198(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x199(spark: SparkSession, sf_dir: str) -> DataFrame:
     from deepcell_data_engineering_spark.functions.layout import (
+        disc_rank,
         grouped_cumsum,
+        value_at_rank,
     )
 
     vals = load_table(spark, sf_dir, "orders").select(
@@ -15966,15 +15905,15 @@ def x199(spark: SparkSession, sf_dir: str) -> DataFrame:
     # integer SQL. The bin parameters are then rebuilt from literals;
     # the IEEE width expression is unchanged SQL (round/cbrt over the
     # same doubles — constant-folded once), so bins are bit-identical.
-    def rank_value(pct):
-        k = F.expr(f"({pct} * tot_c + 99) div 100")
-        return F.min(F.when(F.col("cum_c") >= k, F.col("cents")))
-
     _q = cum.agg(
         F.max("tot_c").alias("n"),
         F.min("cents").alias("cmin"),
-        rank_value(25).alias("q1"),
-        rank_value(75).alias("q3"),
+        *[
+            value_at_rank(
+                F.col("cum_c"), F.col("cents"), disc_rank(F.col("tot_c"), pct, 100)
+            ).alias(name)
+            for name, pct in (("q1", 25), ("q3", 75))
+        ],
     ).collect()[0]
     if _q["n"] is None:
         # empty orders: no quartiles, no bins — the empty result DuckDB

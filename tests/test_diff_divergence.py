@@ -78,8 +78,10 @@ def test_grouped_disc_percentile_integer_ranks(spark):
     )
 
     df = spark.createDataFrame([Row(g="a", v=float(x)) for x in range(1, 21)])
-    p25 = grouped_disc_percentile(df, "g", "v", 1, 4, "p").collect()[0]["p"]
-    p75 = grouped_disc_percentile(df, "g", "v", 3, 4, "p").collect()[0]["p"]
+    r = grouped_disc_percentile(
+        df, "g", "v", {"p25": (1, 4), "p75": (3, 4)}
+    ).collect()[0]
+    p25, p75 = r["p25"], r["p75"]
     assert p25 == 5.0 and p75 == 15.0  # ranks ceil(20/4)=5, ceil(60/4)=15
 
 

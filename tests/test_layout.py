@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from deepcell_data_engineering_spark.functions import layout as ly
 from deepcell_data_engineering_spark.functions.sampling import weighted_sample
 from deepcell_data_engineering_spark.functions.stats import (
-    grouped_disc_median,
+    grouped_disc_percentile,
     mad_outlier_report,
 )
 
@@ -116,7 +116,9 @@ def test_grouped_disc_median_lower_convention(spark):
     )
     med = {
         r["g"]: r["med"]
-        for r in grouped_disc_median(df, "g", "v").collect()
+        for r in grouped_disc_percentile(
+            df, "g", "v", {"med": (1, 2)}
+        ).collect()
     }
     # even group: LOWER median (rank ceil(4/2)=2) -> 2, not 2.5
     assert med == {"a": 2.0, "b": 20.0}
@@ -380,3 +382,49 @@ def test_grouped_cumsum_group_totals(spark):
             if r["g"] not in last or r["k"] > last[r["g"]]["k"]:
                 last[r["g"]] = r
         assert all(r["cum"] == r["tot"] for r in last.values()), n_parts
+
+
+def test_disc_rank_is_exact_integer_ceil(spark):
+    """disc_rank(n, nu, de) is ceil(nu*n/de) in exact integer
+    arithmetic, including counts past a double's 53-bit mantissa."""
+    ns = [0, 1, 7, 2**40 + 3]
+    fracs = [(1, 2), (1, 4), (3, 4), (9, 10), (99, 100), (1, 1), (2, 3)]
+    df = spark.createDataFrame([(n,) for n in ns], "n long")
+    got = df.select(
+        "n",
+        *[
+            ly.disc_rank(F.col("n"), nu, de).alias(f"k_{nu}_{de}")
+            for nu, de in fracs
+        ],
+    ).collect()
+    assert len(got) == len(ns)
+    for r in got:
+        for nu, de in fracs:
+            assert r[f"k_{nu}_{de}"] == (nu * r["n"] + de - 1) // de, (
+                r["n"], nu, de
+            )
+
+
+def test_value_at_rank_least_value_and_null_when_unreached(spark):
+    """value_at_rank picks the least value whose running count reaches
+    k — on a tie of running counts too — and is NULL when no row
+    reaches k."""
+    # a cumulative histogram: values 10, 20 share cum 3 (20 has c=0)
+    df = spark.createDataFrame(
+        [("a", 10, 3), ("a", 20, 3), ("a", 30, 5), ("b", 7, 2)],
+        "g string, v long, cum long",
+    )
+    got = {
+        r["g"]: (r["k3"], r["k4"], r["k6"])
+        for r in df.groupBy("g")
+        .agg(
+            *[
+                ly.value_at_rank(F.col("cum"), F.col("v"), F.lit(k)).alias(
+                    f"k{k}"
+                )
+                for k in (3, 4, 6)
+            ]
+        )
+        .collect()
+    }
+    assert got == {"a": (10, 30, None), "b": (None, None, None)}

@@ -53,18 +53,30 @@ def test_profile_record_splits_build_from_collect(spark):
 def test_quantile_queries_job_budget(spark):
     """The histogram-quantile queries stay within their Spark job
     budgets: x199 takes n, min and both quartiles in ONE action over
-    the prefix scan (its group total rides the scan), and x63 reads
-    group sizes from windows instead of a joined-back aggregate."""
+    the prefix scan (its group total rides the scan), x63 reads group
+    sizes from windows instead of a joined-back aggregate, and the
+    exact-quantile queries read their totals from the prefix scan and
+    pick every rank in one conditional-min aggregate (no probe frame,
+    no total joined back; x163 keeps its probe join)."""
     x199 = prof.profile(
         spark, "x199_fd_histogram", QUERIES["x199_fd_histogram"].build,
         SF_SMOKE, 1,
     )
     assert x199["build_jobs"] <= 9
-    x63 = prof.profile(
-        spark, "x63_hist_quantiles", QUERIES["x63_hist_quantiles"].build,
-        SF_SMOKE, 1,
-    )
-    assert x63["collect_jobs"] <= 7
+    budgets = {
+        "x63_hist_quantiles": 7,
+        "x103_zorder_skipping": 21,
+        "x106_range_partition_plan": 12,
+        "x108_winsorized_stats": 7,
+        "x143_ship_latency_quantiles": 6,
+        "x158_ks_two_sample": 9,
+        "x160_weighted_quantiles": 11,
+        "x163_lorenz_deciles": 15,
+        "x183_percentile_cont": 11,
+    }
+    for name, jobs in budgets.items():
+        rec = prof.profile(spark, name, QUERIES[name].build, SF_SMOKE, 1)
+        assert rec["collect_jobs"] <= jobs, (name, rec["collect_jobs"])
 
 
 def test_unknown_name_raises_before_a_session_starts(monkeypatch):

@@ -201,7 +201,7 @@ QUERIES = [
     # x180 one feature pass + fingerprint-keeper join + stage agg.
     "x180_cleaning_funnel",
     # x181/x182 calendar-sized daily windows over one fact scan; x183
-    # histogram prefix scan + vocabulary probe joins.
+    # histogram prefix scan + one per-priority rank aggregate.
     "x181_max_drawdown",
     "x182_trailing_range_frame",
     "x183_percentile_cont",
