@@ -152,8 +152,10 @@ def grouped_cumsum(
 
     The result is independent of where the range partitioner split
     (any split of a sorted sequence yields the same prefix sums), so
-    its sampling nondeterminism cannot move a result. Returns ``hist``
-    plus long ``cum`` and ``tot`` columns: ``tot`` is the whole group's
+    its sampling nondeterminism cannot move a result. Returns the
+    group, order and count columns of ``hist`` (any other column is
+    dropped: join it back by group and order value) plus long ``cum``
+    and ``tot`` columns: ``tot`` is the whole group's
     sum of ``count_col``, a whole-group window over the tiny offsets
     frame (≤ n_parts × |groups| rows) that rides the same broadcast,
     so a caller needs no separately aggregated total joined back. Pass
@@ -187,13 +189,20 @@ def grouped_cumsum(
     outside their joined bucket's range and the job FAILS loudly
     rather than returning wrong cumulative sums. (Ties cannot
     straddle a range split — equal keys share a bucket — so on
-    consistent splits the assertion can never fire.)"""
+    consistent splits the assertion can never fire.) Reuse needs both
+    branches to read the same columns below the range exchange, or
+    column pruning splits it in two: so ``hist`` is narrowed to the
+    group, order and count columns up front, and every ``cum``/``tot``
+    output goes through the guard, whose error message reads every
+    count column's partial sum and offset — whichever outputs a caller
+    reads, both branches need all of them."""
     from pyspark.sql import Window
 
     single = isinstance(count_col, str)
     count_cols = [count_col] if single else list(count_col)
     if n_parts is None:
         n_parts = hist.sparkSession.sparkContext.defaultParallelism
+    hist = hist.select(*group_cols, order_col, *count_cols)
     parts = hist.repartitionByRange(
         n_parts, *group_cols, order_col
     ).withColumn("_pid", F.spark_partition_id())
@@ -221,8 +230,7 @@ def grouped_cumsum(
             f"_off_{c}",
             F.coalesce(F.sum(f"_ptot_{c}").over(woff), F.lit(0)),
         ).withColumn(
-            "tot" if single else f"tot_{c}",
-            F.sum(f"_ptot_{c}").over(wgroup).cast("long"),
+            f"_tot_{c}", F.sum(f"_ptot_{c}").over(wgroup).cast("long")
         )
     offsets = offsets.drop(*[f"_ptot_{c}" for c in count_cols])
     # the assertion lives INSIDE the cum expression so column pruning
@@ -234,10 +242,17 @@ def grouped_cumsum(
     guard = F.assert_true(
         F.col(order_col).isNull()
         | F.col(order_col).between(F.col("_olo"), F.col("_ohi")),
-        F.lit(
-            "grouped_cumsum: partial and offset branches saw "
-            "different range splits (exchange reuse disabled or "
-            "plan divergence) — cumulative sums would be wrong"
+        F.concat_ws(
+            " ",
+            F.lit(
+                "grouped_cumsum: partial and offset branches saw "
+                "different range splits (exchange reuse disabled or "
+                "plan divergence) — cumulative sums would be wrong; "
+                "row, partial sums, offsets:"
+            ),
+            F.col(order_col).cast("string"),
+            *[F.col(f"_pcum_{c}").cast("string") for c in count_cols],
+            *[F.col(f"_off_{c}").cast("string") for c in count_cols],
         ),
     )
     out = partial.join(F.broadcast(offsets), ["_pid", *group_cols])
@@ -247,13 +262,15 @@ def grouped_cumsum(
             F.when(
                 guard.isNull(), F.col(f"_pcum_{c}") + F.col(f"_off_{c}")
             ).cast("long"),
+        ).withColumn(
+            "tot" if single else f"tot_{c}",
+            F.when(guard.isNull(), F.col(f"_tot_{c}")),
         )
     return out.drop(
         "_pid",
         "_olo",
         "_ohi",
-        *[f"_pcum_{c}" for c in count_cols],
-        *[f"_off_{c}" for c in count_cols],
+        *[f"_{x}_{c}" for x in ("pcum", "off", "tot") for c in count_cols],
     )
 
 
@@ -316,40 +333,30 @@ def boundary_ranges(
 
 
 def equi_depth_boundaries(
-    df: DataFrame, value_col: str, n_ranges: int, count_col: str | None = None
+    hist: DataFrame, value_col: str, count_col: str, n_ranges: int
 ) -> DataFrame:
     """Exact equi-depth range-partition boundaries: the (n_ranges - 1)
     values at ranks ceil(i * n / n_ranges), i = 1..n_ranges-1 — the
     exact version of what ``repartitionByRange`` estimates by
-    reservoir sampling. Returns a 1-row DataFrame with ``boundaries``
-    (sorted array) and ``n_total``. Pass ``count_col`` when ``df`` is
-    already the VALUE HISTOGRAM (one row per distinct non-NULL
-    ``value_col``, its row count in ``count_col``), so a caller that
-    also needs the histogram builds it once.
+    reservoir sampling. ``hist`` is the VALUE HISTOGRAM (one row per
+    distinct non-NULL ``value_col``, its row count in ``count_col``:
+    ``df.groupBy(v).count()``), so a caller that also needs the
+    histogram builds it once. Returns a 1-row DataFrame with
+    ``boundaries`` (sorted array) and ``n_total``.
 
-    Distributed shape: groupBy(value).count builds the VALUE HISTOGRAM;
-    the prefix sum over it is the two-phase :func:`grouped_cumsum`
-    (range-repartition + per-partition scans + broadcast offsets), so
-    no single task ever sorts the whole histogram even when the value
-    is near-unique, and the row total rides the same scan (``tot``);
-    boundaries then fall out of per-row integer arithmetic
-    (:func:`boundary_ranges`) — no driver scalar per boundary, no
-    global row sort, no target join."""
-    if count_col is None:
-        vc = (
-            df.where(F.col(value_col).isNotNull())
-            .groupBy(F.col(value_col).alias("v"))
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-    else:
-        vc = df.select(F.col(value_col).alias("v"), F.col(count_col).alias("c"))
+    Distributed shape: the prefix sum over the histogram is the
+    two-phase :func:`grouped_cumsum` (range-repartition +
+    per-partition scans + broadcast offsets), so no single task ever
+    sorts the whole histogram even when the value is near-unique, and
+    the row total rides the same scan (``tot``); boundaries then fall
+    out of per-row integer arithmetic (:func:`boundary_ranges`) — no
+    driver scalar per boundary, no global row sort, no target join."""
     # global (no-grouping) collapse: the total is constant across rows,
     # so max() carries it — and the plan-contract sweep can PROVE the
     # frame is 1 row when a caller broadcasts it into a cross join
     # (a groupBy on the constant would be 1 row only by construction)
-    return boundary_ranges(
-        grouped_cumsum(vc, [], "v", "c"), ["tot"], "v", "c", n_ranges
-    ).agg(
+    cum = grouped_cumsum(hist, [], value_col, count_col)
+    return boundary_ranges(cum, ["tot"], value_col, count_col, n_ranges).agg(
         F.max("tot").alias("n_total"),
         F.sort_array(F.collect_list("b")).alias("boundaries"),
     )

@@ -430,13 +430,18 @@ def grouped_disc_percentile(
     runs in parallel and no stage sees a global row sort; then ONE
     grouped aggregate picks every rank (:func:`layout.value_at_rank`).
     Returns (group_col, n, *names): n counts the group's non-NULL
-    values."""
+    values only (percentile_disc ignores NULLs), so it is COUNT(value),
+    not COUNT(*); a fraction may not be named ``n`` or ``group_col``."""
     from pyspark.sql import Window
 
     from deepcell_data_engineering_spark.functions.layout import (
         disc_rank,
         value_at_rank,
     )
+
+    clash = {"n", group_col} & set(fractions)
+    if clash:
+        raise ValueError(f"fraction names clash with output columns: {clash}")
 
     vc = (
         df.where(F.col(value_col).isNotNull())
@@ -476,8 +481,9 @@ def mad_outlier_report(
     row per group: n, med, mad, n_outliers, n_low, n_high."""
     med = grouped_disc_percentile(df, group_col, value_col, {"med": (1, 2)})
     dev = (
-        df.where(F.col(value_col).isNotNull())
-        .join(F.broadcast(med), group_col)
+        df.select(group_col, value_col)
+        .where(F.col(value_col).isNotNull())
+        .join(F.broadcast(med.drop("n")), group_col)
         .withColumn("dev", F.abs(F.col(value_col) - F.col("med")))
     )
     mad = grouped_disc_percentile(dev, group_col, "dev", {"mad": (1, 2)})
@@ -486,7 +492,7 @@ def mad_outlier_report(
         dev.join(F.broadcast(mad.drop("n")), group_col)
         .groupBy(group_col)
         .agg(
-            F.max("n").alias("n"),
+            F.count(F.lit(1)).cast("long").alias("n"),
             F.min("med").alias("med"),
             F.min("mad").alias("mad"),
             F.sum(F.when(out, 1).otherwise(0)).cast("long").alias("n_outliers"),
@@ -528,11 +534,12 @@ def winsorized_stats(
     v = F.col(value_col)
     clip = F.least(F.greatest(v, F.col("p_lo")), F.col("p_hi"))
     return (
-        df.where(v.isNotNull())
-        .join(F.broadcast(ps), group_col)
+        df.select(group_col, value_col)
+        .where(v.isNotNull())
+        .join(F.broadcast(ps.drop("n")), group_col)
         .groupBy(group_col)
         .agg(
-            F.max("n").alias("n"),
+            F.count(F.lit(1)).cast("long").alias("n"),
             F.min("p_lo").alias("p_lo"),
             F.min("p_hi").alias("p_hi"),
             F.sum(F.when(v < F.col("p_lo"), 1).otherwise(0))

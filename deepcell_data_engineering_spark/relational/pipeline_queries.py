@@ -6992,9 +6992,9 @@ def x105(spark: SparkSession, sf_dir: str) -> DataFrame:
     "repartitionByRange approximates by reservoir sampling, done "
     "exactly and certified: 15 boundary values at ranks "
     "ceil(i*n/16) over orders' price in integer cents (d49 money "
-    "convention), derived from a cumulative window over the VALUE "
-    "HISTOGRAM (distinct cents — bounded vocabulary), never a global "
-    "row sort; each row's range_id is then a map-side higher-order "
+    "convention), derived from a distributed prefix sum over the "
+    "VALUE HISTOGRAM (distinct cents) whose group total is n, never a "
+    "global row sort; each row's range_id is then a map-side higher-order "
     "count of boundaries below its value against the 1-row broadcast "
     "boundary array (RangePartitioner.getPartition's contract). The "
     "report certifies the plan in-query: per-range row counts with "
@@ -7012,7 +7012,7 @@ def x106(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents")
     )
     # ONE orders scan (r13): the value histogram drives BOTH the
-    # boundaries (equi_depth_boundaries' histogram entry) and the
+    # boundaries (equi_depth_boundaries takes the histogram) and the
     # per-range rollup — range ids are assigned to DISTINCT cents
     # values and the counts regrouped, which is bit-identical to
     # assigning raw rows (all rows of a value share a range). The
@@ -7023,7 +7023,7 @@ def x106(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("cents").alias("v"))
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    bounds = ly.equi_depth_boundaries(vc, "v", 16, count_col="c")
+    bounds = ly.equi_depth_boundaries(vc, "v", "c", 16)
     assigned = vc.crossJoin(F.broadcast(bounds)).withColumn(
         "range_id", ly.range_assign(F.col("v"), F.col("boundaries"))
     )
@@ -10378,8 +10378,10 @@ def x142(spark: SparkSession, sf_dir: str) -> DataFrame:
     "~thousands of distinct day values, never rows). The join "
     "shuffles on orderkey once; ONE grouped aggregate over the "
     "cumulative histogram picks all three ranks and the group size, "
-    "so there is no separate count and nothing to join back. Days "
-    "are exact integer micros division.",
+    "so there is no separate count and nothing to join back. That "
+    "size counts non-NULL days where the oracle's cnt counts joined "
+    "rows; the two agree because TPC-H ship and order dates are never "
+    "NULL. Days are exact integer micros division.",
 )
 def x143(spark: SparkSession, sf_dir: str) -> DataFrame:
     from deepcell_data_engineering_spark.functions.layout import _int_div
@@ -12185,13 +12187,26 @@ def x163(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("k"),
     )
     # the straddling value cell: least rev with cum_c >= k; its
-    # predecessor counts/sums come from the same row (cum - cell). The
-    # right outer join keeps every decile of ck, so over no customers
-    # (nc coalesced to 0) the 10 rows still come out, with NULL sums.
+    # predecessor counts/sums come from the same row (cum - cell).
+    # One padding row per decile (k = 0, NULL cell) rides the same
+    # aggregate, so zero customers (no probe match) still yield 10
+    # rows: a NULL rev never wins min_by and k = 0 never wins max.
+    probe = cum.join(F.broadcast(ck), F.col("cum_c") >= F.col("k"))
+    cols = ["total", "rev", "c", "rv", "cum_c", "cum_rv"]
+    pad = deciles.select(
+        "decile",
+        F.lit(0).cast("long").alias("k"),
+        *[F.lit(None).cast("long").alias(c) for c in cols],
+    )
     hit = (
-        cum.join(F.broadcast(ck), F.col("cum_c") >= F.col("k"), "right")
-        .groupBy("decile", "k", "total")
-        .agg(F.min_by(F.struct("rev", "c", "rv", "cum_c", "cum_rv"), "rev").alias("s"))
+        probe.select("decile", "k", *cols)
+        .unionByName(pad)
+        .groupBy("decile")
+        .agg(
+            F.max("k").alias("k"),
+            F.max("total").alias("total"),
+            F.min_by(F.struct(*cols[1:]), "rev").alias("s"),
+        )
         .select(
             "decile",
             "k",

@@ -69,12 +69,13 @@ def test_fixed_width_buckets_bounds(spark):
 def test_equi_depth_boundaries_and_assign(spark):
     # 1..100, 4 ranges -> boundaries at ranks 25/50/75 = values 25/50/75
     df = spark.range(1, 101).select(F.col("id").alias("v"))
-    brow = ly.equi_depth_boundaries(df, "v", 4).collect()[0]
+    hist = df.groupBy("v").count()
+    brow = ly.equi_depth_boundaries(hist, "v", "count", 4).collect()[0]
     assert brow["n_total"] == 100
     assert brow["boundaries"] == [25, 50, 75]
     a = (
         df.crossJoin(
-            F.broadcast(ly.equi_depth_boundaries(df, "v", 4))
+            F.broadcast(ly.equi_depth_boundaries(hist, "v", "count", 4))
         )
         .withColumn("r", ly.range_assign(F.col("v"), F.col("boundaries")))
         .groupBy("r")
@@ -93,7 +94,7 @@ def test_equi_depth_duplicate_heavy_value(spark):
     # ranges stay value-disjoint
     rows = [Row(v=1)] * 60 + [Row(v=i) for i in range(2, 42)]
     df = spark.createDataFrame(rows)
-    bounds = ly.equi_depth_boundaries(df, "v", 4)
+    bounds = ly.equi_depth_boundaries(df.groupBy("v").count(), "v", "count", 4)
     a = (
         df.crossJoin(F.broadcast(bounds))
         .withColumn("r", ly.range_assign(F.col("v"), F.col("boundaries")))
@@ -134,6 +135,27 @@ def test_mad_outlier_report_flags_only_the_spike(spark):
     assert rep["n_outliers"] == 1 and rep["n_high"] == 1 and rep["n_low"] == 0
     # the spike itself did not drag the center: median stays in the base
     assert 10 <= rep["med"] <= 16
+
+
+def test_robust_reports_ignore_caller_columns_named_like_outputs(spark):
+    """The percentile frame's ``n`` never meets a caller column of the
+    same name: both reports count their own rows, and a fraction
+    named ``n`` (or like the group column) is refused up front."""
+    from deepcell_data_engineering_spark.functions.stats import (
+        winsorized_stats,
+    )
+
+    df = spark.createDataFrame(
+        [Row(g="a", v=float(x), n=-1, med=-1.0) for x in range(1, 21)]
+        + [Row(g="a", v=None, n=-1, med=-1.0)]
+    )
+    mad = mad_outlier_report(df, "g", "v").collect()[0]
+    assert mad["n"] == 20 and mad["med"] == 10.0
+    win = winsorized_stats(df, "g", "v").collect()[0]
+    assert win["n"] == 20 and (win["p_lo"], win["p_hi"]) == (1.0, 19.0)
+    for bad in ("n", "g"):
+        with pytest.raises(ValueError, match="clash"):
+            grouped_disc_percentile(df, "g", "v", {bad: (1, 2)})
 
 
 def test_weighted_sample_merge_equals_rebuild(spark, sf_dir):
@@ -269,6 +291,47 @@ def test_grouped_cumsum_branches_reuse_one_range_exchange(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "ReusedExchange" in plan
     assert "rangepartitioning" in plan
+
+
+def test_grouped_cumsum_any_output_subset_keeps_one_range_exchange(spark):
+    """Whichever of the outputs a caller reads (a total without its
+    running sum, one measure's total beside another's running sum),
+    column pruning must leave both branches reading the same columns
+    below the range exchange, so it stays ONE exchange, reused; two
+    independently sampled exchanges would trip the same-splits guard
+    at run time. Columns other than group, order and count are not
+    carried through."""
+    from deepcell_data_engineering_spark.functions.layout import (
+        grouped_cumsum,
+    )
+
+    hist = spark.range(10_000).select(
+        (F.col("id") % 5).alias("g"),
+        F.col("id").alias("v"),
+        (F.col("id") % 3 + 1).alias("c"),
+        (F.col("id") * 3).alias("rv"),
+        F.lit("x").alias("extra"),
+    )
+    cum = grouped_cumsum(hist, ["g"], "v", ["c", "rv"], n_parts=8)
+    assert "extra" not in cum.columns
+    for cols in (
+        ["g", "v", "tot_c", "cum_rv"],
+        ["g", "tot_rv"],
+        ["v", "cum_c"],
+        ["g", "tot_c", "tot_rv"],
+    ):
+        out = cum.select(*cols)
+        assert len(out.collect()) == 10_000, cols
+        final = (
+            out._jdf.queryExecution().executedPlan().toString()
+            .split("Initial Plan")[0]
+        )
+        fresh = [
+            ln for ln in final.splitlines()
+            if "Exchange rangepartitioning" in ln
+            and "ReusedExchange" not in ln
+        ]
+        assert len(fresh) == 1, (cols, fresh)
 
 
 def test_grouped_cumsum_null_order_values_pass_the_tripwire(spark):
