@@ -34,37 +34,39 @@ def entry(spark: SparkSession) -> DataFrame:
 # The window is rebuilt each round from the committed correctness
 # verdicts (CORRECTNESS_r*.json): first the queries whose code changed since
 # their last verdict, then the queries whose last verdict is oldest,
-# in registry order. This round: the eleven exact-quantile queries
-# that now read their totals from the prefix scan and pick their
-# ranks in one conditional-min aggregate (x76 and x199 through the
-# shared rank helpers), then the rest of the round-11 verdicts
-# (x84–x112, x153–x164) in registry order, then round-12 verdicts in
-# registry order up to 50. The previous window (x63, the other
-# grouped_cumsum callers, the round-10 rest and x73–x83) leaves it.
+# in registry order. This round: the 21 snapshot-layer queries now on
+# the shared scratch-table scaffold (driver-sorted local results, a
+# guarded max key), then x87/x90/x91/x154/x197 (zero-row guards on
+# their ratios and date span), then the rest of the round-12 verdicts
+# in registry order up to 50. The previous window (the exact-quantile
+# queries, the round-11 rest and d01–d10) leaves it.
 _CHECK_FIRST = [
-    # exact-quantile queries on the shared rank lookup
-    "x103_zorder_skipping", "x105_mad_outliers",
-    "x106_range_partition_plan", "x108_winsorized_stats",
-    "x143_ship_latency_quantiles", "x158_ks_two_sample",
-    "x160_weighted_quantiles", "x163_lorenz_deciles",
-    "x183_percentile_cont", "x199_fd_histogram", "x76_quality_gate_corpus",
-    # last verdict in round 11, registry order
-    "x84_split_leakage", "x85_skew_report", "x86_join_order_plan",
-    "x87_table_profile", "x88_kmv_incremental", "x89_retention_cohorts",
-    "x90_cbo_estimates", "x91_profile_approx_certified", "x92_ivfpq_topk",
-    "x93_approx_quantile_certified", "x94_adaptive_salted_join",
-    "x95_adaptive_lsh", "x96_ivfpq_residual_topk",
-    "x97_python_datasource", "x98_polymorphic_udtf",
-    "x99_ewma_user_value", "x100_cms_incremental", "x101_scd2_build",
-    "x102_point_in_time_join", "x104_weighted_sample_incremental",
-    "x107_snapshot_audit", "x109_corpus_divergence",
-    "x110_event_pattern_match", "x111_trend_slope", "x112_welch_ttest",
-    "x153_mann_whitney_u", "x154_ref_integrity_audit", "x156_grouped_ols",
-    "x157_mutual_information", "x159_market_basket", "x161_heaps_law",
-    "x162_delete_feed_view", "x164_stats_pruned_scan",
+    # snapshot-layer queries on the shared scaffold
+    "x127_time_travel_audit", "x128_format_interop",
+    "x132_optimize_equivalence", "x145_cdc_incremental_view",
+    "x151_merge_feed_view", "x162_delete_feed_view",
+    "x164_stats_pruned_scan", "x165_catalog_named_view",
+    "x166_scoped_cdc_view", "x167_schema_evolution_merge",
+    "x177_restore_feed_view", "x184_catalog_rename_view",
+    "x185_lifecycle_clone_restore", "x196_tombstone_merge_feed",
+    "x200_update_feed_view", "x201_constraint_gate",
+    "x202_constraint_lifecycle", "x203_stream_rate_feed",
+    "x217_vacuum_lifecycle", "x218_replace_where_lifecycle",
+    "x230_zorder_lifecycle",
+    # zero-row guards
+    "x87_table_profile", "x90_cbo_estimates",
+    "x91_profile_approx_certified", "x154_ref_integrity_audit",
+    "x197_time_embargo_split",
     # last verdict in round 12, registry order
-    "d01_scan_filter", "d02_like_strings", "d03_natural_sort", "d04_topk",
-    "d05_distinct", "d10_inner_join",
+    "d11_star_join_agg", "d12_left_join", "d13_semi_join", "d14_anti_join",
+    "d15_range_join", "d16_cross_join", "d17_grouped_agg",
+    "d18_count_distinct_having", "d19_median", "d20_rollup",
+    "d21_grouping_sets", "d22_conditional_agg", "d23_window_rank",
+    "d24_window_lag_lead", "d25_window_running_max",
+    "x113_retraction_certified", "x114_gram_matrix",
+    "x117_link_prediction", "x119_ivm_join_delta",
+    "x120_session_incident_overlap", "x129_pretokenize_vocab",
+    "x130_table_checksum", "x131_markov_anomaly", "x169_chi_squared",
 ]
 
 

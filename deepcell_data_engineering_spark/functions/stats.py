@@ -390,8 +390,8 @@ def table_profile(
             f"'{c}'",
             "__n",
             f"(__n - __cnt_{c})",
-            f"round(cast(__n - __cnt_{c} as double)"
-            f" / cast(__n as double) + 0.0D, 4)",
+            f"round(try_divide(cast(__n - __cnt_{c} as double),"
+            f" cast(__n as double)) + 0.0D, 4)",
             f"__ndv_{c}",
             f"__min_{c}" if kd != "dbl" else "cast(null as string)",
             f"__max_{c}" if kd != "dbl" else "cast(null as string)",

@@ -9,6 +9,10 @@ in both engines) instead of engine-local hash functions.
 
 from __future__ import annotations
 
+import contextlib
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -5409,7 +5413,9 @@ def x90(spark: SparkSession, sf_dir: str) -> DataFrame:
             cms_build(counts_b, "k", width=4096, depth=4, count_col="cb"),
         )
         (n_a, ndv_a), (n_b, ndv_b) = stats[ka], stats[kb]
-        est_stats = (n_a * n_b) // max(ndv_a, ndv_b)
+        # DuckDB's x // 0 is NULL: no keys on either side, no estimate
+        ndv = max(ndv_a, ndv_b)
+        est_stats = (n_a * n_b) // ndv if ndv else None
         exact = (
             counts_a.join(counts_b, "k")
             .agg(
@@ -8649,6 +8655,73 @@ def x126(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# ---------------------------------------------------------------------------
+# Lakehouse-certification scaffold: the snapshot-layer queries commit into
+# private scratch tables, fold them, and return a few driver-side rows.
+# ---------------------------------------------------------------------------
+
+
+@contextlib.contextmanager
+def _scratch_root(prefix: str):
+    """A fresh temp directory for a query's private tables, removed on
+    exit: a query collects its result before it leaves the block."""
+    root = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield root
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def _orders_kpc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``orders`` as ``(k, p, cents)``: order key, priority and the
+    total price in integer cents."""
+    return load_table(spark, sf_dir, "orders").select(
+        F.col("o_orderkey").alias("k"),
+        F.col("o_orderpriority").alias("p"),
+        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
+    )
+
+
+def _max_key(base: DataFrame) -> int:
+    """The largest ``k`` of ``base``, or 0 when it has no rows. Every key
+    range a query derives from it is then empty, so zero-row facts give
+    zero rows rather than a ``TypeError`` on a NULL max."""
+    [(mk,)] = base.agg(F.coalesce(F.max("k"), F.lit(0))).collect()
+    return int(mk)
+
+
+def _by_priority(df: DataFrame, signed: bool = False) -> DataFrame:
+    """Per-priority ``(o_orderpriority, n_orders, sum_cents)`` of a
+    ``(p, cents)`` frame. ``signed`` reads ``df`` as a change feed and
+    weighs each row +1 (insert) or -1 (delete): the view's delta."""
+    if signed:
+        sign = F.when(F.col("_change_type") == "insert", 1).otherwise(-1)
+        n, cents = F.sum(sign), F.sum(sign * F.col("cents"))
+    else:
+        n, cents = F.count(F.lit(1)), F.sum("cents")
+    return df.groupBy(F.col("p").alias("o_orderpriority")).agg(
+        n.cast("bigint").alias("n_orders"),
+        cents.cast("bigint").alias("sum_cents"),
+    )
+
+
+def _local_result(
+    spark: SparkSession, df: DataFrame, order_by: str, **consts: int
+) -> DataFrame:
+    """``df`` collected now, as a local frame sorted on the driver by
+    ``order_by`` ascending with NULLs first (Spark's ascending order),
+    plus one BIGINT literal column per ``consts`` entry in argument
+    order. The result is a handful of rows, so sorting them here spares
+    the sampling jobs of an ``orderBy`` range exchange."""
+    rows = sorted(
+        df.collect(), key=lambda r: (r[order_by] is not None, r[order_by])
+    )
+    out = spark.createDataFrame(rows, df.schema)
+    for name, value in consts.items():
+        out = out.withColumn(name, F.lit(value).cast("bigint"))
+    return out
+
+
 @_q(
     "x127_time_travel_audit",
     """WITH m AS (SELECT doc_id % 3 AS m3, source, n_chars
@@ -8685,16 +8758,12 @@ def x126(spark: SparkSession, sf_dir: str) -> DataFrame:
     "removed after the scans complete.",
 )
 def x127(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from deepcell_data_engineering_spark.sources import snapshots as snap
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    t = tempfile.mkdtemp(prefix="dde_snapshot_audit_")
-    try:
+    with _scratch_root("dde_snapshot_audit_") as t:
         snap.commit(spark, docs.where(F.col("doc_id") % 3 == 0), t)
         snap.commit(
             spark, docs.where(F.col("doc_id") % 3 == 1), t, mode="append"
@@ -8716,12 +8785,11 @@ def x127(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .collect()[0]
             )
             rows.append((v, r["n_docs"], r["n_sources"], r["sum_chars"]))
-    finally:
-        shutil.rmtree(t, ignore_errors=True)
+    # rows are built in version order
     return spark.createDataFrame(
         rows,
         "version BIGINT, n_docs BIGINT, n_sources BIGINT, sum_chars BIGINT",
-    ).orderBy("version")
+    )
 
 
 @_q(
@@ -8760,8 +8828,6 @@ def x127(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x128(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
-    import tempfile
 
     from deepcell_data_engineering_spark.sources import corpus as cps
 
@@ -8778,9 +8844,7 @@ def x128(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
         )
     )
-    t = tempfile.mkdtemp(prefix="dde_interop_")
-    rows = []
-    try:
+    with _scratch_root("dde_interop_") as t:
         writers = {
             "jsonl": lambda: cps.write_jsonl(base, os.path.join(t, "jsonl")),
             "csv": lambda: cps.write_csv(base, os.path.join(t, "csv")),
@@ -8833,13 +8897,11 @@ def x128(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         with ThreadPoolExecutor(max_workers=4) as pool:
             rows = sorted(pool.map(_roundtrip, sorted(readers)))
-    finally:
-        shutil.rmtree(t, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "fmt STRING, n BIGINT, n_users BIGINT, sum_cents BIGINT, "
         "min_id BIGINT, max_id BIGINT",
-    ).orderBy("fmt")
+    )
 
 
 @_q(
@@ -9065,16 +9127,12 @@ def x131(spark: SparkSession, sf_dir: str) -> DataFrame:
     "jobs; only the 2-row audit and KB manifests are driver state.",
 )
 def x132(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from deepcell_data_engineering_spark.sources import snapshots as snap
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    t = tempfile.mkdtemp(prefix="dde_optimize_equiv_")
-    try:
+    with _scratch_root("dde_optimize_equiv_") as t:
         snap.commit(spark, docs.repartition(16), t)
         v1 = snap.optimize_table(spark, t, target_file_bytes=128 << 20)
         ops = {h["version"]: h["op"] for h in snap.history(t)}
@@ -9108,13 +9166,11 @@ def x132(spark: SparkSession, sf_dir: str) -> DataFrame:
                 int(per_v[v1]["n_files"] < per_v[0]["n_files"]),
             ),
         ]
-    finally:
-        shutil.rmtree(t, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "version BIGINT, op STRING, n_docs BIGINT, n_sources BIGINT, "
         "sum_chars BIGINT, compacted BIGINT",
-    ).orderBy("version")
+    )
 
 
 @_q(
@@ -10518,9 +10574,6 @@ def x144(spark: SparkSession, sf_dir: str) -> DataFrame:
     "update, build_utils.py's overwrite-by-filename convention).",
 )
 def x145(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from deepcell_data_engineering_spark.functions.stats import (
         merge_grouped_sums,
     )
@@ -10529,8 +10582,7 @@ def x145(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    t = tempfile.mkdtemp(prefix="dde_cdc_view_")
-    try:
+    with _scratch_root("dde_cdc_view_") as t:
         v0 = snap.commit(spark, docs.where(F.col("doc_id") % 3 == 0), t)
         snap.commit(
             spark, docs.where(F.col("doc_id") % 3 != 0), t, mode="append"
@@ -10574,15 +10626,7 @@ def x145(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged = merge_grouped_sums(
             [state0, delta], ["lang"], ["n_docs", "sum_chars"]
         ).where(F.col("n_docs") != 0)
-        rows = [
-            (r["lang"], r["n_docs"], r["sum_chars"])
-            for r in merged.collect()
-        ]
-    finally:
-        shutil.rmtree(t, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "lang STRING, n_docs BIGINT, sum_chars BIGINT"
-    ).orderBy("lang")
+        return _local_result(spark, merged, "lang")
 
 
 @_q(
@@ -11002,21 +11046,13 @@ def x150(spark: SparkSession, sf_dir: str) -> DataFrame:
     "of the delta plus a state-sized merge.",
 )
 def x151(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from deepcell_data_engineering_spark.functions.stats import (
         merge_grouped_sums,
     )
     from deepcell_data_engineering_spark.sources import snapshots as snap
 
-    base = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("p"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
-    )
-    t = tempfile.mkdtemp(prefix="dde_merge_view_")
-    try:
+    base = _orders_kpc(spark, sf_dir)
+    with _scratch_root("dde_merge_view_") as t:
         v0 = snap.commit(spark, base.where(F.col("k") % 17 != 3), t)
         src1 = base.where(F.col("k") % 17 == 3).unionByName(
             base.where(F.col("k") % 17 == 7).withColumn(
@@ -11035,36 +11071,14 @@ def x151(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         head = snap.merge_upsert(spark, src2, t, keys=["k"])
 
-        state0 = (
-            snap.read_snapshot(spark, t, v0)
-            .groupBy("p")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-                F.sum("cents").cast("bigint").alias("sum_cents"),
-            )
-        )
-        sign = F.when(F.col("_change_type") == "insert", 1).otherwise(-1)
-        delta = (
-            snap.read_changes(spark, t, v0, head)
-            .groupBy("p")
-            .agg(
-                F.sum(sign).cast("bigint").alias("n_orders"),
-                F.sum(sign * F.col("cents")).cast("bigint").alias(
-                    "sum_cents"
-                ),
-            )
+        state0 = _by_priority(snap.read_snapshot(spark, t, v0))
+        delta = _by_priority(
+            snap.read_changes(spark, t, v0, head), signed=True
         )
         view = merge_grouped_sums(
-            [state0, delta], ["p"], ["n_orders", "sum_cents"]
+            [state0, delta], ["o_orderpriority"], ["n_orders", "sum_cents"]
         ).where(F.col("n_orders") != 0)
-        rows = [
-            (r["p"], r["n_orders"], r["sum_cents"]) for r in view.collect()
-        ]
-    finally:
-        shutil.rmtree(t, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "o_orderpriority STRING, n_orders BIGINT, sum_cents BIGINT"
-    ).orderBy("o_orderpriority")
+        return _local_result(spark, view, "o_orderpriority")
 
 
 @_q(
@@ -11359,8 +11373,10 @@ def x154(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_orphans",
         "n_orphan_keys",
         F.round(
-            F.col("n_orphans").cast("double")
-            / F.col("n_child").cast("double")
+            F.try_divide(
+                F.col("n_orphans").cast("double"),
+                F.col("n_child").cast("double"),
+            )
             + F.lit(0.0),
             6,
         ).alias("orphan_share"),
@@ -12055,21 +12071,13 @@ def x161(spark: SparkSession, sf_dir: str) -> DataFrame:
     "state-sized merge.",
 )
 def x162(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from deepcell_data_engineering_spark.functions.stats import (
         merge_grouped_sums,
     )
     from deepcell_data_engineering_spark.sources import snapshots as snap
 
-    base = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("p"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
-    )
-    t = tempfile.mkdtemp(prefix="dde_delete_view_")
-    try:
+    base = _orders_kpc(spark, sf_dir)
+    with _scratch_root("dde_delete_view_") as t:
         snap.commit(spark, base.where(F.col("k") % 2 == 0), t)
         v_base = snap.commit(
             spark, base.where(F.col("k") % 2 == 1), t, mode="append"
@@ -12077,36 +12085,14 @@ def x162(spark: SparkSession, sf_dir: str) -> DataFrame:
         snap.delete_where(spark, t, "k % 13 = 4")
         head = snap.delete_where(spark, t, "k % 29 = 1 AND p = '5-LOW'")
 
-        state0 = (
-            snap.read_snapshot(spark, t, v_base)
-            .groupBy("p")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-                F.sum("cents").cast("bigint").alias("sum_cents"),
-            )
-        )
-        sign = F.when(F.col("_change_type") == "insert", 1).otherwise(-1)
-        delta = (
-            snap.read_changes(spark, t, v_base, head)
-            .groupBy("p")
-            .agg(
-                F.sum(sign).cast("bigint").alias("n_orders"),
-                F.sum(sign * F.col("cents")).cast("bigint").alias(
-                    "sum_cents"
-                ),
-            )
+        state0 = _by_priority(snap.read_snapshot(spark, t, v_base))
+        delta = _by_priority(
+            snap.read_changes(spark, t, v_base, head), signed=True
         )
         view = merge_grouped_sums(
-            [state0, delta], ["p"], ["n_orders", "sum_cents"]
+            [state0, delta], ["o_orderpriority"], ["n_orders", "sum_cents"]
         ).where(F.col("n_orders") != 0)
-        rows = [
-            (r["p"], r["n_orders"], r["sum_cents"]) for r in view.collect()
-        ]
-    finally:
-        shutil.rmtree(t, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "o_orderpriority STRING, n_orders BIGINT, sum_cents BIGINT"
-    ).orderBy("o_orderpriority")
+        return _local_result(spark, view, "o_orderpriority")
 
 
 @_q(
@@ -12278,23 +12264,15 @@ def x163(spark: SparkSession, sf_dir: str) -> DataFrame:
     "result.",
 )
 def x164(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from deepcell_data_engineering_spark.sources import snapshots as snap
 
-    base = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("p"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
-    )
-    mk = int(base.agg(F.max("k")).collect()[0][0])
+    base = _orders_kpc(spark, sf_dir)
+    mk = _max_key(base)
     band = (F.col("k") * 8 - F.pmod(F.col("k") * 8, F.lit(mk + 1))) / (
         mk + 1
     )
     banded = base.withColumn("band", band.cast("long"))
-    t = tempfile.mkdtemp(prefix="dde_pruned_scan_")
-    try:
+    with _scratch_root("dde_pruned_scan_") as t:
         head = None
         for i in range(8):
             head = snap.commit(
@@ -12308,29 +12286,17 @@ def x164(spark: SparkSession, sf_dir: str) -> DataFrame:
         hi = 5 * (mk + 1) // 8 - 1
         manifest = snap._load_manifest(t, head, snap._POSIX)
         kept = snap._prune_dirs(manifest, {"k": (lo, hi)})
-        view = (
+        view = _by_priority(
             snap.scan_snapshot(spark, t, {"k": (lo, hi)}, version=head)
             .where(F.col("k").between(lo, hi))
-            .groupBy("p")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-                F.sum("cents").cast("bigint").alias("sum_cents"),
-            )
         )
-        rows = [
-            (r["p"], r["n_orders"], r["sum_cents"]) for r in view.collect()
-        ]
-        n_kept, n_total = len(kept), len(manifest["dirs"])
-    finally:
-        shutil.rmtree(t, ignore_errors=True)
-    return (
-        spark.createDataFrame(
-            rows, "o_orderpriority STRING, n_orders BIGINT, sum_cents BIGINT"
+        return _local_result(
+            spark,
+            view,
+            "o_orderpriority",
+            n_dirs_scanned=len(kept),
+            n_dirs_total=len(manifest["dirs"]),
         )
-        .withColumn("n_dirs_scanned", F.lit(n_kept).cast("bigint"))
-        .withColumn("n_dirs_total", F.lit(n_total).cast("bigint"))
-        .orderBy("o_orderpriority")
-    )
 
 
 @_q(
@@ -12360,9 +12326,6 @@ def x164(spark: SparkSession, sf_dir: str) -> DataFrame:
     "catalog-sized JSON plus the bounded result collect.",
 )
 def x165(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from deepcell_data_engineering_spark.sources import snapshots as snap
     from deepcell_data_engineering_spark.sources.table_catalog import (
         SnapshotCatalog,
@@ -12376,8 +12339,7 @@ def x165(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_custkey").alias("custkey"),
         F.col("c_mktsegment").alias("segment"),
     )
-    root = tempfile.mkdtemp(prefix="dde_catalog_")
-    try:
+    with _scratch_root("dde_catalog_") as root:
         t_facts = f"{root}/facts"
         t_dim = f"{root}/dim"
         snap.commit(spark, facts, t_facts)
@@ -12396,18 +12358,10 @@ def x165(spark: SparkSession, sf_dir: str) -> DataFrame:
                    JOIN x165_dim d ON f.custkey = d.custkey
                    GROUP BY d.segment"""
             )
-            rows = [
-                (r["c_mktsegment"], r["n_orders"], r["sum_cents"])
-                for r in view.collect()
-            ]
+            return _local_result(spark, view, "c_mktsegment")
         finally:
             spark.catalog.dropTempView("x165_facts")
             spark.catalog.dropTempView("x165_dim")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "c_mktsegment STRING, n_orders BIGINT, sum_cents BIGINT"
-    ).orderBy("c_mktsegment")
 
 
 @_q(
@@ -12451,28 +12405,20 @@ def x165(spark: SparkSession, sf_dir: str) -> DataFrame:
     "commit's full payload. Lakehouse-certification tier.",
 )
 def x166(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from deepcell_data_engineering_spark.functions.stats import (
         merge_grouped_sums,
     )
     from deepcell_data_engineering_spark.sources import snapshots as snap
 
-    base = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("p"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
-    )
-    mk = int(base.agg(F.max("k")).collect()[0][0])
+    base = _orders_kpc(spark, sf_dir)
+    mk = _max_key(base)
     band = (F.col("k") * 8 - F.pmod(F.col("k") * 8, F.lit(mk + 1))) / (
         mk + 1
     )
     banded = base.withColumn("band", band.cast("long"))
     hi = 3 * (mk + 1) // 8 - 1
     rng = {"k": (None, hi)}
-    t = tempfile.mkdtemp(prefix="dde_scoped_cdc_")
-    try:
+    with _scratch_root("dde_scoped_cdc_") as t:
         v0 = snap.commit(
             spark, banded.where(F.col("band") == 0).drop("band"), t,
             stats_cols=["k"],
@@ -12502,44 +12448,21 @@ def x166(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             prev_dirs = set(m["dirs"])
 
-        state0 = (
-            snap.read_snapshot(spark, t, v0)
-            .where(F.col("k") <= hi)
-            .groupBy("p")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-                F.sum("cents").cast("bigint").alias("sum_cents"),
-            )
+        state0 = _by_priority(
+            snap.read_snapshot(spark, t, v0).where(F.col("k") <= hi)
         )
-        sign = F.when(F.col("_change_type") == "insert", 1).otherwise(-1)
-        delta = (
-            snap.read_changes(spark, t, v0, head, ranges=rng)
-            .where(F.col("k") <= hi)
-            .groupBy("p")
-            .agg(
-                F.sum(sign).cast("bigint").alias("n_orders"),
-                F.sum(sign * F.col("cents")).cast("bigint").alias(
-                    "sum_cents"
-                ),
-            )
+        delta = _by_priority(
+            snap.read_changes(spark, t, v0, head, ranges=rng).where(
+                F.col("k") <= hi
+            ),
+            signed=True,
         )
         view = merge_grouped_sums(
-            [state0, delta], ["p"], ["n_orders", "sum_cents"]
+            [state0, delta], ["o_orderpriority"], ["n_orders", "sum_cents"]
         ).where(F.col("n_orders") != 0)
-        rows = [
-            (r["p"], r["n_orders"], r["sum_cents"]) for r in view.collect()
-        ]
-    finally:
-        shutil.rmtree(t, ignore_errors=True)
-    return (
-        spark.createDataFrame(
-            rows, "o_orderpriority STRING, n_orders BIGINT, sum_cents BIGINT"
+        return _local_result(
+            spark, view, "o_orderpriority", n_delta_dirs_scanned=n_scanned
         )
-        .withColumn(
-            "n_delta_dirs_scanned", F.lit(n_scanned).cast("bigint")
-        )
-        .orderBy("o_orderpriority")
-    )
 
 
 @_q(
@@ -12581,24 +12504,16 @@ def x166(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Lakehouse-certification tier.",
 )
 def x167(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from deepcell_data_engineering_spark.sources import snapshots as snap
 
-    base = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("p"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
-    )
+    base = _orders_kpc(spark, sf_dir)
     source = base.where(F.col("k") % 7 == 3).select(
         "k",
         "p",
         (F.col("cents") + 500).alias("cents"),
         (F.col("k") % 5).cast("bigint").alias("flag"),
     )
-    t = tempfile.mkdtemp(prefix="dde_evolve_merge_")
-    try:
+    with _scratch_root("dde_evolve_merge_") as t:
         # two dirs so the merge rewrites real subsets, not "the table"
         snap.commit(spark, base.where(F.col("k") % 2 == 0), t)
         snap.commit(
@@ -12609,7 +12524,7 @@ def x167(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         view = (
             snap.read_snapshot(spark, t, v, merge_schema=True)
-            .groupBy("p")
+            .groupBy(F.col("p").alias("o_orderpriority"))
             .agg(
                 F.count(F.lit(1)).cast("bigint").alias("n_orders"),
                 F.sum("cents").cast("bigint").alias("sum_cents"),
@@ -12617,18 +12532,7 @@ def x167(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("flag").cast("bigint").alias("sum_flag"),
             )
         )
-        rows = [
-            (r["p"], r["n_orders"], r["sum_cents"], r["n_flagged"],
-             r["sum_flag"])
-            for r in view.collect()
-        ]
-    finally:
-        shutil.rmtree(t, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
-        "o_orderpriority STRING, n_orders BIGINT, sum_cents BIGINT, "
-        "n_flagged BIGINT, sum_flag BIGINT",
-    ).orderBy("o_orderpriority")
+        return _local_result(spark, view, "o_orderpriority")
 
 
 @_q(
@@ -13693,21 +13597,13 @@ def x176(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x145/x151/x162/x164-x167 pattern).",
 )
 def x177(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from deepcell_data_engineering_spark.functions.stats import (
         merge_grouped_sums,
     )
     from deepcell_data_engineering_spark.sources import snapshots as snap
 
-    base = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("p"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
-    )
-    t = tempfile.mkdtemp(prefix="dde_restore_view_")
-    try:
+    base = _orders_kpc(spark, sf_dir)
+    with _scratch_root("dde_restore_view_") as t:
         snap.commit(spark, base.where(F.col("k") % 2 == 0), t)
         v_full = snap.commit(
             spark, base.where(F.col("k") % 2 == 1), t, mode="append"
@@ -13715,36 +13611,14 @@ def x177(spark: SparkSession, sf_dir: str) -> DataFrame:
         v_del = snap.delete_where(spark, t, "k % 13 = 4")
         head = snap.restore_table(spark, t, v_full)
 
-        state_del = (
-            snap.read_snapshot(spark, t, v_del)
-            .groupBy("p")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-                F.sum("cents").cast("bigint").alias("sum_cents"),
-            )
-        )
-        sign = F.when(F.col("_change_type") == "insert", 1).otherwise(-1)
-        delta = (
-            snap.read_changes(spark, t, v_del, head)
-            .groupBy("p")
-            .agg(
-                F.sum(sign).cast("bigint").alias("n_orders"),
-                F.sum(sign * F.col("cents")).cast("bigint").alias(
-                    "sum_cents"
-                ),
-            )
+        state_del = _by_priority(snap.read_snapshot(spark, t, v_del))
+        delta = _by_priority(
+            snap.read_changes(spark, t, v_del, head), signed=True
         )
         view = merge_grouped_sums(
-            [state_del, delta], ["p"], ["n_orders", "sum_cents"]
+            [state_del, delta], ["o_orderpriority"], ["n_orders", "sum_cents"]
         ).where(F.col("n_orders") != 0)
-        rows = [
-            (r["p"], r["n_orders"], r["sum_cents"]) for r in view.collect()
-        ]
-    finally:
-        shutil.rmtree(t, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "o_orderpriority STRING, n_orders BIGINT, sum_cents BIGINT"
-    ).orderBy("o_orderpriority")
+        return _local_result(spark, view, "o_orderpriority")
 
 
 _X178_COLS = [
@@ -14271,9 +14145,6 @@ def x183(spark: SparkSession, sf_dir: str) -> DataFrame:
     "result collect.",
 )
 def x184(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from deepcell_data_engineering_spark.sources import snapshots as snap
     from deepcell_data_engineering_spark.sources.table_catalog import (
         SnapshotCatalog,
@@ -14283,8 +14154,7 @@ def x184(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority").alias("p"),
         F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
     )
-    root = tempfile.mkdtemp(prefix="dde_catalog_rename_")
-    try:
+    with _scratch_root("dde_catalog_rename_") as root:
         t = f"{root}/facts"
         snap.commit(spark, facts, t)
         cat = SnapshotCatalog(f"{root}/cat")
@@ -14312,25 +14182,16 @@ def x184(spark: SparkSession, sf_dir: str) -> DataFrame:
                           CAST(SUM(cents) AS BIGINT) AS sum_cents
                    FROM x184_orders GROUP BY p"""
             )
-            rows = [
-                (r["o_orderpriority"], r["n_orders"], r["sum_cents"])
-                for r in agg.collect()
-            ]
+            return _local_result(
+                spark,
+                agg,
+                "o_orderpriority",
+                props_intact=props_intact,
+                old_name_gone=old_gone,
+                n_catalog_versions=n_versions,
+            )
         finally:
             spark.catalog.dropTempView("x184_orders")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return (
-        spark.createDataFrame(
-            rows, "o_orderpriority STRING, n_orders BIGINT, sum_cents BIGINT"
-        )
-        .withColumn("props_intact", F.lit(props_intact).cast("bigint"))
-        .withColumn("old_name_gone", F.lit(old_gone).cast("bigint"))
-        .withColumn(
-            "n_catalog_versions", F.lit(n_versions).cast("bigint")
-        )
-        .orderBy("o_orderpriority")
-    )
 
 
 @_q(
@@ -14366,20 +14227,11 @@ def x184(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Lakehouse-certification tier.",
 )
 def x185(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from deepcell_data_engineering_spark.sources import snapshots as snap
 
-    base = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("p"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
-    )
-    mk = int(base.agg(F.max("k")).collect()[0][0])
-    mid = mk // 2
-    root = tempfile.mkdtemp(prefix="dde_lifecycle_")
-    try:
+    base = _orders_kpc(spark, sf_dir)
+    mid = _max_key(base) // 2
+    with _scratch_root("dde_lifecycle_") as root:
         src = f"{root}/src"
         dst = f"{root}/clone"
         snap.commit(
@@ -14424,31 +14276,14 @@ def x185(spark: SparkSession, sf_dir: str) -> DataFrame:
             .where(F.col("s") != 0)
             .count()
         )
-        agg = (
-            snap.read_snapshot(spark, dst, head)
-            .groupBy("p")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-                F.sum("cents").cast("bigint").alias("sum_cents"),
-            )
+        return _local_result(
+            spark,
+            _by_priority(snap.read_snapshot(spark, dst, head)),
+            "o_orderpriority",
+            n_clone_commits=head + 1,
+            src_intact=src_intact,
+            n_net_nonzero=n_net_nonzero,
         )
-        rows = [
-            (r["p"], r["n_orders"], r["sum_cents"]) for r in agg.collect()
-        ]
-        n_commits = head + 1
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return (
-        spark.createDataFrame(
-            rows, "o_orderpriority STRING, n_orders BIGINT, sum_cents BIGINT"
-        )
-        .withColumn("n_clone_commits", F.lit(n_commits).cast("bigint"))
-        .withColumn("src_intact", F.lit(src_intact).cast("bigint"))
-        .withColumn(
-            "n_net_nonzero", F.lit(n_net_nonzero).cast("bigint")
-        )
-        .orderBy("o_orderpriority")
-    )
 
 
 @_q(
@@ -15451,11 +15286,7 @@ def x194(spark: SparkSession, sf_dir: str) -> DataFrame:
     "LATERAL slot arithmetic, same integers.",
 )
 def x195(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("p"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
-    )
+    orders = _orders_kpc(spark, sf_dir)
     weighted = orders.select(
         "p",
         "cents",
@@ -15559,20 +15390,11 @@ def x195(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tier.",
 )
 def x196(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from deepcell_data_engineering_spark.sources import snapshots as snap
 
-    base = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("p"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
-    )
-    mk = int(base.agg(F.max("k")).collect()[0][0])
-    mid = mk // 2
-    root = tempfile.mkdtemp(prefix="dde_tombstone_")
-    try:
+    base = _orders_kpc(spark, sf_dir)
+    mid = _max_key(base) // 2
+    with _scratch_root("dde_tombstone_") as root:
         t = f"{root}/t"
         snap.commit(spark, base.where(F.col("k") <= mid), t,
                     stats_cols=["k"])
@@ -15614,26 +15436,12 @@ def x196(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .count()
         )
-        agg = (
-            snap.read_snapshot(spark, t, v2)
-            .groupBy("p")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-                F.sum("cents").cast("bigint").alias("sum_cents"),
-            )
+        return _local_result(
+            spark,
+            _by_priority(snap.read_snapshot(spark, t, v2)),
+            "o_orderpriority",
+            n_tombstoned=n_tomb,
         )
-        rows = [
-            (r["p"], r["n_orders"], r["sum_cents"]) for r in agg.collect()
-        ]
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return (
-        spark.createDataFrame(
-            rows, "o_orderpriority STRING, n_orders BIGINT, sum_cents BIGINT"
-        )
-        .withColumn("n_tombstoned", F.lit(n_tomb).cast("bigint"))
-        .orderBy("o_orderpriority")
-    )
 
 
 @_q(
@@ -15698,7 +15506,8 @@ def x197(spark: SparkSession, sf_dir: str) -> DataFrame:
     dmin, dmax = orders.agg(
         F.min("o_orderdate"), F.max("o_orderdate")
     ).collect()[0]
-    span = (dmax - dmin).days
+    # no dated rows: the cut points stay NULL, as in the oracle's CTE
+    span = (dmax - dmin).days if dmin is not None else 0
     d_train = F.date_add(F.lit(dmin), (7 * span) // 10)
     d_embargo = F.date_add(F.lit(dmin), (7 * span) // 10 + 30)
     tagged = orders.select(
@@ -16002,20 +15811,11 @@ def x199(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tier.",
 )
 def x200(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from deepcell_data_engineering_spark.sources import snapshots as snap
 
-    base = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("p"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
-    )
-    mk = int(base.agg(F.max("k")).collect()[0][0])
-    mid = mk // 2
-    root = tempfile.mkdtemp(prefix="dde_update_")
-    try:
+    base = _orders_kpc(spark, sf_dir)
+    mid = _max_key(base) // 2
+    with _scratch_root("dde_update_") as root:
         t = f"{root}/t"
         snap.commit(spark, base.where(F.col("k") <= mid), t,
                     stats_cols=["k"])
@@ -16032,33 +15832,17 @@ def x200(spark: SparkSession, sf_dir: str) -> DataFrame:
         upd = (
             snap.read_changes(spark, t, v1, v2)
             .where(F.col("_change_subtype") == "update_postimage")
-            .groupBy("p")
+            .groupBy(F.col("p").alias("o_orderpriority"))
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_updated"))
         )
-        agg = (
-            snap.read_snapshot(spark, t, v2)
-            .groupBy("p")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-                F.sum("cents").cast("bigint").alias("sum_cents"),
-            )
+        view = _by_priority(snap.read_snapshot(spark, t, v2)).join(
+            upd, "o_orderpriority", "left"
         )
-        rows = [
-            (
-                r["p"],
-                r["n_orders"],
-                r["sum_cents"],
-                r["n_updated"] if r["n_updated"] is not None else 0,
-            )
-            for r in agg.join(upd, "p", "left").collect()
-        ]
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
-        "o_orderpriority STRING, n_orders BIGINT, sum_cents BIGINT, "
-        "n_updated BIGINT",
-    ).orderBy("o_orderpriority")
+        return _local_result(
+            spark,
+            view.fillna(0, subset=["n_updated"]),
+            "o_orderpriority",
+        )
 
 
 @_q(
@@ -16090,21 +15874,12 @@ def x200(spark: SparkSession, sf_dir: str) -> DataFrame:
     "time. Lakehouse-certification tier.",
 )
 def x201(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from deepcell_data_engineering_spark.sources import snapshots as snap
 
-    base = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("p"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
-    )
-    mk = int(base.agg(F.max("k")).collect()[0][0])
-    mid = mk // 2
-    root = tempfile.mkdtemp(prefix="dde_constraints_")
+    base = _orders_kpc(spark, sf_dir)
+    mid = _max_key(base) // 2
     blocked = 0
-    try:
+    with _scratch_root("dde_constraints_") as root:
         t = f"{root}/t"
         snap.commit(
             spark,
@@ -16143,29 +15918,13 @@ def x201(spark: SparkSession, sf_dir: str) -> DataFrame:
                 t, snap.current_version(t), snap._POSIX
             ).get("constraints", {})
         )
-        agg = (
-            snap.read_snapshot(spark, t)
-            .groupBy("p")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-                F.sum("cents").cast("bigint").alias("sum_cents"),
-            )
+        return _local_result(
+            spark,
+            _by_priority(snap.read_snapshot(spark, t)),
+            "o_orderpriority",
+            n_blocked_writes=blocked,
+            n_constraints=n_constraints,
         )
-        rows = [
-            (r["p"], r["n_orders"], r["sum_cents"]) for r in agg.collect()
-        ]
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return (
-        spark.createDataFrame(
-            rows, "o_orderpriority STRING, n_orders BIGINT, sum_cents BIGINT"
-        )
-        .withColumn("n_blocked_writes", F.lit(blocked).cast("bigint"))
-        .withColumn(
-            "n_constraints", F.lit(n_constraints).cast("bigint")
-        )
-        .orderBy("o_orderpriority")
-    )
 
 
 @_q(
@@ -16213,9 +15972,6 @@ def x201(spark: SparkSession, sf_dir: str) -> DataFrame:
     "certification tier (tempdir commits, <=6-row driver folds).",
 )
 def x202(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from deepcell_data_engineering_spark.sources import snapshots as snap
 
     base = load_table(spark, sf_dir, "customer").select(
@@ -16223,9 +15979,8 @@ def x202(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_mktsegment").alias("seg"),
         F.round(F.col("c_acctbal") * 100, 0).cast("bigint").alias("cents"),
     )
-    root = tempfile.mkdtemp(prefix="dde_constraint_lifecycle_")
     blocked = 0
-    try:
+    with _scratch_root("dde_constraint_lifecycle_") as root:
         t = f"{root}/t"
         snap.commit(spark, base, t, mode="overwrite")                 # v0
         snap.add_constraint(spark, t, "bal_floor", "cents >= -100000")  # v1
@@ -16251,24 +16006,20 @@ def x202(spark: SparkSession, sf_dir: str) -> DataFrame:
         final_version = hist[-1]["version"]
         agg = (
             snap.read_snapshot(spark, t)
-            .groupBy("seg")
+            .groupBy(F.col("seg").alias("c_mktsegment"))
             .agg(
                 F.count(F.lit(1)).cast("bigint").alias("n_rows"),
                 F.sum("cents").cast("bigint").alias("sum_cents"),
             )
         )
-        rows = [(r["seg"], r["n_rows"], r["sum_cents"]) for r in agg.collect()]
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return (
-        spark.createDataFrame(
-            rows, "c_mktsegment STRING, n_rows BIGINT, sum_cents BIGINT"
+        return _local_result(
+            spark,
+            agg,
+            "c_mktsegment",
+            blocked_adds=blocked,
+            n_meta_ops=n_meta,
+            final_version=final_version,
         )
-        .withColumn("blocked_adds", F.lit(blocked).cast("bigint"))
-        .withColumn("n_meta_ops", F.lit(n_meta).cast("bigint"))
-        .withColumn("final_version", F.lit(final_version).cast("bigint"))
-        .orderBy("c_mktsegment")
-    )
 
 
 @_q(
@@ -16300,8 +16051,6 @@ def x202(spark: SparkSession, sf_dir: str) -> DataFrame:
     "certification tier (tempdir commits, bounded drain).",
 )
 def x203(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
     import time as _time
 
     from deepcell_data_engineering_spark.sources import snapshots as snap
@@ -16313,10 +16062,8 @@ def x203(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_name").alias("name"),
     )
     n_nat = nat.count()
-    root = tempfile.mkdtemp(prefix="dde_stream_rate_")
-    got: list[tuple[int, int]] = []
     nonempty = 0
-    try:
+    with _scratch_root("dde_stream_rate_") as root:
         t = f"{root}/t"
         snap.commit(spark, nat.repartition(4), t, mode="overwrite")   # v0
         snap.commit(
@@ -16367,14 +16114,11 @@ def x203(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             q.stop()
             q.awaitTermination(30)
-        got = sorted(rows_seen.items())
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     bounded = nonempty >= 4
     return spark.createDataFrame(
-        [(v, n, bounded) for v, n in got],
+        [(v, n, bounded) for v, n in sorted(rows_seen.items())],
         "commit_version BIGINT, n_rows BIGINT, bounded_drain BOOLEAN",
-    ).orderBy("commit_version")
+    )
 
 
 @_q(
@@ -17639,9 +17383,6 @@ def x216(spark: SparkSession, sf_dir: str) -> DataFrame:
     "<=|brands| driver folds).",
 )
 def x217(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from deepcell_data_engineering_spark.sources import snapshots as snap
 
     base = load_table(spark, sf_dir, "part").select(
@@ -17650,10 +17391,9 @@ def x217(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p_size").alias("sz"),
         F.round(F.col("p_retailprice") * 100, 0).cast("bigint").alias("cents"),
     )
-    root = tempfile.mkdtemp(prefix="dde_vacuum_")
     restore_blocked = 0
     tt_blocked = 0
-    try:
+    with _scratch_root("dde_vacuum_") as root:
         t = f"{root}/t"
         snap.commit(spark, base.where(F.col("sz") <= 25), t,
                     mode="overwrite")                                 # v0
@@ -17670,28 +17410,20 @@ def x217(spark: SparkSession, sf_dir: str) -> DataFrame:
             tt_blocked += 1
         agg = (
             snap.read_snapshot(spark, t)
-            .groupBy("b")
+            .groupBy(F.col("b").alias("p_brand"))
             .agg(
                 F.count(F.lit(1)).cast("bigint").alias("n_parts"),
                 F.sum("cents").cast("bigint").alias("sum_cents"),
             )
         )
-        rows = [(r["b"], r["n_parts"], r["sum_cents"]) for r in agg.collect()]
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return (
-        spark.createDataFrame(
-            rows, "p_brand STRING, n_parts BIGINT, sum_cents BIGINT"
+        return _local_result(
+            spark,
+            agg,
+            "p_brand",
+            n_dirs_removed=len(removed),
+            restore_blocked=restore_blocked,
+            timetravel_blocked=tt_blocked,
         )
-        .withColumn("n_dirs_removed", F.lit(len(removed)).cast("bigint"))
-        .withColumn(
-            "restore_blocked", F.lit(restore_blocked).cast("bigint")
-        )
-        .withColumn(
-            "timetravel_blocked", F.lit(tt_blocked).cast("bigint")
-        )
-        .orderBy("p_brand")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -17742,9 +17474,6 @@ def x217(spark: SparkSession, sf_dir: str) -> DataFrame:
     "folds).",
 )
 def x218(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from deepcell_data_engineering_spark.sources import snapshots as snap
 
     base = load_table(spark, sf_dir, "orders").where(
@@ -17756,10 +17485,9 @@ def x218(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cents"
         ),
     )
-    root = tempfile.mkdtemp(prefix="dde_rw_")
     ts_ok = 0
     refused = 0
-    try:
+    with _scratch_root("dde_rw_") as root:
         t = f"{root}/t"
         snap.commit(spark, base, t, mode="overwrite",
                     _ts_us=1_000_000 * 1_000_000)                 # v0
@@ -17797,27 +17525,21 @@ def x218(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_ins = int(_r[1] or 0)
         agg = (
             snap.read_snapshot(spark, t)
-            .groupBy("pr")
+            .groupBy(F.col("pr").alias("o_orderpriority"))
             .agg(
                 F.count(F.lit(1)).cast("bigint").alias("n_rows"),
                 F.sum("cents").cast("bigint").alias("sum_cents"),
             )
         )
-        rows = [
-            (r["pr"], r["n_rows"], r["sum_cents"]) for r in agg.collect()
-        ]
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return (
-        spark.createDataFrame(
-            rows, "o_orderpriority STRING, n_rows BIGINT, sum_cents BIGINT"
+        return _local_result(
+            spark,
+            agg,
+            "o_orderpriority",
+            n_cdc_deletes=n_del,
+            n_cdc_inserts=n_ins,
+            ts_resolved_v0=ts_ok,
+            refusal_blocked=refused,
         )
-        .withColumn("n_cdc_deletes", F.lit(n_del).cast("bigint"))
-        .withColumn("n_cdc_inserts", F.lit(n_ins).cast("bigint"))
-        .withColumn("ts_resolved_v0", F.lit(ts_ok).cast("bigint"))
-        .withColumn("refusal_blocked", F.lit(refused).cast("bigint"))
-        .orderBy("o_orderpriority")
-    )
 
 
 @_q(
@@ -18940,9 +18662,6 @@ def x229(spark: SparkSession, sf_dir: str) -> DataFrame:
     "commits, bounded driver folds).",
 )
 def x230(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from deepcell_data_engineering_spark.sources import snapshots as snap
 
     base = load_table(spark, sf_dir, "lineitem").where(
@@ -18952,10 +18671,9 @@ def x230(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_suppkey").cast("bigint").alias("sk"),
         F.col("l_quantity").cast("bigint").alias("qty"),
     )
-    root = tempfile.mkdtemp(prefix="dde_zorder_")
     pruned = {"pk": 0, "sk": 0}
     scan_exact = 1
-    try:
+    with _scratch_root("dde_zorder_") as root:
         t = f"{root}/t"
         snap.commit(spark, base.repartition(4), t, mode="overwrite")
         v = snap.optimize_table(
@@ -18964,7 +18682,9 @@ def x230(spark: SparkSession, sf_dir: str) -> DataFrame:
         m = snap._load_manifest(t, v, snap._POSIX)
         n_dirs = len(m["dirs"])
         for col in ("pk", "sk"):
-            vals = [s[col] for s in m["stats"].values() if col in s]
+            vals = [s[col] for s in m.get("stats", {}).values() if col in s]
+            if not vals:
+                continue  # an empty table has no dir stats to prune on
             lo = min(v0 for v0, _ in vals)
             bound = (lo, lo + 2)
             if len(snap._prune_dirs(m, {col: bound})) < n_dirs:
@@ -18989,24 +18709,15 @@ def x230(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("qty").cast("bigint").alias("sum_qty"),
             )
         )
-        rows = [
-            (r["pk_digit"], r["n_rows"], r["sum_qty"])
-            for r in agg.collect()
-        ]
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return (
-        spark.createDataFrame(
-            rows, "pk_digit BIGINT, n_rows BIGINT, sum_qty BIGINT"
+        return _local_result(
+            spark,
+            agg,
+            "pk_digit",
+            buckets_ok=int(1 < n_dirs <= 8),
+            pruned_on_pk=pruned["pk"],
+            pruned_on_sk=pruned["sk"],
+            scan_exact=scan_exact,
         )
-        .withColumn(
-            "buckets_ok", F.lit(int(1 < n_dirs <= 8)).cast("bigint")
-        )
-        .withColumn("pruned_on_pk", F.lit(pruned["pk"]).cast("bigint"))
-        .withColumn("pruned_on_sk", F.lit(pruned["sk"]).cast("bigint"))
-        .withColumn("scan_exact", F.lit(scan_exact).cast("bigint"))
-        .orderBy("pk_digit")
-    )
 
 
 @_q(

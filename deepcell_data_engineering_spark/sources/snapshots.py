@@ -2336,6 +2336,8 @@ def optimize_table(
             )
         zdf = df.withColumn("_z", zvalue(norms, bits=bits))
         lo, hi = zdf.agg(F.min("_z"), F.max("_z")).collect()[0]
+        if lo is None:
+            return basis  # no rows: nothing to cluster
         span = max(1, int(hi) - int(lo) + 1)
         nb = max(1, min(zorder_buckets or n_target, span))
         bucket = F.least(

@@ -25,8 +25,25 @@ def empty_facts(tmp_path_factory):
     return str(out)
 
 
-@pytest.mark.parametrize("name", ["x158_ks_two_sample", "x163_lorenz_deciles"])
-def test_quantile_queries_match_oracle_on_empty_facts(spark, empty_facts, name):
+@pytest.mark.parametrize(
+    "name",
+    [
+        "x158_ks_two_sample",
+        "x163_lorenz_deciles",
+        "x164_stats_pruned_scan",
+        "x166_scoped_cdc_view",
+        "x185_lifecycle_clone_restore",
+        "x196_tombstone_merge_feed",
+        "x197_time_embargo_split",
+        "x200_update_feed_view",
+        "x201_constraint_gate",
+        "x230_zorder_lifecycle",
+        "x87_table_profile",
+        "x91_profile_approx_certified",
+        "x154_ref_integrity_audit",
+    ],
+)
+def test_queries_match_oracle_on_empty_facts(spark, empty_facts, name):
     spec = QUERIES[name]
     con = duckdb_connect(empty_facts)
     try:

@@ -79,6 +79,18 @@ def test_quantile_queries_job_budget(spark):
         assert rec["collect_jobs"] <= jobs, (name, rec["collect_jobs"])
 
 
+def test_lakehouse_queries_sort_their_rows_on_the_driver(spark):
+    """The snapshot-layer queries return their few rows as a local frame
+    sorted on the driver: one collect job (no range-exchange sampling),
+    and the rows still come back in ascending key order."""
+    for name in ("x164_stats_pruned_scan", "x200_update_feed_view"):
+        rec = prof.profile(spark, name, QUERIES[name].build, SF_SMOKE, 1)
+        assert rec["collect_jobs"] <= 1, (name, rec["collect_jobs"])
+    rows = QUERIES["x164_stats_pruned_scan"].build(spark, SF_SMOKE).collect()
+    got = [r["o_orderpriority"] for r in rows]
+    assert got and got == sorted(got)
+
+
 def test_unknown_name_raises_before_a_session_starts(monkeypatch):
     def no_session(*a, **k):
         raise AssertionError("a session was started")

@@ -3507,6 +3507,18 @@ def test_optimize_zorder_type_guard(spark, tmp_path):
         snap.optimize_table(spark, t, zorder_by=["s"])
 
 
+def test_optimize_zorder_on_empty_table_publishes_nothing(spark, tmp_path):
+    """A zero-row table has NULL Z-value bounds and nothing to cluster:
+    OPTIMIZE ZORDER BY returns the current version instead of raising
+    on the NULL span."""
+    t = str(tmp_path / "tbl")
+    empty = spark.range(0).selectExpr("id", "CAST(id AS BIGINT) AS x")
+    v0 = snap.commit(spark, empty, t, mode="overwrite")
+    assert snap.optimize_table(spark, t, zorder_by=["id", "x"]) == v0
+    assert snap.current_version(t) == v0
+    assert snap.read_snapshot(spark, t).count() == 0
+
+
 def test_restore_by_timestamp(spark, tmp_path):
     t = str(tmp_path / "tbl")
     a = spark.range(5).selectExpr("id")
