@@ -81,7 +81,27 @@ def _phys_children(node) -> list:
     return [seq.apply(i) for i in range(seq.size())]
 
 
+def _nodes(df: DataFrame):
+    """Every node of ``df``'s executed plan, pre-order, descending
+    through the wrappers that ``_phys_children`` sees through."""
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        yield node
+        stack.extend(reversed(_phys_children(node)))
+
+
 _PLAN_CONSTANT_MAX_ROWS = 64
+
+
+def _plan_constant(node, cls: str) -> bool:
+    """A Range or local-rows leaf of at most _PLAN_CONSTANT_MAX_ROWS rows."""
+    try:
+        if cls == "RangeExec":
+            return int(node.numElements()) <= _PLAN_CONSTANT_MAX_ROWS
+        return node.rows().size() <= _PLAN_CONSTANT_MAX_ROWS
+    except Exception:
+        return False
 
 
 def _is_scalar_subtree(node) -> bool:
@@ -101,16 +121,8 @@ def _is_scalar_subtree(node) -> bool:
                 return True
         except Exception:
             pass
-    if cls == "RangeExec":
-        try:
-            return int(node.numElements()) <= _PLAN_CONSTANT_MAX_ROWS
-        except Exception:
-            return False
-    if cls == "LocalTableScanExec":
-        try:
-            return node.rows().size() <= _PLAN_CONSTANT_MAX_ROWS
-        except Exception:
-            return False
+    if cls in ("RangeExec", "LocalTableScanExec"):
+        return _plan_constant(node, cls)
     if "Join" in cls or "CartesianProduct" in cls:
         return len(ch) >= 2 and all(_is_scalar_subtree(c) for c in ch[:2])
     if len(ch) == 1:
@@ -124,18 +136,12 @@ def bnlj_build_sides_scalar(df: DataFrame) -> list[bool]:
     contract says every BNLJ must be a 1-row composition attach
     (mixture totals, sketch estimates, stats carriers) — this walks the
     JVM plan tree and PROVES it, instead of trusting the count."""
-
     out: list[bool] = []
-
-    def visit(node) -> None:
-        ch = _phys_children(node)
+    for node in _nodes(df):
         if node.getClass().getSimpleName() == "BroadcastNestedLoopJoinExec":
-            build = ch[1] if node.buildSide().toString() == "BuildRight" else ch[0]
-            out.append(_is_scalar_subtree(build))
-        for c in ch:
-            visit(c)
-
-    visit(df._jdf.queryExecution().executedPlan())
+            left, right = _phys_children(node)
+            right_builds = node.buildSide().toString() == "BuildRight"
+            out.append(_is_scalar_subtree(right if right_builds else left))
     return out
 
 
@@ -161,16 +167,8 @@ def _is_window_bounded_subtree(node) -> bool:
         "TakeOrderedAndProjectExec",
     ):
         return True
-    if cls == "RangeExec":
-        try:
-            return int(node.numElements()) <= _PLAN_CONSTANT_MAX_ROWS
-        except Exception:
-            return False
-    if cls == "LocalTableScanExec":
-        try:
-            return node.rows().size() <= _PLAN_CONSTANT_MAX_ROWS
-        except Exception:
-            return False
+    if cls in ("RangeExec", "LocalTableScanExec"):
+        return _plan_constant(node, cls)
     if not ch:
         return False
     return all(_is_window_bounded_subtree(c) for c in ch)
@@ -189,23 +187,17 @@ def global_window_inputs_bounded(df: DataFrame) -> list[bool]:
     via QuerySpec.window_bounded with the bound in the docstring —
     an undeclared raw-fact global window fails the sweep (r12
     verdict #3 promoted the docstring convention to this contract)."""
-
     out: list[bool] = []
-
-    def visit(node) -> None:
-        ch = _phys_children(node)
+    for node in _nodes(df):
         if node.getClass().getSimpleName() in _WINDOW_EXECS:
             try:
                 unpartitioned = node.partitionSpec().size() == 0
             except Exception:
                 unpartitioned = False
             if unpartitioned:
-                out.append(ch and _is_window_bounded_subtree(ch[0]))
-        for c in ch:
-            visit(c)
-
-    visit(df._jdf.queryExecution().executedPlan())
-    return [bool(b) for b in out]
+                ch = _phys_children(node)
+                out.append(bool(ch) and _is_window_bounded_subtree(ch[0]))
+    return out
 
 
 def scan_profiles(df: DataFrame) -> list[dict]:
@@ -223,8 +215,7 @@ def scan_profiles(df: DataFrame) -> list[dict]:
     import os
 
     out: list[dict] = []
-
-    def visit(node) -> None:
+    for node in _nodes(df):
         if node.getClass().getSimpleName() == "FileSourceScanExec":
             cols = list(node.requiredSchema().fieldNames())
             table = None
@@ -233,11 +224,5 @@ def scan_profiles(df: DataFrame) -> list[dict]:
                 base = os.path.basename(str(rp.apply(0)).rstrip("/"))
                 if base.endswith(".parquet"):
                     table = base[: -len(".parquet")]
-            out.append(
-                {"table": table, "n_read": len(cols), "cols": cols}
-            )
-        for c in _phys_children(node):
-            visit(c)
-
-    visit(df._jdf.queryExecution().executedPlan())
+            out.append({"table": table, "n_read": len(cols), "cols": cols})
     return out

@@ -791,7 +791,8 @@ def test_registry_window_contract_holds(spark):
     subtrees, except the explicitly declared domain-bounded sites
     (QuerySpec.window_bounded, adjudicated in their docstrings).
     Spot-checks the two known shapes instead of re-running the full
-    sweep (tools/check_plan_contracts.py covers all 246)."""
+    sweep (`tools/profile_queries.py --runs 0 --contracts OUT.json`
+    covers all 278)."""
     for name in (
         "x104_weighted_sample_incremental",  # reworked to top-k (r13)
         "x122_ntile_deciles",                # aggregate-grain NTILE

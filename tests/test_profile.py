@@ -1,14 +1,18 @@
-"""The per-query profiler (plans/profile.py) and its command line
+"""The per-query check loop (plans/profile.py) and its command line
 (tools/profile_queries.py) at sf0.001."""
 
 import importlib.util
+import json
 import os
+import subprocess
+import sys
 
 import pytest
 
 from conftest import SF_SMOKE
 from deepcell_data_engineering_spark.plans import profile as prof
 from deepcell_data_engineering_spark.relational import QUERIES
+from deepcell_data_engineering_spark.relational.queries import QuerySpec
 
 TOOL = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -114,3 +118,64 @@ def test_cli_writes_one_plan_per_name(spark, tmp_path):
         assert rec["plan"] == str(tmp_path / f"{n}.txt")
         assert os.path.getsize(rec["plan"]) > 0
     assert sorted(os.listdir(tmp_path)) == [f"{n}.txt" for n in names]
+
+
+def test_one_loop_runs_every_check(spark, tmp_path):
+    names = ["d11_star_join_agg", "x199_fd_histogram"]
+    oracle, contracts = tmp_path / "oracle.json", tmp_path / "plancheck.json"
+    out = _cli().main(
+        [*names, "--sf-dir", SF_SMOKE, "--runs", "1",
+         "--oracle", str(oracle), "--contracts", str(contracts)]
+    )
+    assert out["failed"] == []
+    with open(oracle) as fh:
+        results = json.load(fh)["results"]
+    with open(contracts) as fh:
+        plancheck = json.load(fh)
+    assert plancheck["n_queries"] == 2 and plancheck["violations"] == []
+    for n in names:
+        rec = out["queries"][n]
+        assert rec["oracle"]["ok"] and len(rec["oracle"]["hash"]) == 64
+        assert rec["oracle"] == results[n]
+        assert rec["contracts"] == plancheck["queries"][n]
+        assert {"build_jobs", "cartesian", "bnlj_non_scalar", "exchanges",
+                "scans"} <= set(rec["contracts"])
+        assert {"median", "build_jobs", "collect_jobs", "scans"} <= set(rec)
+    # x199's driver collect runs inside build(): the contract sees it
+    assert plancheck["queries"]["x199_fd_histogram"]["build_jobs"] >= 2
+    assert plancheck["queries"]["d11_star_join_agg"]["build_jobs"] == 0
+
+
+def test_a_query_that_raises_is_recorded_and_the_loop_goes_on(spark):
+    def boom(spark, sf_dir):
+        raise RuntimeError("no such table")
+
+    specs = {
+        "zz_boom": QuerySpec("zz_boom", boom, "SELECT 1"),
+        "d11_star_join_agg": QUERIES["d11_star_join_agg"],
+    }
+    out = prof.sweep(spark, specs, SF_SMOKE, contracts=True, oracle=True)
+    assert out["zz_boom"] == {"error": "RuntimeError: no such table"}
+    assert prof.violates(out["zz_boom"])
+    assert out["d11_star_join_agg"]["oracle"]["ok"]
+    assert not prof.violates(out["d11_star_join_agg"]["contracts"])
+
+
+def test_session_layout_comes_from_the_environment(tmp_path):
+    """The loop takes its layout from SPARK_GRAFT_SHUFFLE_PARTITIONS /
+    SPARK_GRAFT_CPUS and records the one its session really has: the
+    partition-layout sweep relies on both."""
+    oracle = tmp_path / "oracle.json"
+    env = {**os.environ, "SPARK_GRAFT_SHUFFLE_PARTITIONS": "3",
+           "SPARK_GRAFT_CPUS": "2"}
+    r = subprocess.run(
+        [sys.executable, TOOL, "d17_grouped_agg", "--sf-dir", SF_SMOKE,
+         "--runs", "0", "--oracle", str(oracle)],
+        env=env, stdout=subprocess.DEVNULL, timeout=600,
+    )
+    assert r.returncode == 0
+    with open(oracle) as fh:
+        got = json.load(fh)
+    assert got["shuffle_partitions"] == 3
+    assert got["default_parallelism"] == 2
+    assert got["results"]["d17_grouped_agg"]["ok"]

@@ -6,11 +6,15 @@ partition iteration order) passes a single-layout check and then breaks
 on the next cluster resize — this sweep is the cheap local proxy for
 that failure mode.
 
-Persists INVARIANCE_r{N}.json (or the --out path): per-query Spark
-value hash under each layout plus the overall verdict, so the gate is
-a diffable artifact rather than a commit-message claim (r8 verdict).
+Each layout runs ``profile_queries.py --runs 0 --oracle`` in its own
+process under the layout's environment, and that run's session must
+report the layout back: a session that ignored the environment proves
+nothing, and the verdict is then LAYOUT-NOT-APPLIED.
 
-Run: python tools/check_invariance.py [sf_dir] [--out PATH]
+Persists INVARIANCE_r{N}.json (or the --out path): per-query hashes
+under each layout, each layout's session and the verdict.
+
+Run: python tools/check_invariance.py [sf_dir] [--out PATH] [--only a,b]
 """
 
 from __future__ import annotations
@@ -26,8 +30,8 @@ import tempfile
 
 LAYOUTS = [
     {"SPARK_GRAFT_SHUFFLE_PARTITIONS": "3", "SPARK_GRAFT_CPUS": "5"},
-    {"SPARK_GRAFT_SHUFFLE_PARTITIONS": "7"},
-    {"SPARK_GRAFT_SHUFFLE_PARTITIONS": "32"},
+    {"SPARK_GRAFT_SHUFFLE_PARTITIONS": "7", "SPARK_GRAFT_CPUS": "3"},
+    {"SPARK_GRAFT_SHUFFLE_PARTITIONS": "32", "SPARK_GRAFT_CPUS": "8"},
 ]
 
 
@@ -44,89 +48,73 @@ def _default_out(repo: str) -> str:
     return os.path.join(repo, f"INVARIANCE_r{n:02d}.json")
 
 
+def _run_layout(cmd: list[str], layout: dict) -> tuple[bool, dict]:
+    """Whether one layout's oracle run exited 0, and its --oracle JSON."""
+    with tempfile.TemporaryDirectory() as tmp:
+        out = os.path.join(tmp, "oracle.json")
+        r = subprocess.run(
+            [*cmd, "--oracle", out],
+            env={**os.environ, **layout},
+            stdout=subprocess.DEVNULL,
+        )
+        if not os.path.exists(out):
+            return False, {}
+        with open(out) as fh:
+            return r.returncode == 0, json.load(fh)
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
     ap.add_argument("--out", default="")
-    ap.add_argument(
-        "--only", default="", help="comma-separated query names (smoke)"
-    )
+    ap.add_argument("--only", default="", help="comma-separated query names")
     args = ap.parse_args()
     here = os.path.dirname(os.path.abspath(__file__))
-    repo = os.path.dirname(here)
-    out_path = args.out or _default_out(repo)
+    out_path = args.out or _default_out(os.path.dirname(here))
+    only = [n.strip() for n in args.only.split(",") if n.strip()]
+    cmd = [sys.executable, os.path.join(here, "profile_queries.py"), *only,
+           "--sf-dir", args.sf_dir, "--runs", "0"]
 
-    per_layout: list[dict] = []
-    ok = True
+    ok, applied, sessions, results = True, True, [], []
     for layout in LAYOUTS:
-        env = {**os.environ, **layout}
-        with tempfile.NamedTemporaryFile(suffix=".json", delete=False) as tf:
-            tmp_json = tf.name
-        cmd = [
-            sys.executable,
-            os.path.join(here, "check_oracle.py"),
-            args.sf_dir,
-            "--json",
-            tmp_json,
-        ]
-        if args.only:
-            cmd += ["--only", args.only]
-        r = subprocess.run(
-            cmd,
-            env=env,
-            capture_output=True,
-            text=True,
-        )
-        lines = r.stdout.strip().splitlines()
-        tail = lines[-2] if len(lines) >= 2 else "(no output)"
-        print(f"{layout}: {tail}")
-        layout_ok = r.returncode == 0 and "passed" in r.stdout
-        ok = ok and layout_ok
-        results = {}
-        try:
-            with open(tmp_json) as fh:
-                results = json.load(fh)["results"]
-        finally:
-            os.unlink(tmp_json)
-        per_layout.append(
-            {"layout": layout, "ok": layout_ok, "results": results}
-        )
+        passed, res = _run_layout(cmd, layout)
+        session = {k: res.get(k) for k in
+                   ("shuffle_partitions", "default_parallelism")}
+        wanted = [int(layout["SPARK_GRAFT_SHUFFLE_PARTITIONS"]),
+                  int(layout["SPARK_GRAFT_CPUS"])]
+        applied = applied and list(session.values()) == wanted
+        ok = ok and passed
+        sessions.append(session)
+        results.append(res.get("results", {}))
+        n_ok = sum(1 for r in results[-1].values() if r.get("ok"))
+        print(f"{layout}: {n_ok}/{len(results[-1])} passed, session "
+              f"{session}", flush=True)
 
     # cross-layout hash agreement per query (the invariance itself,
     # independent of the oracle verdicts)
-    names = sorted(
-        set().union(*[set(pl["results"]) for pl in per_layout])
-        if per_layout
-        else set()
-    )
+    names = sorted(set().union(*results))
     disagreeing = []
     queries: dict[str, dict] = {}
     for name in names:
-        hashes = [
-            pl["results"].get(name, {}).get("hash", "") for pl in per_layout
-        ]
-        rows = [
-            pl["results"].get(name, {}).get("rows") for pl in per_layout
-        ]
-        oks = [pl["results"].get(name, {}).get("ok", False) for pl in per_layout]
-        # rows-only queries (no oracle dual) carry no hash; their row
-        # counts must still agree across layouts
-        invariant = (
-            len(set(hashes)) == 1 and len(set(rows)) == 1 and all(oks)
-        )
+        recs = [res.get(name, {}) for res in results]
+        hashes = [r.get("hash", "") for r in recs]
+        all_ok = all(r.get("ok", False) for r in recs)
+        rows = {r.get("rows") for r in recs}
+        invariant = len(set(hashes)) == 1 and len(rows) == 1 and all_ok
         if not invariant:
             disagreeing.append(name)
-        queries[name] = {
-            "hashes": hashes,
-            "ok": all(oks),
-            "invariant": invariant,
-        }
-    ok = ok and not disagreeing
+        queries[name] = {"hashes": hashes, "ok": all_ok, "invariant": invariant}
+    ok = ok and applied and not disagreeing
+    verdict = (
+        "LAYOUT-NOT-APPLIED" if not applied
+        else "INVARIANT" if ok else "LAYOUT-DEPENDENT"
+    )
 
     artifact = {
         "sf_dir": args.sf_dir,
-        "layouts": [pl["layout"] for pl in per_layout],
-        "verdict": "INVARIANT" if ok else "LAYOUT-DEPENDENT",
+        "layouts": LAYOUTS,
+        "sessions": sessions,
+        "verdict": verdict,
         "n_queries": len(names),
         "disagreeing": disagreeing,
         "queries": queries,
@@ -134,11 +122,7 @@ def main() -> int:
     with open(out_path, "w") as fh:
         json.dump(artifact, fh, indent=1)
     print(f"wrote {out_path}")
-    print(
-        "INVARIANT"
-        if ok
-        else f"LAYOUT-DEPENDENT RESULTS ({disagreeing}) — fix before shipping"
-    )
+    print(verdict if ok else f"{verdict} ({disagreeing}) — fix before shipping")
     return 0 if ok else 1
 
 
