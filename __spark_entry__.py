@@ -34,12 +34,12 @@ def entry(spark: SparkSession) -> DataFrame:
 # The window is rebuilt each round from the committed correctness
 # verdicts (CORRECTNESS_r*.json): first the queries whose code changed since
 # their last verdict, then the queries whose last verdict is oldest,
-# in registry order. This round: the 21 snapshot-layer queries now on
-# the shared scratch-table scaffold (driver-sorted local results, a
-# guarded max key), then x87/x90/x91/x154/x197 (zero-row guards on
-# their ratios and date span), then the rest of the round-12 verdicts
-# in registry order up to 50. The previous window (the exact-quantile
-# queries, the round-11 rest and d01–d10) leaves it.
+# in registry order. This round: the 21 snapshot-layer queries, whose
+# every commit now goes through one publish step, and x139 (label
+# propagation's joins pinned to sort-merge), then the rest of the
+# round-12 verdicts (x170–x176, x178–x182), then the round-13 verdicts
+# in registry order up to 50. The zero-row-guard queries
+# (x87/x90/x91/x154/x197), d11–d25, x113–x131 and x169 leave it.
 _CHECK_FIRST = [
     # snapshot-layer queries on the shared scaffold
     "x127_time_travel_audit", "x128_format_interop",
@@ -53,20 +53,20 @@ _CHECK_FIRST = [
     "x202_constraint_lifecycle", "x203_stream_rate_feed",
     "x217_vacuum_lifecycle", "x218_replace_where_lifecycle",
     "x230_zorder_lifecycle",
-    # zero-row guards
-    "x87_table_profile", "x90_cbo_estimates",
-    "x91_profile_approx_certified", "x154_ref_integrity_audit",
-    "x197_time_embargo_split",
-    # last verdict in round 12, registry order
-    "d11_star_join_agg", "d12_left_join", "d13_semi_join", "d14_anti_join",
-    "d15_range_join", "d16_cross_join", "d17_grouped_agg",
-    "d18_count_distinct_having", "d19_median", "d20_rollup",
-    "d21_grouping_sets", "d22_conditional_agg", "d23_window_rank",
-    "d24_window_lag_lead", "d25_window_running_max",
-    "x113_retraction_certified", "x114_gram_matrix",
-    "x117_link_prediction", "x119_ivm_join_delta",
-    "x120_session_incident_overlap", "x129_pretokenize_vocab",
-    "x130_table_checksum", "x131_markov_anomaly", "x169_chi_squared",
+    # label propagation's joins pinned to sort-merge (build jobs stable)
+    "x139_label_propagation",
+    # rest of the round-12 verdicts
+    "x170_effective_sample_size", "x171_simpson_diversity",
+    "x172_ranking_eval", "x173_classifier_eval", "x174_shannon_entropy",
+    "x175_js_divergence", "x176_association_summary", "x178_corr_matrix",
+    "x179_pipe_rollup", "x180_cleaning_funnel", "x181_max_drawdown",
+    "x182_trailing_range_frame",
+    # round-13 verdicts, registry order
+    "d26_intersect", "d27_except", "d28_date_agg", "d29_math_string",
+    "d30_documents_agg", "d31_pivot", "d32_unpivot", "d33_string_agg",
+    "d34_cube", "x01_token_stats", "x40_length_trim", "x41_tumbling_rollup",
+    "x42_sliding_rollup", "x43_pagerank", "x44_unigram_logprob",
+    "x45_minhash_calibration",
 ]
 
 

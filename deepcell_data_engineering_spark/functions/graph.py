@@ -342,7 +342,11 @@ def label_propagation(
     same fixed-budget convention as pagerank/k_core here, and what
     keeps the SQL oracle expressible as unrolled CTEs). Each round is
     one broadcast-free equi-join per direction + a min-aggregation,
-    localCheckpoint-ed so iteration r does not recompute r-1."""
+    localCheckpoint-ed so iteration r does not recompute r-1. The
+    joins are pinned to sort-merge: left to AQE, a small round turns
+    each join into a broadcast of whichever side's shuffle finished
+    first, so the round's job count (and with it the build's) would
+    vary from run to run."""
     e = (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("eu"),
@@ -360,6 +364,7 @@ def label_propagation(
         .localCheckpoint()
     )
     for _ in range(rounds):
+        lbl = lbl.hint("merge")
         from_u = e.join(lbl, lbl["n"] == e["eu"]).select(
             e["ev"].alias("n"), lbl["lbl"].alias("lbl")
         )

@@ -507,14 +507,14 @@ def _stored_schema(manifest: dict):
         return None
 
 
-def _is_uniform(sch, dirs: list[str], fresh: dict | None, parent_m: dict) -> bool:
+def _is_uniform(sch, dirs: list[str], fresh: dict, parent_m: dict) -> bool:
     """Whether every directory in ``dirs`` provably holds exactly the
     schema ``sch``: each fresh directory was written from a frame whose
     (nullable-normalized) schema equals it field for field, in order,
     and every other directory is carried from a ``uniform`` parent that
-    recorded the same schema. ``fresh=None`` (dirs re-referenced from
-    elsewhere) proves nothing."""
-    if fresh is None or any(_as_nullable(s) != sch for s in fresh.values()):
+    recorded the same schema. A fresh entry whose schema is None (a dir
+    re-referenced from elsewhere) proves nothing."""
+    if any(s is None or _as_nullable(s) != sch for s in fresh.values()):
         return False
     carried = [d for d in dirs if d not in fresh]
     return not carried or (
@@ -698,7 +698,7 @@ def scan_snapshot(
 
 def commit(
     spark: SparkSession,
-    df: DataFrame | None,
+    df: DataFrame,
     table_path: str,
     mode: str = "append",
     batch_id: int | None = None,
@@ -706,15 +706,7 @@ def commit(
     store: ManifestStore | None = None,
     stats_cols: list[str] | None = None,
     check_constraints: dict[str, str] | None = None,
-    _op: str | None = None,
-    _dirs: list[str] | None = None,
-    _extra_manifest: dict | None = None,
-    _dir_stats: dict[str, dict] | None = None,
-    _drop_constraints: list[str] | None = None,
-    _rebase: bool = False,
     _ts_us: int | None = None,
-    _schema=None,
-    _written: dict | None = None,
 ) -> int:
     """Write ``df`` as a new table version and return its number.
 
@@ -747,25 +739,13 @@ def commit(
     head. Appends should leave it unset — they are order-independent
     and blind retry is correct for them.
 
-    ``_rebase`` (internal; merge/delete/update/optimize): Delta-style
-    LOGICAL conflict resolution instead of the outright raise. When
-    the head advanced past ``expected_parent``, the losing rewrite is
-    re-pointed at the new head iff every interleaved commit is a pure
-    append (its dir set a superset of its parent's, constraint set
-    unchanged): the published dirs become the head's dirs minus the
-    dirs this op rewrote/dropped plus its rewritten dirs — appended
-    rows survive, rewritten rows land, and the op's predicate simply
-    never saw the concurrent arrivals (write-serializable isolation,
-    Delta's conflict matrix). Any interleaved overwrite / restore /
-    rewrite / constraint change overlaps by definition and raises.
-
     Concurrent writers: the manifest is published put-if-absent; on
     conflict the loser re-reads the new parent (re-deriving the append
     dir list and re-running the batch_id dedup against the winner's
     commits) and retries with the next version number — unless
-    ``expected_parent`` pins the rewrite's basis, in which case the
-    conflict raises. The data directory is written once, outside the
-    retry loop.
+    ``expected_parent`` pins the content's basis, in which case the
+    conflict raises. The data directory is written once, before the
+    retry loop (see :func:`_publish`).
 
     ``stats_cols``: record per-directory [min, max] for the named
     columns in the manifest (the Delta/Iceberg data-skipping stats,
@@ -803,102 +783,38 @@ def commit(
     surfacing later from an unrelated UPDATE (use
     :func:`add_constraint` / :func:`drop_constraint` for the
     metadata-only lifecycle verbs). Constraints must be SQL strings so
-    the manifest stays JSON. delete/restore/clone carry them forward
-    without re-validation (removal and re-reference cannot create new
-    rows). Enforcement is against the basis snapshot's constraint set
-    — a constraint added by a concurrent racer applies from the next
-    commit (the Delta best-effort rule).
+    the manifest stays JSON. delete/restore/clone/optimize carry them
+    forward without re-validation (removal, re-reference and
+    compaction cannot create new rows). Enforcement is against the
+    basis snapshot's constraint set — a constraint added by a
+    concurrent racer applies from the next commit (the Delta
+    best-effort rule).
 
-    ``df=None`` with ``_dirs=None`` publishes a METADATA-ONLY commit:
-    the data dir list is the parent's, re-read per retry so a racing
-    append's dirs are adopted, never dropped (the add/drop-constraint
-    verbs ride this).
-
-    ``_written`` (internal; the rewrite verbs): ``{dir: schema}`` of
-    the frames the caller wrote into the fresh entries of ``_dirs``.
-    With it (or with ``df``, or on a metadata-only commit) the manifest
-    gets the ``uniform`` marker when every referenced directory holds
-    exactly the recorded schema — see the module docstring. Callers
-    passing ``_dirs`` without ``_written`` (restore, clone) never get
-    the marker.
+    ``_ts_us``: the commit timestamp (micros) to record in place of the
+    wall clock — the deterministic-test hook behind TIMESTAMP AS OF.
+    It is floored past the parent's stamp like the clock is, so an
+    injected stamp can never travel backwards.
     """
     if mode not in ("append", "overwrite", "replace"):
         raise ValueError(f"mode must be append|overwrite|replace, got {mode!r}")
     st = _store(store)
     st.check_path(table_path)
-
-    def _conflict(parent: int | None, why: str = "") -> SnapshotConflictError:
-        return SnapshotConflictError(
-            f"table {table_path!r} advanced to version {parent} "
-            f"past expected_parent={expected_parent!r}; this "
-            "commit's content was derived from a stale snapshot — "
-            "re-read and re-derive instead of overwriting the "
-            "concurrent commit's rows" + (f" ({why})" if why else "")
-        )
-
-    def _try_rebase(head: int | None, pinned: list[str]) -> list[str] | None:
-        """Logical conflict resolution (``_rebase``): re-point this
-        rewrite's dir algebra at ``head`` iff every commit interleaved
-        since ``expected_parent`` was a pure append with an unchanged
-        constraint set. Returns the rebased dir list, or None when the
-        histories overlap (caller raises)."""
-        basis = expected_parent
-        if (
-            not _rebase
-            or basis is _UNSET
-            or basis is None
-            or head is None
-            or head < basis
-        ):
-            return None
-        basis_m = _load_manifest(table_path, basis, st)
-        basis_dirs = set(basis_m["dirs"])
-        basis_constraints = basis_m.get("constraints", {})
-        removed = basis_dirs - set(pinned)
-        added = [d for d in pinned if d not in basis_dirs]
-        cur = basis_dirs
-        for v in range(basis + 1, head + 1):
-            m = _load_manifest(table_path, v, st)
-            mdirs = set(m["dirs"])
-            if (
-                m["op"] != "append"
-                or not mdirs >= cur
-                or m.get("constraints", {}) != basis_constraints
-            ):
-                return None
-            cur = mdirs
-        head_dirs = _load_manifest(table_path, head, st)["dirs"]
-        return [d for d in head_dirs if d not in removed] + added
-
-    parent = current_version(table_path, st)
-    if (
-        expected_parent is not _UNSET
-        and parent != expected_parent
-        and not _rebase
-    ):
-        raise _conflict(parent)
-    if batch_id is not None and parent is not None:
-        seen = _batch_id_seen(table_path, parent, batch_id, st)
-        if seen is not None:
-            return seen
-    parent_constraints: dict[str, str] = {}
-    if parent is not None:
-        parent_constraints.update(
-            _load_manifest(table_path, parent, st).get("constraints", {})
-        )
-    constraints = dict(parent_constraints)
-    if check_constraints:
-        for cname, csql in check_constraints.items():
-            if not isinstance(csql, str):
-                raise ValueError(
-                    f"constraint {cname!r} must be a SQL string "
-                    "(manifests are JSON); got a non-string expression"
-                )
-        constraints.update(check_constraints)
-    if _drop_constraints:
-        for cname in _drop_constraints:
-            constraints.pop(cname, None)
-    if constraints and _dirs is None and df is not None:
+    parent, seen = _head(table_path, st, batch_id, expected_parent)
+    if seen is not None:
+        return seen
+    parent_m = (
+        _load_manifest(table_path, parent, st) if parent is not None else {}
+    )
+    held = parent_m.get("constraints", {})
+    added = check_constraints or {}
+    for cname, csql in added.items():
+        if not isinstance(csql, str):
+            raise ValueError(
+                f"constraint {cname!r} must be a SQL string "
+                "(manifests are JSON); got a non-string expression"
+            )
+    constraints = {**held, **added}
+    if constraints:
         # pin ONE evaluation of df so validation and the write see the
         # same rows — a non-deterministic df cannot pass the check yet
         # write violating rows (the merge/update determinism rule).
@@ -908,160 +824,251 @@ def commit(
         # happens BEFORE anything is written.
         from pyspark.sql import Observation
 
-        _cnames = list(constraints)
-        _cobs = Observation()
+        names = list(constraints)
+        obs = Observation()
         df = df.observe(
-            _cobs, *_constraint_aggs(_cnames, constraints)
+            obs, *_constraint_aggs(names, constraints)
         ).localCheckpoint(eager=True)
-        _raise_violations(_cobs.get, _cnames, table_path)
+        _raise_violations(obs.get, names, table_path)
     # ADD CONSTRAINT semantics: a constraint NEW to the table (fresh
     # name or changed expression) arriving on an append must also hold
     # on the EXISTING data — validate the basis snapshot in one
     # aggregate pass instead of grandfathering violations (Delta's
     # ALTER TABLE ADD CONSTRAINT contract; overwrite/replace discard
     # the old rows, so only appends validate history)
-    if check_constraints and mode == "append" and parent is not None:
-        introduced = {
-            n: s
-            for n, s in check_constraints.items()
-            if parent_constraints.get(n) != s
-        }
-        if introduced and _load_manifest(table_path, parent, st)["dirs"]:
-            _enforce_constraints(
-                read_snapshot(spark, table_path, parent, store=st),
-                introduced,
-                table_path,
-            )
-    new_dir_stats: dict[str, list] = {}
-    rel_dir: str | None = None
-    if _dirs is None and df is not None:
-        # stats ride the write job itself (Observation/CollectMetrics)
-        # — one pass, no read-back of what was just written. A bad
-        # stats column still raises, as the read-back aggregate did.
-        if stats_cols:
-            missing = [c for c in stats_cols if c not in df.columns]
-            if missing:
-                raise ValueError(
-                    f"stats_cols not in the committed frame: {missing}"
-                )
-        rel_dir, new_dir_stats = _write_data_dir(
-            df, table_path, list(stats_cols or [])
+    introduced = {n: s for n, s in added.items() if held.get(n) != s}
+    if introduced and mode == "append" and parent_m.get("dirs"):
+        _enforce_constraints(
+            read_snapshot(spark, table_path, parent, store=st),
+            introduced,
+            table_path,
         )
-
-    # {dir: written frame schema} for this commit's fresh directories —
-    # the evidence the ``uniform`` marker derives from (None: the caller
-    # re-references dirs it did not write, e.g. restore/clone)
-    fresh = _written if _dirs is not None else (
-        {rel_dir: df.schema} if df is not None else {}
+    # stats ride the write job itself (Observation/CollectMetrics) —
+    # one pass, no read-back of what was just written. A bad stats
+    # column still raises, as the read-back aggregate did.
+    missing = [c for c in stats_cols or [] if c not in df.columns]
+    if missing:
+        raise ValueError(f"stats_cols not in the committed frame: {missing}")
+    rel, ranges = _write_data_dir(df, table_path, list(stats_cols or []))
+    return _publish(
+        table_path, st, mode, {rel: (ranges, df.schema)},
+        None if mode == "append" else [],
+        basis=expected_parent, batch_id=batch_id, constraints=added,
+        ts_us=_ts_us,
     )
 
+
+def _conflict(
+    table_path: str, head: int | None, basis, why: str = ""
+) -> SnapshotConflictError:
+    return SnapshotConflictError(
+        f"table {table_path!r} advanced to version {head} "
+        f"past expected_parent={basis!r}; this "
+        "commit's content was derived from a stale snapshot — "
+        "re-read and re-derive instead of overwriting the "
+        "concurrent commit's rows" + (f" ({why})" if why else "")
+    )
+
+
+def _head(
+    table_path: str, st: ManifestStore, batch_id: int | None,
+    basis: int | None | object = _UNSET, rebase: bool = False,
+) -> tuple[int | None, int | None]:
+    """(head version, version already carrying ``batch_id`` or None) —
+    the reconcile a commit makes before it writes and again at the top
+    of every publish attempt. Raises :class:`SnapshotConflictError`
+    when the head is not ``basis`` (the expected parent) and the commit
+    may not ``rebase``."""
+    head = current_version(table_path, st)
+    if basis is not _UNSET and head != basis and not rebase:
+        raise _conflict(table_path, head, basis)
+    if batch_id is None or head is None:
+        return head, None
+    return head, _batch_id_seen(table_path, head, batch_id, st)
+
+
+def _rebase_dirs(
+    table_path: str, st: ManifestStore, basis: int | None,
+    head: int | None, pinned: list[str],
+) -> list[str] | None:
+    """Logical conflict resolution: re-point a rewrite's dir list
+    ``pinned`` (computed against ``basis``) at ``head`` iff every
+    commit interleaved since ``basis`` was a pure append with an
+    unchanged constraint set. Returns the rebased dir list, or None
+    when the histories overlap (the caller raises)."""
+    if basis is None or head is None or head < basis:
+        return None
+    basis_m = _load_manifest(table_path, basis, st)
+    basis_dirs = set(basis_m["dirs"])
+    basis_constraints = basis_m.get("constraints", {})
+    removed = basis_dirs - set(pinned)
+    added = [d for d in pinned if d not in basis_dirs]
+    cur = basis_dirs
+    for v in range(basis + 1, head + 1):
+        m = _load_manifest(table_path, v, st)
+        mdirs = set(m["dirs"])
+        if (
+            m["op"] != "append"
+            or not mdirs >= cur
+            or m.get("constraints", {}) != basis_constraints
+        ):
+            return None
+        cur = mdirs
+    head_dirs = _load_manifest(table_path, head, st)["dirs"]
+    return [d for d in head_dirs if d not in removed] + added
+
+
+def _table_schema(parent_m: dict, dirs: list[str], fresh: dict):
+    """The schema a version records: the union, in parquet mergeSchema
+    field order, of the parent's recorded schema when the version
+    carries any directory it did not write, then of every written
+    schema in ``fresh`` (``{dir: schema or None}``). None when there is
+    no part, when the carried part is unrecorded (a legacy log: a
+    partial claim could hide parent-only columns), or on a same-name
+    type mismatch — readers then take the footer-union read (slower,
+    never wrong)."""
+    parts = [s for s in fresh.values() if s is not None]
+    if any(d not in fresh for d in dirs):
+        parts.insert(0, _stored_schema(parent_m))
+    sch = None
+    for s in parts:
+        if s is None:
+            return None
+        sch = _as_nullable(s) if sch is None else _merge_schemas(
+            sch, _as_nullable(s)
+        )
+        if sch is None:
+            return None
+    return sch
+
+
+def _publish(
+    table_path: str,
+    st: ManifestStore,
+    op: str,
+    new: dict[str, tuple[dict, object]],
+    keep: list[str] | None = None,
+    *,
+    basis: int | None | object = _UNSET,
+    rebase: bool = False,
+    batch_id: int | None = None,
+    constraints: dict[str, str | None] | None = None,
+    extra: dict | None = None,
+    schema: object = _UNSET,
+    ts_us: int | None = None,
+) -> int:
+    """Publish one manifest over directories that are already written —
+    the one step behind every verb that commits — and return its
+    version.
+
+    ``new``: ``{dir: (stats, written schema or None)}`` for the
+    directories this version adds: their [min, max] ranges (may be
+    empty) and the schema of the frame written there. None marks a
+    directory re-referenced rather than written (restore, clone): it
+    proves nothing for the ``uniform`` marker.
+
+    ``keep``: the directories carried besides ``new``. None carries
+    every head directory, re-read per attempt so a racing append's are
+    adopted, never dropped (append; with an empty ``new`` a
+    METADATA-ONLY commit — the constraint verbs). A list pins them:
+    the basis dirs a rewrite left untouched, or ``[]`` when ``new``
+    replaces the table.
+
+    ``basis``: the version the content was derived from (the expected
+    parent; unset for a blind append). ``rebase`` (merge/delete/update/
+    replace_where/optimize): Delta-style LOGICAL conflict resolution
+    instead of the outright raise. When the head advanced past
+    ``basis``, the losing rewrite is re-pointed at the new head iff
+    every interleaved commit is a pure append (its dir set a superset
+    of its parent's, constraint set unchanged): the published dirs
+    become the head's dirs minus the dirs this op rewrote/dropped plus
+    its new dirs — appended rows survive, rewritten rows land, and the
+    op's predicate simply never saw the concurrent arrivals
+    (write-serializable isolation, Delta's conflict matrix). Any
+    interleaved overwrite / restore / rewrite / constraint change
+    overlaps by definition and raises.
+
+    ``constraints``: ``{name: SQL}`` added to the head's set,
+    ``{name: None}`` dropped from it. ``extra``: further manifest
+    entries (a change set, clone/restore provenance). ``schema``: the
+    recorded schema of the version whose directories ``new``
+    re-references (restore, clone; None records none); otherwise the
+    schema derives from the parent's and the written ones
+    (:func:`_table_schema`). ``ts_us``: :func:`commit`'s test clock.
+
+    Each attempt reconciles the head first (:func:`_head`: the
+    expected-parent guard, the rebase and the ``batch_id`` replay),
+    then derives the dirs, stats, schema, ``uniform`` marker and
+    constraint set from that head, and publishes put-if-absent. A lost
+    race retries against the winner, up to ``_COMMIT_RETRIES`` times;
+    every ``_CHECKPOINT_INTERVAL``-th version also writes a
+    checkpoint."""
     for _ in range(_COMMIT_RETRIES):
-        version = 0 if parent is None else parent + 1
+        parent, seen = _head(table_path, st, batch_id, basis, rebase)
+        if seen is not None:
+            return seen
         parent_m = (
             _load_manifest(table_path, parent, st) if parent is not None
             else {}
         )
-        rebased = expected_parent is not _UNSET and parent != expected_parent
+        dirs = (parent_m.get("dirs", []) if keep is None else keep) + list(new)
+        rebased = basis is not _UNSET and parent != basis
         if rebased:
-            # head advanced past the rewrite's basis — rebase (logical
-            # conflict resolution) or raise; only reached with _rebase
-            pinned = list(_dirs) if _dirs is not None else [rel_dir]
-            dirs = _try_rebase(parent, pinned)
+            # head advanced past the rewrite's basis (only reached with
+            # ``rebase``): rebase or raise
+            dirs = _rebase_dirs(table_path, st, basis, parent, dirs)
             if dirs is None:
                 raise _conflict(
-                    parent,
+                    table_path, parent, basis,
                     "an interleaved commit rewrote/replaced data or "
                     "changed constraints — not rebaseable",
                 )
-        elif _dirs is not None:
-            # caller (merge_upsert) wrote and pinned its own dir set
-            dirs = list(_dirs)
-        elif df is None:
-            # metadata-only commit: parent's dirs, re-read per retry
-            dirs = list(parent_m.get("dirs", []))
-        else:
-            dirs = [rel_dir]
-            if mode == "append" and parent is not None:
-                dirs = parent_m["dirs"] + dirs
-        manifest = {
-            "version": version,
-            "parent": parent,
-            "op": _op or mode,
-            "dirs": dirs,
-        }
+        version = 0 if parent is None else parent + 1
+        manifest = {"version": version, "parent": parent, "op": op,
+                    "dirs": dirs}
         # Commit timestamp (micros), the clock behind TIMESTAMP AS OF:
         # wall time forced MONOTONIC past the parent's stamp (Delta's
         # in-commit-timestamp rule) so timestamp resolution is a
         # well-ordered cut of the version line even under clock skew
-        # between writers; recomputed per publish retry so a lost race
-        # adopts the winner's stamp as the floor. ``_ts_us`` is the
-        # deterministic-test injection point — it too is floored, so an
-        # injected stamp can never travel backwards.
-        now_us = _ts_us if _ts_us is not None else time.time_ns() // 1000
+        # between writers; recomputed per attempt so a lost race adopts
+        # the winner's stamp as the floor. An injected ``ts_us`` is
+        # floored too.
+        now_us = ts_us if ts_us is not None else time.time_ns() // 1000
         manifest["ts_us"] = (
             max(now_us, parent_m.get("ts_us", 0) + 1)
             if parent is not None
             else now_us
         )
         # carry data-skipping stats with the directories they describe:
-        # dirs kept from the parent keep their ranges, this commit's
-        # fresh dir gets the ranges computed above, and merge/delete
-        # pass recomputed ranges for their rewritten dirs via
-        # _dir_stats — a dir with no entry is "unprunable", never
-        # "wrong".
+        # dirs kept from the parent keep their ranges, new dirs bring
+        # theirs — a dir with no entry is "unprunable", never "wrong"
         parent_stats = parent_m.get("stats", {})
-        stats: dict[str, dict] = {
-            d: parent_stats[d] for d in dirs if d in parent_stats
-        }
-        if new_dir_stats:
-            stats[rel_dir] = new_dir_stats
-        if _dir_stats:
-            stats.update({d: s for d, s in _dir_stats.items() if s})
+        stats = {d: parent_stats[d] for d in dirs if d in parent_stats}
+        stats.update((d, s) for d, (s, _) in new.items() if s)
         if stats:
             manifest["stats"] = stats
         # manifest-carried SCHEMA (Delta's schemaString): written once
         # at commit time so readers/CRUD never pay a footer-union pass
-        # to rediscover it. Overwrites record the written frame's
-        # schema; appends and _dirs rewrites merge it with the
-        # parent's recorded union (re-read per retry so a racer's
-        # evolution carries); a type-mismatched merge records nothing
-        # (readers fall back to mergeSchema — slower, never wrong).
-        written = _schema if _schema is not None else (
-            df.schema if df is not None else None
+        # to rediscover it; re-derived per attempt so a racer's
+        # evolution carries
+        fresh = {d: w for d, (_, w) in new.items()}
+        sch = (
+            _table_schema(parent_m, dirs, fresh) if schema is _UNSET
+            else schema
         )
-        written = _as_nullable(written) if written is not None else None
-        parent_sch = _stored_schema(parent_m) if parent is not None else None
-        if df is not None and _dirs is None and mode in (
-            "overwrite", "replace",
-        ):
-            sch = written
-        elif written is None:
-            sch = parent_sch
-        elif parent is None or parent_sch is None:
-            # no parent union to carry: for a fresh table the written
-            # schema IS the table schema; for an unrecorded legacy log
-            # a partial claim could hide parent-only columns — record
-            # nothing and keep the footer-union fallback
-            sch = written if parent is None else None
-        else:
-            sch = _merge_schemas(parent_sch, written)
         if sch is not None:
             manifest["schema"] = sch.jsonValue()
             if not rebased and _is_uniform(sch, dirs, fresh, parent_m):
                 manifest["uniform"] = True
-        # constraints are table-level state: parent's set (re-read per
-        # retry so a racer's additions carry) merged with this call's
-        # adds, minus this call's drops
-        c = dict(parent_m.get("constraints", {}))
-        if check_constraints:
-            c.update(check_constraints)
-        if _drop_constraints:
-            for cname in _drop_constraints:
-                c.pop(cname, None)
+        # constraints are table-level state: the head's set (re-read
+        # per attempt so a racer's additions carry) with this commit's
+        # adds and drops
+        c = {**parent_m.get("constraints", {}), **(constraints or {})}
+        c = {n: s for n, s in c.items() if s is not None}
         if c:
             manifest["constraints"] = c
-        if _extra_manifest:
-            manifest.update(_extra_manifest)
+        if extra:
+            manifest.update(extra)
         if batch_id is not None:
             manifest["batch_id"] = batch_id
         if st.put_if_absent(
@@ -1071,19 +1078,6 @@ def commit(
             if (version + 1) % _CHECKPOINT_INTERVAL == 0:
                 _write_checkpoint(table_path, version, st)
             return version
-        # Lost the race: adopt the winner's commit as parent (the top
-        # of the loop re-runs the expected-parent reconcile/rebase).
-        parent = current_version(table_path, st)
-        if (
-            expected_parent is not _UNSET
-            and parent != expected_parent
-            and not _rebase
-        ):
-            raise _conflict(parent)
-        if batch_id is not None and parent is not None:
-            seen = _batch_id_seen(table_path, parent, batch_id, st)
-            if seen is not None:
-                return seen
     raise SnapshotConflictError(
         f"could not publish a manifest at {table_path!r} after "
         f"{_COMMIT_RETRIES} attempts — a concurrent writer kept winning"
@@ -1175,15 +1169,9 @@ def add_constraint(
                 table_path,
             )
         try:
-            return commit(
-                spark,
-                None,
-                table_path,
-                mode="append",
-                expected_parent=head,
-                store=st,
-                check_constraints={name: sql},
-                _op="add_constraint",
+            return _publish(
+                table_path, st, "add_constraint", {}, basis=head,
+                constraints={name: sql},
             )
         except SnapshotConflictError as e:
             last = e  # a writer interleaved: re-read, re-validate
@@ -1220,14 +1208,8 @@ def drop_constraint(
             f"no constraint named {name!r} at {table_path!r} "
             f"(have: {sorted(held) or '<none>'})"
         )
-    return commit(
-        spark,
-        None,
-        table_path,
-        mode="append",
-        store=st,
-        _op="drop_constraint",
-        _drop_constraints=[name],
+    return _publish(
+        table_path, st, "drop_constraint", {}, constraints={name: None}
     )
 
 
@@ -1395,7 +1377,7 @@ class _Rewrite:
     ):
         for df in incoming:
             _check_reserved(df.columns, "the incoming frame")
-        self.spark, self.table_path = spark, table_path
+        self.table_path = table_path
         self.batch_id = batch_id
         self.st = st = _store(store)
         self.basis = (
@@ -1457,35 +1439,31 @@ class _Rewrite:
 
     def publish(
         self, op: str, chg: DataFrame, survivors: DataFrame,
-        inserted: DataFrame | None = None, schema=None,
+        inserted: DataFrame | None = None,
     ) -> int:
         """Write the change set, the ``survivors`` (only when a dir was
         touched: no empty dirs) and ``inserted`` (when given) as
         overlapping jobs over the pins (§2.6), then publish one rewrite
         commit pinned to the basis with the append-only auto-rebase:
         untouched dirs carried, each new dir with fused stats over the
-        tracked columns and its written schema (``uniform`` evidence).
-        ``schema`` (default: the basis scan's) is the table schema."""
+        tracked columns and its written schema (``uniform`` evidence)."""
         frames = [survivors] if self.touched else []
         if inserted is not None:
             frames.append(inserted)
         tracked = _tracked_stat_cols(self.manifest)
-        results = _overlap_writes(
+        chg_entries, *written = _overlap_writes(
             [lambda: _write_change_set(chg, self.table_path)]
             + [
                 lambda f=f: _write_data_dir(f, self.table_path, tracked)
                 for f in frames
             ]
         )
-        new = results[1:]
-        kept = [d for d in self.manifest["dirs"] if d not in self.touched]
-        return commit(
-            self.spark, None, self.table_path, mode="overwrite",
-            batch_id=self.batch_id, expected_parent=self.basis,
-            store=self.st, _op=op, _dirs=kept + [rel for rel, _ in new],
-            _rebase=True, _extra_manifest=results[0], _dir_stats=dict(new),
-            _written={rel: f.schema for (rel, _), f in zip(new, frames)},
-            _schema=self.scan.schema if schema is None else schema,
+        return _publish(
+            self.table_path, self.st, op,
+            {rel: (s, f.schema) for (rel, s), f in zip(written, frames)},
+            [d for d in self.manifest["dirs"] if d not in self.touched],
+            basis=self.basis, rebase=True, batch_id=self.batch_id,
+            extra=chg_entries,
         )
 
 
@@ -1552,7 +1530,7 @@ def merge_upsert(
     (``expected_parent``) with Delta-style LOGICAL conflict
     resolution: if only pure appends interleaved between the read and
     the publish, the commit auto-rebases onto the new head (appended
-    dirs kept, rewritten dirs land — see ``commit(_rebase=...)``); an
+    dirs kept, rewritten dirs land — see :func:`_publish`); an
     interleaved overwrite/rewrite/constraint change raises
     ``SnapshotConflictError`` instead of silently resurrecting
     replaced rows. ``batch_id`` gives streaming foreachBatch sinks the
@@ -1620,17 +1598,11 @@ def merge_upsert(
         # empty table: MERGE degenerates to pure insert (tombstones for
         # keys that never existed fold to no-ops); change set is the
         # source itself
-        chg = _as_changes(source, "insert")
-        return commit(
-            spark,
-            source,
-            table_path,
-            mode="overwrite",
-            batch_id=batch_id,
-            expected_parent=None,
-            store=rw.st,
-            _op="merge",
-            _extra_manifest=_write_change_set(chg, table_path),
+        chg = _write_change_set(_as_changes(source, "insert"), table_path)
+        rel, _ = _write_data_dir(source, table_path, [])
+        return _publish(
+            table_path, rw.st, "merge", {rel: ({}, source.schema)}, [],
+            basis=None, batch_id=batch_id, extra=chg,
         )
 
     if src_set != par_set:
@@ -1700,9 +1672,7 @@ def merge_upsert(
     # a pure-tombstone batch has no upsert rows, so no source directory
     # (the upsert count was observed on the pin)
     upserts = del_keys is None or (_m["n_upsert"] or 0) > 0
-    return rw.publish(
-        "merge", chg, survivors, source if upserts else None, source.schema
-    )
+    return rw.publish("merge", chg, survivors, source if upserts else None)
 
 
 def delete_where(
@@ -1949,9 +1919,10 @@ def replace_where(
         )
     if rw.basis is None:
         # initial load: nothing to replace, plain v0 overwrite
-        return commit(
-            spark, df, table_path, mode="overwrite", batch_id=batch_id,
-            store=rw.st, _op="replace_where",
+        rel, _ = _write_data_dir(df, table_path, [])
+        return _publish(
+            table_path, rw.st, "replace_where", {rel: ({}, df.schema)}, [],
+            batch_id=batch_id,
         )
     _raise_violations(_m, cnames, table_path)
     # ONE pinned evaluation of the predicate over the touched dirs
@@ -2363,7 +2334,6 @@ def optimize_table(
         subs = sorted(
             s for s in st.listdir(commit_dir) if s.startswith("_zb=")
         )
-        new_rels = [f"{rel}/{s}" for s in subs]
         stats_cols = sorted(set(tracked) | set(zorder_by))
         # every bucket's [min, max] in ONE grouped pass over the
         # partition-discovered write (vs one read-back job per bucket
@@ -2375,33 +2345,16 @@ def optimize_table(
             .agg(*_range_aggs(stats_cols))
             .collect()
         }
-        dir_stats = {
-            f"{rel}/{s}": by_bucket.get(s, {}) for s in subs
-        }
-        return commit(
-            spark,
-            None,
-            table_path,
-            mode="replace",
-            expected_parent=basis,
-            store=st,
-            _dirs=new_rels,
-            _rebase=True,
-            _dir_stats=dir_stats,
-            _schema=df.schema,
-            _written={r: df.schema for r in new_rels},
-        )
-    if n_target >= n_files:
+        new = {f"{rel}/{s}": (by_bucket.get(s, {}), df.schema) for s in subs}
+    elif n_target >= n_files:
         return basis
-    return commit(
-        spark,
-        df.repartition(n_target),
-        table_path,
-        mode="replace",
-        expected_parent=basis,
-        store=st,
-        stats_cols=tracked or None,
-        _rebase=True,
+    else:
+        rel, ranges = _write_data_dir(
+            df.repartition(n_target), table_path, tracked
+        )
+        new = {rel: (ranges, df.schema)}
+    return _publish(
+        table_path, st, "replace", new, [], basis=basis, rebase=True
     )
 
 
@@ -2452,29 +2405,12 @@ def clone_table(
     root = (
         os.path.abspath(src_path) if "://" not in src_path else src_path
     )
-    abs_dirs = [os.path.join(root, d) for d in m["dirs"]]
-    abs_stats = {
-        os.path.join(root, d): s
-        for d, s in m.get("stats", {}).items()
-        if d in set(m["dirs"])
-    }
-    return commit(
-        spark,
-        None,
-        dst_path,
-        mode="overwrite",
-        store=st,
-        _op="clone",
-        _dirs=abs_dirs,
-        _dir_stats=abs_stats,
-        _extra_manifest={
-            "cloned_from": src_path,
-            "clone_version": version,
-            # explicit None when the source never recorded a schema:
-            # overrides commit's parent-schema carry, which would be
-            # the DESTINATION's shape, not the cloned content's
-            "schema": m.get("schema"),
-        },
+    stats = m.get("stats", {})
+    return _publish(
+        dst_path, st, "clone",
+        {os.path.join(root, d): (stats.get(d, {}), None) for d in m["dirs"]},
+        [], extra={"cloned_from": src_path, "clone_version": version},
+        schema=_stored_schema(m),
     )
 
 
@@ -2550,22 +2486,12 @@ def restore_table(
             f"cannot restore {table_path!r} to version {version}: "
             f"data directories vacuumed: {missing}"
         )
-    return commit(
-        spark,
-        None,
-        table_path,
-        mode="overwrite",
-        expected_parent=basis,
-        store=st,
-        _op="restore",
-        _dirs=list(m["dirs"]),
-        _dir_stats=m.get("stats", {}),
-        _extra_manifest={
-            "restored_from": version,
-            # explicit None when the restored version predates schema
-            # recording — the head's schema must not leak onto it
-            "schema": m.get("schema"),
-        },
+    stats = m.get("stats", {})
+    return _publish(
+        table_path, st, "restore",
+        {d: (stats.get(d, {}), None) for d in m["dirs"]}, [],
+        basis=basis, extra={"restored_from": version},
+        schema=_stored_schema(m),
     )
 
 

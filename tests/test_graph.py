@@ -71,3 +71,34 @@ def test_label_propagation_matches_pure_python(spark):
     # after 2 rounds the chain is NOT fully merged (node 14 still > 10)
     two = dict(simulate(2))
     assert two[14] == 12 and two[10] == 10
+
+
+def test_label_propagation_rounds_keep_sort_merge_joins(spark):
+    """Every round's joins run as sort-merge joins under AQE. Left to
+    AQE, a small round broadcasts the side whose shuffle finished
+    first, so the jobs a run starts (x139's PLANCHECK ``build_jobs``)
+    changed from run to run."""
+    from pyspark.sql import functions as F
+
+    from deepcell_data_engineering_spark.functions.graph import (
+        label_propagation,
+    )
+
+    status = spark._jsparkSession.sharedState().statusStore()
+    first = status.executionsCount()
+    edges = spark.range(200).select(
+        (F.col("id") % 50).alias("u"), ((F.col("id") * 7 + 1) % 50).alias("v")
+    )
+    label_propagation(edges, rounds=2)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finals = []
+    it = status.executionsList(first, 100).iterator()
+    while it.hasNext():
+        plan = it.next().physicalPlanDescription()
+        final = plan.split("== Initial Plan ==")[0]
+        if "Join" in final:
+            finals.append(final)
+    assert len(finals) == 2  # one pinned frame per round
+    for final in finals:
+        assert "SortMergeJoin" in final
+        assert "BroadcastHashJoin" not in final

@@ -190,10 +190,9 @@ def test_concurrent_writer_conflict_retries_not_overwrites(spark, tmp_path):
     a = docs.where(F.col("doc_id") < 30)
     snap.commit(spark, a, t)
 
-    # Simulate a concurrent winner: hand-publish v1 the way commit()
-    # would, between our writer's parent read and its publish. Because
-    # commit() re-reads the parent inside the retry loop, pre-placing
-    # the manifest is an exact stand-in for losing the race.
+    # A concurrent winner: hand-publish v1 the way commit() would,
+    # before our writer reads the head (it never loses a put here;
+    # test_lost_publish_race_reconciles_against_the_winner does).
     b = docs.where((F.col("doc_id") >= 30) & (F.col("doc_id") < 40))
     win_dir = os.path.join(t, "data", f"c{uuid.uuid4().hex[:12]}")
     b.write.parquet(win_dir)
@@ -216,6 +215,86 @@ def test_concurrent_writer_conflict_retries_not_overwrites(spark, tmp_path):
     assert _rows(snap.read_snapshot(spark, t, 2)) == _rows(
         a.unionByName(b).unionByName(c)
     )
+
+
+class _LosesNextPut(snap.InMemoryManifestStore):
+    """An object store on which the next manifest put, once
+    ``rival_dir`` is set, loses the race: a competing append of
+    ``rival_dir`` (with ``rival``'s extra fields) lands at the contested
+    version first, and the put reports the key taken."""
+
+    rival_dir: str | None = None
+    rival: dict = {}
+
+    def put_if_absent(self, path: str, data: bytes) -> bool:
+        import json
+
+        name = os.path.basename(path)
+        if self.rival_dir is None or not name.startswith("v"):
+            return super().put_if_absent(path, data)
+        v = int(name[1:7])
+        head = json.loads(self.get(snap._manifest_path(
+            os.path.dirname(os.path.dirname(path)), v - 1
+        )))
+        winner = {"version": v, "parent": v - 1, "op": "append",
+                  "dirs": head["dirs"] + [self.rival_dir], **self.rival}
+        self.rival_dir = None
+        assert super().put_if_absent(path, json.dumps(winner).encode())
+        return False
+
+
+def test_lost_publish_race_reconciles_against_the_winner(spark, tmp_path):
+    """Each put below loses to a competing append that lands first, so
+    the publish step's post-race reconcile runs every time (the
+    threaded race tests reach it only by chance): a plain append lands
+    after the winner, a replayed ``batch_id`` the winner carries
+    returns the winner's version, a pinned ``expected_parent`` raises,
+    and a rewrite rebases over the winning append."""
+    import uuid
+
+    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "source")
+    t = str(tmp_path / "tbl")
+    store = _LosesNextPut()
+
+    def rival(lo, hi, **extra):
+        d = os.path.join(t, snap._DATA_DIR, f"c{uuid.uuid4().hex[:12]}")
+        docs.where(F.col("doc_id").between(lo, hi - 1)).write.parquet(d)
+        store.rival_dir, store.rival = os.path.relpath(d, t), extra
+
+    def rows(v):
+        return _rows(snap.read_snapshot(spark, t, v, store=store))
+
+    def want(*spans):
+        return sorted(
+            r for lo, hi in spans
+            for r in _rows(docs.where(F.col("doc_id").between(lo, hi - 1)))
+        )
+
+    assert snap.commit(spark, docs.where("doc_id < 30"), t, store=store) == 0
+    rival(30, 40)
+    v = snap.commit(spark, docs.where("doc_id BETWEEN 40 AND 44"), t,
+                    store=store)
+    assert v == 2  # landed after the winner, did not clobber it
+    assert rows(1) == want((0, 40))
+    assert rows(2) == want((0, 45))
+
+    rival(50, 55, batch_id=7)
+    v = snap.commit(spark, docs.where("doc_id BETWEEN 60 AND 64"), t,
+                    batch_id=7, store=store)
+    assert v == 3  # the winner already committed batch 7
+    assert snap.current_version(t, store) == 3
+    assert rows(3) == want((0, 45), (50, 55))
+
+    rival(70, 75)
+    with pytest.raises(snap.SnapshotConflictError, match="expected_parent=3"):
+        snap.commit(spark, docs.where("doc_id BETWEEN 80 AND 84"), t,
+                    expected_parent=3, store=store)
+    assert snap.current_version(t, store) == 4  # only the winner landed
+
+    rival(90, 95)
+    v = snap.delete_where(spark, t, "doc_id < 10", store=store)
+    assert v == 6  # rebased over the winning append at v5
+    assert rows(6) == want((10, 45), (50, 55), (70, 75), (90, 95))
 
 
 def test_schemed_paths_rejected(spark):
@@ -411,19 +490,19 @@ def test_optimize_rebases_over_concurrent_append(
     snap.commit(spark, docs.where(F.col("doc_id") < 30).repartition(16), t)
 
     late = docs.where((F.col("doc_id") >= 30) & (F.col("doc_id") < 40))
-    real_commit = snap.commit
+    real_publish = snap._publish
     state = {"injected": False}
 
-    def racing_commit(spark_, df, table_path, **kw):
+    def racing_publish(table_path, st, op, *args, **kw):
         # first publish attempt from optimize_table: sneak an append in
-        if not state["injected"] and kw.get("mode") == "replace":
+        if not state["injected"] and op == "replace":
             state["injected"] = True
-            real_commit(spark_, late, table_path, mode="append")
-        return real_commit(spark_, df, table_path, **kw)
+            snap.commit(spark, late, table_path, mode="append")
+        return real_publish(table_path, st, op, *args, **kw)
 
-    monkeypatch.setattr(snap, "commit", racing_commit)
+    monkeypatch.setattr(snap, "_publish", racing_publish)
     v = snap.optimize_table(spark, t, target_file_bytes=128 << 20)
-    monkeypatch.setattr(snap, "commit", real_commit)
+    monkeypatch.setattr(snap, "_publish", real_publish)
     # nothing vanished: compacted base + the interleaved append
     assert _rows(snap.read_snapshot(spark, t)) == _rows(
         docs.where(F.col("doc_id") < 40)
@@ -2947,9 +3026,9 @@ def test_rewrite_rebases_over_concurrent_append(spark, tmp_path):
     surv = snap.read_snapshot(spark, t, basis).where("k <> 0")
     d = os.path.join(t, snap._DATA_DIR, "c" + _uuid.uuid4().hex[:12])
     surv.write.parquet(d)
-    v = snap.commit(
-        spark, None, t, mode="overwrite", expected_parent=basis,
-        _op="delete", _dirs=[os.path.relpath(d, t)], _rebase=True,
+    v = snap._publish(
+        t, snap._POSIX, "delete", {os.path.relpath(d, t): ({}, None)}, [],
+        basis=basis, rebase=True,
     )
     got = snap.read_snapshot(spark, t)
     assert got.count() == 90  # 80 survivors + 10 appended
@@ -2962,9 +3041,9 @@ def test_rewrite_rebases_over_concurrent_append(spark, tmp_path):
     basis2 = v
     snap.delete_where(spark, t, "k = 1")
     with pytest.raises(snap.SnapshotConflictError, match="not rebaseable"):
-        snap.commit(
-            spark, None, t, mode="overwrite", expected_parent=basis2,
-            _op="delete", _dirs=[os.path.relpath(d, t)], _rebase=True,
+        snap._publish(
+            t, snap._POSIX, "delete", {os.path.relpath(d, t): ({}, None)},
+            [], basis=basis2, rebase=True,
         )
 
 
@@ -3708,10 +3787,10 @@ def test_timestamps_monotonic_across_rebase(spark, tmp_path):
     surv = snap.read_snapshot(spark, t, basis).where("k <> 0")
     d = os.path.join(t, snap._DATA_DIR, "c" + _uuid.uuid4().hex[:12])
     surv.write.parquet(d)
-    v = snap.commit(
-        spark, None, t, mode="overwrite", expected_parent=basis,
-        _op="delete", _dirs=[os.path.relpath(d, t)], _rebase=True,
-        _ts_us=2_000 * 1_000_000,  # injected BEHIND the append's stamp
+    v = snap._publish(
+        t, snap._POSIX, "delete", {os.path.relpath(d, t): ({}, None)}, [],
+        basis=basis, rebase=True,
+        ts_us=2_000 * 1_000_000,  # injected BEHIND the append's stamp
     )
     h = {e["version"]: e["ts_us"] for e in snap.history(t)}
     assert h[v] > h[v - 1] > h[v - 2]
@@ -4012,6 +4091,66 @@ def test_optimize_sizing_matches_metadata_aggregate(spark, tmp_path):
     )
     assert (n_files, total) == (old[0], old[1])
     assert n_files == 6
+
+
+def test_every_verb_publishes_its_manifest_shape(spark, tmp_path):
+    """One manifest per verb on a 4-directory table: its key set, op,
+    ``uniform`` marker and recorded schema, and stats only for
+    directories it references — the format every later field extends."""
+    t, dst = str(tmp_path / "tbl"), str(tmp_path / "clone")
+    base = spark.range(400).select(
+        F.col("id").alias("k"),
+        (F.col("id") * 7 % 1000).alias("cents"),
+        F.when(F.col("id") % 2 == 0, "a").otherwise("b").alias("tag"),
+    )
+    for i in range(4):
+        snap.commit(spark, base.where(F.col("k") % 4 == i), t,
+                    stats_cols=["k"])
+    snap.add_constraint(spark, t, "nonneg", "cents >= 0")
+    snap.merge_upsert(spark, base.where("k < 30"), t, keys=["k"])
+    snap.update_where(spark, t, "k < 10", {"cents": "cents + 5"})
+    snap.delete_where(spark, t, "k > 390")
+    snap.replace_where(
+        spark, base.where("k BETWEEN 100 AND 120"), t,
+        "k BETWEEN 100 AND 120",
+    )
+    snap.optimize_table(spark, t, target_file_bytes=1 << 30)
+    snap.optimize_table(spark, t, zorder_by=["k", "cents"], zorder_buckets=4)
+    snap.drop_constraint(spark, t, "nonneg")
+    snap.restore_table(spark, t, 3)
+    snap.commit(spark, base.where("k < 50"), t, mode="overwrite")
+    snap.clone_table(spark, t, dst, version=3)
+
+    core = {"version", "parent", "op", "dirs", "ts_us", "schema"}
+    stats, uniform, cons = {"stats"}, {"uniform"}, {"constraints"}
+    chg = {"change_dir", "change_schema"}
+    rewrite = core | stats | uniform | cons | chg
+    want = [
+        ("append", core | stats | uniform),
+        ("append", core | stats | uniform),
+        ("append", core | stats | uniform),
+        ("append", core | stats | uniform),
+        ("add_constraint", core | stats | uniform | cons),
+        ("merge", rewrite),
+        ("update", rewrite),
+        ("delete", rewrite),
+        ("replace_where", rewrite),
+        ("replace", core | stats | uniform | cons),
+        ("replace", core | stats | uniform | cons),
+        ("drop_constraint", core | stats | uniform),
+        ("restore", core | stats | {"restored_from"}),
+        ("overwrite", core | uniform),
+    ]
+    got = [snap._load_manifest(t, v, snap._POSIX) for v in range(len(want))]
+    got.append(snap._load_manifest(dst, 0, snap._POSIX))
+    want.append(("clone", core | stats | {"cloned_from", "clone_version"}))
+    assert snap.current_version(t) == len(want) - 2
+    for v, (m, (op, keys)) in enumerate(zip(got, want)):
+        assert m["op"] == op, v
+        assert set(m) == keys, (v, op, sorted(set(m) ^ keys))
+        assert m.get("uniform", False) is ("uniform" in keys), v
+        assert set(m.get("stats", {})) <= set(m["dirs"]), (v, op)
+        assert snap._stored_schema(m).fieldNames() == ["k", "cents", "tag"]
 
 
 def test_rewrite_verbs_job_budget(spark, tmp_path):
